@@ -22,16 +22,28 @@ the pair space with an equi-join on a bucket key:
 Cost shape: signatures/assignments are map-side Arrow-batched kernels
 (hyperplanes/centroids ride a broadcast — literal plane arrays in the plan
 were ~4s of analyzer/codegen cost at 32 planes); ONE hash shuffle groups
-each (table, bucket); a per-group kernel ranks members with the same
-dimension-ordered dot as the brute-force tier (a candidate-pair equi-join
-with per-pair interpreted JVM folds was ~15-25x slower at 4-plane bucket
-sizes); a final window merges local top-k lists. Probabilistic by
-construction -> rows-only in the correctness gate; recall floors pinned
-in tests/test_ann_recall.py.
+each (table, bucket) / cell; a per-group kernel ranks members with the
+same dimension-ordered dot as the brute-force tier (a candidate-pair
+equi-join with per-pair interpreted JVM folds was ~15-25x slower at
+4-plane bucket sizes); a final window merges local top-k lists.
+Probabilistic by construction -> rows-only in the correctness gate;
+recall floors pinned in tests/test_ann_recall.py.
+
+One implementation per tier, shared with the two-frame forms in
+llm/search.py: ONE banding emitter (:func:`_band`), ONE cell-assign
+emitter for IVF and IVF-PQ (:func:`_cells`), ONE ADC kernel
+(:func:`_adc_kernel`), one masked lexsort top-k tail under every
+kernel (``similarity._lexsort_topk``) and ONE global-pool +
+exact-rerank tail (:func:`_rerank_exact`). Emitters take a role: the
+self-join entry points here pass their one frame as "both" (each
+vector queries and indexes), the two-frame entry points union an
+"index"-role and a "query"-role frame — see the role rule above
+:data:`_COL_TYPES`.
 """
 
 from __future__ import annotations
 
+import math
 from collections.abc import Iterator
 from typing import NamedTuple
 
@@ -42,13 +54,22 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
-    IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
 from pyspark.sql.window import Window
+
+from etl_covid19_brasil_spark.llm import similarity as _sim
+from etl_covid19_brasil_spark.llm.similarity import (
+    _by_query_chunks,
+    _estimate_rows,
+    _lexsort_topk,
+    _normalize,
+    _ordered_dot,
+    _spread,
+)
 
 
 # Cap on the OUTPUT rows of one yielded fan-out batch. The banding /
@@ -78,98 +99,425 @@ def _planes(n_tables: int, n_planes: int, dim: int, seed: int = 42) -> np.ndarra
     return rng.standard_normal((n_tables, n_planes, dim))
 
 
-_BANDED_SCHEMA = StructType(
-    [
-        StructField("vid", LongType()),
-        StructField("vec", ArrayType(DoubleType())),
-        StructField("tbl", IntegerType()),
-        StructField("bucket", IntegerType()),
-        StructField("is_index", IntegerType()),  # 1 in the signature bucket
-        StructField("qs", IntegerType()),  # query-salt sub-group
-        StructField("qrole", IntegerType()),  # 0 = index replica, no querying
-    ]
-)
+# ---------------------------------------------------------------------------
+# Shared emitters, kernels and tails. Every ANN tier is one group meet: a
+# map-side EMITTER writes each vector into the groups it meets in, ONE
+# hash shuffle groups them, a per-group KERNEL ranks, a window merges.
+#
+# Role rule. An emitter takes a role: "both" (one frame whose every
+# vector is query and index — the self-join entry points lsh_topk,
+# ivf_topk, ivfpq_topk) or "index" / "query" (the two-frame entry points
+# in llm/search.py union an index-role frame with a query-role frame).
+# Query rows (qrole=1) land in the vector's own query salt; index rows
+# (is_index=1) land in every salt of their home group, since applyInPandas
+# groups are indivisible and hot groups split their QUERY side across
+# salts. With a vector payload the "both" role's home row does both jobs,
+# so only the other salts get index replicas (qrole=0); an index-role
+# frame, and any codes payload (codes cannot query), writes one index
+# row per salt. Either way each (query, index) pair meets exactly once
+# per group key, and every exchange carries the rows it always carried.
+# ---------------------------------------------------------------------------
+
+_COL_TYPES = {
+    "cell": "int",
+    "vid": "long",
+    "vec": "array<double>",
+    "codes": "array<int>",
+    "tbl": "int",
+    "bucket": "int",
+    "is_index": "int",
+    "qs": "int",
+    "qrole": "int",
+}
+_BAND_COLS = ("vid", "vec", "tbl", "bucket", "is_index", "qs", "qrole")
+_ADC_BAND_COLS = ("vid", "vec", "codes", "tbl", "bucket", "is_index", "qs", "qrole")
+_CELL_COLS = ("cell", "vid", "vec", "is_index", "qs", "qrole")
+_LOCAL_SCHEMA = "query_id long, neighbor_id long, cosine double"
+_SCORE_SCHEMA = "query_id long, neighbor_id long, score double"
+
+
+def _ddl(cols: tuple) -> str:
+    return ", ".join(f"{c} {_COL_TYPES[c]}" for c in cols)
+
+
+def _plane_count(n: int) -> int:
+    """Planes per LSH table holding the EXPECTED bucket size at
+    ~:data:`_TARGET_BUCKET_ROWS` as the corpus grows:
+    ``max(4, ceil(log2(n / 256)))`` (rationale in :func:`lsh_topk`)."""
+    return max(4, math.ceil(math.log2(max(2, n / _TARGET_BUCKET_ROWS))))
+
+
+def _query_salts(query_rows: int, groups: int = 1) -> int:
+    """Query salts holding each kernel group's expected query side near
+    :data:`_TARGET_CELL_QUERY_ROWS` when ``query_rows`` spread over
+    ``groups``: ``ceil(query_rows / (groups x target))``, floor 1."""
+    return max(1, -(-query_rows // max(1, groups * _TARGET_CELL_QUERY_ROWS)))
+
+
+def _index_salts(doubled: bool, own: np.ndarray, s_n: int) -> np.ndarray:
+    """(n, salts) query salts of each vector's index rows: the OTHER
+    salts when its home row already indexes its own (``doubled``),
+    every salt otherwise."""
+    if doubled:
+        return (own[:, None] + np.arange(1, s_n, dtype=np.int32)[None, :]) % s_n
+    return np.broadcast_to(np.arange(s_n, dtype=np.int32), (len(own), s_n))
+
+
+def _pq_codes(x: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """argmin-L2 byte code of every row of ``x`` in each subspace book."""
+    mm, _, sub = books.shape
+    codes = np.empty((len(x), mm), dtype=np.int32)
+    for j in range(mm):
+        xs = x[:, j * sub : (j + 1) * sub]
+        d2 = ((xs[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
+        codes[:, j] = np.argmin(d2, axis=1)
+    return codes
+
+
+def _payload(mat: np.ndarray, reps: int, codes: "np.ndarray | None") -> dict:
+    """``vec`` and ``codes`` columns of ``mat``'s rows, each repeated
+    ``reps`` times: the vector (null codes), or — given ``codes`` —
+    the codes (null vector). Vectors ride as a list of ndarrays: Arrow
+    consumes each directly, where Python float lists boxed n*t*d values
+    and dominated the banding stage."""
+    nulls = [None] * (len(mat) * reps)
+    if codes is None:
+        return {"vec": list(np.repeat(mat, reps, axis=0)), "codes": nulls}
+    return {"vec": nulls, "codes": list(np.repeat(codes, reps, axis=0))}
+
+
+def _cat(parts: list):
+    """Concatenate one column's per-block pieces (arrays or lists)."""
+    if len(parts) == 1:
+        return parts[0]
+    if isinstance(parts[0], np.ndarray):
+        return np.concatenate(parts)
+    return [v for p in parts for v in p]
+
+
+def _band(
+    role: str,
+    bc_planes,
+    s_n: int,
+    n_flips: int,
+    id_col: str,
+    vec_col: str,
+    bc_books=None,
+):
+    """The LSH banding emitter (:data:`_BAND_COLS` layout). Per (vector,
+    table), a querying role writes the signature bucket plus the
+    ``n_flips`` least-confident d=1 flips (smallest |projection| — the
+    classic multi-probe refinement; capping the fan at 4 keeps banding
+    fan-out independent of the auto-scaled plane count, and at P=4 it
+    IS the exhaustive d=1 fan) in the vector's own salt ``id % s_n``;
+    an index role writes the signature bucket into its index salts.
+
+    Payload: the raw float64 vector (the bucket kernel normalizes), or
+    with ``bc_books`` the ADC layout (:data:`_ADC_BAND_COLS`, index or
+    query role only): vectors are normalized first (books train on unit
+    vectors; sign buckets are scale-invariant) and index rows ship PQ
+    codes instead of vectors."""
+    doubled = role == "both"
+    fan = 0 if role == "index" else 1 + n_flips
+    rows = fan + (0 if role == "query" else s_n - doubled)
+    # per-slot flags, identical for every (vector, table)
+    is_index = (np.arange(rows) >= fan).astype(np.int32)
+    is_index[0] |= doubled  # the "both" signature row also indexes
+    qrole = (np.arange(rows) < fan).astype(np.int32)
+    cols = _BAND_COLS if bc_books is None else _ADC_BAND_COLS
+
+    def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pl = bc_planes.value  # (T, P, D)
+        t_n, p_n = pl.shape[0], pl.shape[1]
+        weights = (1 << np.arange(p_n)).astype(np.int64)
+        for pdf in (s for w in batches for s in _fanout_slices(w, t_n * rows)):
+            ids = pdf[id_col].to_numpy(dtype=np.int64)
+            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            if bc_books is not None:
+                mat = _normalize(mat)
+            proj = (mat @ pl.reshape(t_n * p_n, -1).T).reshape(len(ids), t_n, p_n)
+            sig = ((proj > 0) * weights).sum(axis=2).astype(np.int32)[:, :, None]
+            own = (ids % s_n).astype(np.int32)
+            # (n, T, rows) buckets and (n, rows) salts: query slots, then
+            # index slots
+            buckets = [sig.repeat(rows - fan, axis=2)]
+            salts = [_index_salts(doubled, own, s_n)[:, : rows - fan]]
+            if fan:
+                least = np.argsort(np.abs(proj), axis=2)[:, :, :n_flips]
+                flips = sig ^ (1 << least).astype(np.int32)
+                buckets.insert(0, np.concatenate([sig, flips], axis=2))
+                salts.insert(0, np.repeat(own[:, None], fan, axis=1))
+            codes = None
+            if bc_books is not None and role == "index":
+                codes = _pq_codes(mat, bc_books.value)
+            out = {
+                "vid": np.repeat(ids, t_n * rows),
+                **_payload(mat, t_n * rows, codes),
+                "tbl": np.tile(np.repeat(np.arange(t_n, dtype=np.int32), rows), len(ids)),
+                "bucket": np.concatenate(buckets, axis=2).reshape(-1),
+                "is_index": np.tile(is_index, len(ids) * t_n),
+                "qs": np.repeat(
+                    np.concatenate(salts, axis=1)[:, None, :], t_n, axis=1
+                ).reshape(-1),
+                "qrole": np.tile(qrole, len(ids) * t_n),
+            }
+            yield pd.DataFrame({c: out[c] for c in cols})
+
+    return emit, _ddl(cols)
+
+
+def _cells(
+    role: str,
+    bc_cents,
+    n_probe: int,
+    s_n: int,
+    id_col: str,
+    vec_col: str,
+    cols: tuple = _CELL_COLS,
+    bc_books=None,
+    residual: bool = False,
+    id_shift: int = 0,
+):
+    """The IVF / IVF-PQ cell-assign emitter (``cols`` picks the output
+    columns and their order). A querying role writes one row per probed
+    cell — the ``n_probe`` nearest centroids — in the vector's own salt
+    ``(id >> id_shift) % s_n`` (``id_shift`` unpacks label-packed ids,
+    so skewed labels cannot collapse the salts); an index role writes
+    the vector's HOME cell into its index salts. Home is the first
+    probe when the role probes anyway, the argmax otherwise. Vectors
+    are L2-normalized (cells score cosine).
+
+    Payload: the vector, or with ``bc_books`` PQ codes — of the vector,
+    or (``residual``) of its residual to the home centroid — on index
+    rows and null codes on query rows. Block order per yield: a vector
+    payload appends the index replicas after the query rows; a codes
+    payload writes the index rows first."""
+    doubled = role == "both" and bc_books is None
+    q_out = 0 if role == "index" else n_probe
+    i_out = 0 if role == "query" else s_n - doubled
+
+    def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        cents = bc_cents.value
+        for pdf in (s for w in batches for s in _fanout_slices(w, q_out + i_out)):
+            ids = pdf[id_col].to_numpy(dtype=np.int64)
+            n = len(ids)
+            mat = _normalize(np.stack(pdf[vec_col].to_numpy()))
+            own = ((ids >> id_shift) % s_n).astype(np.int32)
+            blocks = []
+            if q_out:
+                cells = _sliced_cell_rows(
+                    lambda s: np.argsort(-s, axis=1)[:, :n_probe], mat, cents
+                ).astype(np.int32)  # (n, n_probe)
+                home = cells[:, 0]
+                blocks.append(
+                    {
+                        "cell": cells.reshape(-1),
+                        "vid": np.repeat(ids, n_probe),
+                        **_payload(mat, n_probe, None),
+                        "is_index": np.tile(
+                            (np.arange(n_probe) == 0) & doubled, n
+                        ).astype(np.int32),
+                        "qs": np.repeat(own, n_probe),
+                        "qrole": np.ones(n * n_probe, dtype=np.int32),
+                    }
+                )
+            else:
+                home = _sliced_cell_rows(
+                    lambda s: np.argmax(s, axis=1), mat, cents
+                ).astype(np.int32)
+            if i_out:
+                codes = None
+                if bc_books is not None:
+                    x = mat - cents[home] if residual else mat
+                    codes = _pq_codes(x, bc_books.value)
+                index_rows = {
+                    "cell": np.repeat(home, i_out),
+                    "vid": np.repeat(ids, i_out),
+                    **_payload(mat, i_out, codes),
+                    "is_index": np.ones(n * i_out, dtype=np.int32),
+                    "qs": _index_salts(doubled, own, s_n).reshape(-1),
+                    "qrole": np.zeros(n * i_out, dtype=np.int32),
+                }
+                blocks = blocks + [index_rows] if doubled else [index_rows] + blocks
+            yield pd.DataFrame({c: _cat([b[c] for b in blocks]) for c in cols})
+
+    return emit, _ddl(cols)
+
+
+def _emit(frame: DataFrame, emitter, id_col: str, vec_col: str) -> DataFrame:
+    """Run an ``(emit, schema)`` emitter over ``frame``'s (id, vector)
+    rows. The map input is _spread: an emitter inherits the source
+    partitioning, and a cached or few-file corpus would otherwise
+    serialize the whole assign + fan-out into 1-2 tasks (r16 — observed
+    live: one Python worker CPU-pinned for minutes while 31 cores
+    idled)."""
+    emit, schema = emitter
+    return _spread(frame.select(id_col, vec_col)).mapInPandas(emit, schema=schema)
+
+
+def _empty_local(score: str = "cosine", label: bool = False) -> pd.DataFrame:
+    cols = {"query_id": "int64", "neighbor_id": "int64", score: "float64"}
+    if label:
+        cols["neighbor_label"] = "int32"
+    return pd.DataFrame({c: [] for c in cols}).astype(cols)
+
+
+def _meet(pdf: pd.DataFrame, queries, payload: str, block, empty, *args):
+    """Run ``block`` over one kernel group: the query rows (mask
+    ``queries``) against its index rows (``is_index=1``, ``payload``
+    column), query-chunked so the (|Q|, |I|) score allocation stays
+    under SIMS_BUDGET_BYTES. Group membership is expected-constant but
+    unbounded on degenerate data (identical signatures funnel into one
+    bucket — the r9 64x-probe OOM class); chunking is bit-identical
+    because per-query top-k is row-independent."""
+    idx, qry = pdf[pdf["is_index"] == 1], pdf[queries]
+    if idx.empty or qry.empty:
+        return empty
+    return _by_query_chunks(
+        block,
+        qry["vid"].to_numpy(dtype=np.int64),
+        np.stack(qry["vec"].to_numpy()),
+        idx["vid"].to_numpy(dtype=np.int64),
+        np.stack(idx[payload].to_numpy()),
+        *args,
+    )
 
 
 def _bucket_topk_kernel(k: int):
-    """Per-bucket kernel: rows with ``is_index=1`` are candidates; rows
-    with ``qrole=1`` query (index replicas fanned to other query salts
-    carry ``qrole=0`` so each vector queries exactly once per (tbl,
-    bucket)). Emit each query's local top-k over the bucket's
-    candidates. Dots use the dimension-ordered accumulation so a pair
-    colliding in several buckets yields the SAME double everywhere
-    (BLAS matmul may vary summation order with matrix shape) — required
-    for the downstream dedup + global ranking to be deterministic.
+    """LSH bucket kernel: each querying row's local top-k over the
+    bucket's index rows. Dots use the dimension-ordered accumulation so
+    a pair colliding in several buckets yields the SAME double
+    everywhere (BLAS matmul may vary summation order with matrix shape)
+    — required for the downstream dedup + global ranking to be
+    deterministic."""
 
-    The block body runs under _by_query_chunks: bucket membership is
-    EXPECTED-constant (auto-scaled planes + query salting) but not
-    bounded — a degenerate corpus (many identical sign signatures)
-    funnels into one bucket, and the (|Q|, |I|) sims allocation would
-    then OOM the worker exactly like the unsliced similarity kernels
-    did in the r9 64x probe. Chunking query rows is bit-identical:
-    per-query top-k is row-independent."""
-    from etl_covid19_brasil_spark.llm.similarity import (
-        _by_query_chunks,
-        _normalize,
-        _ordered_dot,
-    )
-
-    empty = pd.DataFrame({"query_id": [], "neighbor_id": [], "cosine": []}).astype(
-        {"query_id": "int64", "neighbor_id": "int64", "cosine": "float64"}
-    )
+    def block(q_ids, q_mat, i_ids, i_mat) -> pd.DataFrame:
+        sims = _ordered_dot(_normalize(q_mat)[:, None, :], _normalize(i_mat)[None, :, :])
+        return _lexsort_topk(q_ids, i_ids, sims, k)
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        idx_mask = pdf["is_index"].to_numpy() == 1
-        q_mask = pdf["qrole"].to_numpy() == 1
-        if not idx_mask.any() or not q_mask.any():
-            return empty
-        all_ids = pdf["vid"].to_numpy(dtype=np.int64)
-        all_mat = _normalize(np.stack(pdf["vec"].to_numpy()))
-        return _by_query_chunks(
-            _block, all_ids[q_mask], all_mat[q_mask], all_ids[idx_mask], all_mat[idx_mask]
-        )
+        return _meet(pdf, pdf["qrole"] == 1, "vec", block, _empty_local())
 
-    def _block(q_ids, q_mat, i_ids, i_mat) -> pd.DataFrame:
-        sims = _ordered_dot(q_mat[:, None, :], i_mat[None, :, :])
-        # a vid appears at most once per (tbl, bucket) in each role, so
-        # "not self" is the id match; -inf sorts it past every real
-        # candidate and any -inf leaking into a short row's top-k is
-        # dropped after the gather. One 2D lexsort ((cosine desc, id
-        # asc), rows independent) replaces the per-row Python loop.
-        sims[q_ids[:, None] == i_ids[None, :]] = -np.inf
-        kk = min(k, len(i_ids))
-        if kk <= 0:
-            return empty
-        order = np.lexsort((np.broadcast_to(i_ids, sims.shape), -sims), axis=-1)[:, :kk]
-        got = np.take_along_axis(sims, order, axis=1).reshape(-1)
-        keep = got > -np.inf
-        return pd.DataFrame(
-            {
-                "query_id": np.repeat(q_ids, kk)[keep],
-                "neighbor_id": i_ids[order].reshape(-1)[keep],
-                "cosine": got[keep],
-            }
-        )
+    return kernel
+
+
+def _cell_topk_kernel(k: int, packed_labels: bool = False):
+    """IVF cell kernel: exact cosine of pre-normalized vectors as one
+    matmul, local top-k per query; ``packed_labels`` masks same-label
+    neighbors (see :func:`~.similarity._lexsort_topk`)."""
+
+    def block(q_ids, q_mat, i_ids, i_mat) -> pd.DataFrame:
+        sims = q_mat @ i_mat.T  # pre-normalized -> cosine
+        return _lexsort_topk(q_ids, i_ids, sims, k, packed_labels=packed_labels)
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        empty = _empty_local(label=packed_labels)
+        return _meet(pdf, pdf["qrole"] == 1, "vec", block, empty)
+
+    return kernel
+
+
+def _adc_kernel(bc_books, depth: int, bc_cents=None):
+    """The ADC group kernel (IVF-PQ cells, ADC-banded LSH buckets):
+    index rows carry PQ codes, query rows (``is_index=0``) vectors;
+    each query keeps its ``depth`` best :func:`_adc_scores`. With
+    ``bc_cents`` (residual codes, grouped by ``cell``) the LUT gather
+    yields dot(q, x) - dot(q, centroid); the dropped term is constant
+    per (query, cell) but NOT across cells, and the global rerank pool
+    ranks across cells, so it is restored — one ordered fold per query,
+    deterministic at any chunking — and scores are dot(q,
+    PQ-reconstruction) in every layout."""
+
+    def block(q_ids, q_mat, i_ids, i_codes, cent) -> pd.DataFrame:
+        scores = _adc_scores(q_mat, i_codes, bc_books.value)
+        if cent is not None:
+            scores = scores + _ordered_dot(q_mat, cent[None, :])[:, None]
+        return _lexsort_topk(q_ids, i_ids, scores, depth, score="score")
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        cent = None if bc_cents is None else bc_cents.value[int(pdf["cell"].iloc[0])]
+        empty = _empty_local("score")
+        return _meet(pdf, pdf["is_index"] == 0, "codes", block, empty, cent)
 
     return kernel
 
 
 def _global_topk(local: DataFrame, k: int, dedup: bool = True) -> DataFrame:
-    """Merge per-bucket local top-k lists into the global per-query
+    """Merge per-group local top-k lists into the global per-query
     top-k.
 
     ``dedup=False`` (r16 optimization round): the IVF tiers deliver
     each (query, neighbor) pair AT MOST ONCE by construction — an
-    index row lives in exactly ONE home cell (argmax assignment) and a
-    query's probe cells are distinct, so no pair can meet twice — and
-    their dropDuplicates was a full extra exchange spent deduplicating
-    already-unique rows (guide §2.4: "a distinct on data that is
-    already unique"). The LSH tiers keep the dedup: a pair collides in
-    up to T tables x fan probes."""
+    index row lives in exactly ONE home cell and a query's probe cells
+    are distinct, so no pair can meet twice — and their dropDuplicates
+    was a full extra exchange spent deduplicating already-unique rows
+    (guide §2.4: "a distinct on data that is already unique"). The LSH
+    tiers keep the dedup: a pair collides in up to T tables x fan
+    probes."""
     if dedup:
         local = local.dropDuplicates(["query_id", "neighbor_id"])
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
     return local.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _rerank_exact(
+    local: DataFrame,
+    queries: DataFrame,
+    index: DataFrame,
+    k: int,
+    pool_rows: int,
+    id_col: str,
+    vec_col: str,
+    dedup: bool = False,
+) -> DataFrame:
+    """The global-pool + exact-rerank tail of every ADC tier: keep each
+    query's best ``pool_rows`` ADC candidates ACROSS its groups before
+    touching any exact vector — the faiss global-heap step, a
+    row_number filter Spark 4 rewrites to a partial WindowGroupLimit,
+    so the pool's shuffle carries skinny (query_id, neighbor_id, score)
+    triples — then join only the survivors back to their exact vectors
+    (two hash joins) for the exact-cosine final top-k.
+
+    ``dedup``: on the banded tier a pair colliding in several tables
+    carries the SAME ADC score (one code row per vector); duplicates
+    are dropped before the pool so they don't crowd out distinct
+    candidates. One repartition on query_id serves both the dedup
+    aggregate (a subset partitioning colocates every (query, neighbor)
+    group) and the pool window, so both run partition-local above a
+    SINGLE exchange (r17; guide §2.4). Per-query pool input is bounded,
+    so the query-keyed exchange cannot skew. Cell tiers meet each pair
+    in exactly one cell and need no dedup."""
+    if dedup:
+        local = local.repartition("query_id").dropDuplicates(["query_id", "neighbor_id"])
+    pool_w = Window.partitionBy("query_id").orderBy(
+        F.col("score").desc(), F.col("neighbor_id").asc()
+    )
+    cand = (
+        local.withColumn("__pr", F.row_number().over(pool_w))
+        .filter(F.col("__pr") <= pool_rows)
+        .select("query_id", "neighbor_id")
+    )
+
+    @F.pandas_udf("double")
+    def _exact_cos(a: pd.Series, b: pd.Series) -> pd.Series:
+        if a.empty:
+            return pd.Series([], dtype="float64")
+        am = _normalize(np.stack(a.to_numpy()))
+        bm = _normalize(np.stack(b.to_numpy()))
+        return pd.Series(_ordered_dot(am, bm))
+
+    nbr = index.select(F.col(id_col).alias("__nid"), F.col(vec_col).alias("__nvec"))
+    qry = queries.select(F.col(id_col).alias("__qid"), F.col(vec_col).alias("__qvec"))
+    exact = (
+        cand.join(nbr, cand["neighbor_id"] == nbr["__nid"])
+        .join(qry, cand["query_id"] == qry["__qid"])
+        .select(
+            "query_id",
+            "neighbor_id",
+            _exact_cos("__qvec", "__nvec").alias("cosine"),
+        )
+    )
+    return _global_topk(exact, k, dedup=False)
 
 
 # Target expected bucket membership when auto-sizing the plane count:
@@ -308,8 +656,6 @@ def _sample_top_pairs(unit: np.ndarray, k: int = 5):
     tables/probes: compute, never recall."""
     n = len(unit)
     k = min(k, n - 1)
-    from etl_covid19_brasil_spark.llm import similarity as _sim
-    from etl_covid19_brasil_spark.llm.similarity import _ordered_dot
 
     rows_per = max(1, _sim.SIMS_BUDGET_BYTES // (8 * n))
     tops = []
@@ -351,7 +697,7 @@ def derive_n_tables(
     adds ZERO Spark jobs): take each sampled vector's top-5 in-sample
     cosine neighbors, replay the ACTUAL banding semantics per candidate
     table (sign signature + the d=1 multi-probe flips of the
-    ``min(P, 4)`` least-confident bits, exactly ``sign_kernel``'s fan)
+    ``min(P, 4)`` least-confident bits, exactly :func:`_band`'s fan)
     against the ACTUAL plane tensor (``_planes`` is prefix-stable:
     table t of a T-table generation equals table t of any longer one,
     verified by test), and return the smallest count in
@@ -372,7 +718,6 @@ def derive_n_tables(
         cap = auto_n_tables(n_planes)
     if cap <= _TABLE_FLOOR or sample_mat is None or len(sample_mat) < 8:
         return TableRoute(max(cap, _TABLE_FLOOR), float("nan"), cap)
-    from etl_covid19_brasil_spark.llm.similarity import _normalize
 
     n = len(sample_mat)
     unit = _normalize(sample_mat.astype(np.float64))
@@ -506,12 +851,7 @@ def lsh_topk(
     brute-force similarity_topk so callers can swap tiers.
     """
     if n_planes is None:
-        import math
-
-        from etl_covid19_brasil_spark.llm.similarity import _estimate_rows
-
-        n_est = _estimate_rows(embeddings)
-        n_planes = max(4, math.ceil(math.log2(max(2, n_est / _TARGET_BUCKET_ROWS))))
+        n_planes = _plane_count(_estimate_rows(embeddings))
     derive_tables = n_tables is None
     if n_tables is None:
         n_tables = auto_n_tables(n_planes)
@@ -538,82 +878,12 @@ def lsh_topk(
         planes = _drop_collapsed_tables(
             embeddings, planes, id_col, vec_col, sample_mat
         )
-    spark = embeddings.sparkSession
-    bc = spark.sparkContext.broadcast(planes)
-
-    def sign_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pl = bc.value  # (T, P, D)
-        t_n, p_n = pl.shape[0], pl.shape[1]
-        flat = pl.reshape(t_n * p_n, -1)
-        weights = (1 << np.arange(p_n)).astype(np.int64)
-        # Probe the LEAST-CONFIDENT bits only (smallest |projection| —
-        # the classic multi-probe refinement): capping the probe fan at
-        # 4 keeps banding fan-out and kernel work independent of the
-        # auto-scaled plane count (probing all P flips reintroduces a
-        # (1+P) ~ log(n) factor the 8x scale probe measured); at the
-        # default small-corpus P=4 this IS the exhaustive d=1 fan.
-        n_flips = min(p_n, 4) if multi_probe else 0
-        fan = 1 + n_flips  # querying roles per (vector, table)
-        s_n = max(1, q_salts)
-        rows = fan + (s_n - 1)  # + non-querying index replicas
-        sliced = (
-            sub for whole in batches for sub in _fanout_slices(whole, t_n * rows)
-        )
-        for pdf in sliced:
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            proj = (mat @ flat.T).reshape(len(ids), t_n, p_n)
-            bits = proj > 0
-            buckets = (bits * weights).sum(axis=2).astype(np.int32)  # (n, T)
-            # (n, T, fan): signature bucket first, then 1-bit flips
-            probes = buckets[:, :, None]
-            if n_flips:
-                least = np.argsort(np.abs(proj), axis=2)[:, :, :n_flips]
-                flips = buckets[:, :, None] ^ (1 << least).astype(np.int32)
-                probes = np.concatenate([probes, flips], axis=2)
-            own_salt = (ids % s_n).astype(np.int32)  # (n,)
-            # layout per (vector, table): [sig, probe*n_flips,
-            # index-replica*(s_n-1)]; replicas land in the OTHER salts
-            # of the signature bucket with qrole=0
-            other = np.arange(1, s_n, dtype=np.int32)  # offsets 1..s-1
-            salts = np.concatenate(
-                [
-                    np.repeat(own_salt[:, None], fan, axis=1),
-                    (own_salt[:, None] + other[None, :]) % s_n,
-                ],
-                axis=1,
-            )  # (n, rows)
-            repl_bucket = np.repeat(buckets[:, :, None], s_n - 1, axis=2)
-            all_buckets = np.concatenate([probes, repl_bucket], axis=2)  # (n,T,rows)
-            is_index = np.zeros((len(ids), t_n, rows), dtype=np.int32)
-            is_index[:, :, 0] = 1
-            is_index[:, :, fan:] = 1
-            qrole = np.zeros((len(ids), t_n, rows), dtype=np.int32)
-            qrole[:, :, :fan] = 1
-            yield pd.DataFrame(
-                {
-                    "vid": np.repeat(ids, t_n * rows),
-                    # list-of-ndarray: Arrow consumes each row's ndarray
-                    # directly; exploding to Python float lists boxed
-                    # n*t*d values and dominated this stage.
-                    "vec": list(np.repeat(mat, t_n * rows, axis=0)),
-                    "tbl": np.tile(
-                        np.repeat(np.arange(t_n, dtype=np.int32), rows), len(ids)
-                    ),
-                    "bucket": all_buckets.reshape(-1),
-                    "is_index": is_index.reshape(-1),
-                    "qs": np.repeat(salts[:, None, :], t_n, axis=1).reshape(-1),
-                    "qrole": qrole.reshape(-1),
-                }
-            )
-
-    from etl_covid19_brasil_spark.llm.similarity import _spread
-
-    banded = _spread(embeddings.select(id_col, vec_col)).mapInPandas(
-        sign_kernel, schema=_BANDED_SCHEMA
-    )
+    bc = embeddings.sparkSession.sparkContext.broadcast(planes)
+    n_flips = min(n_planes, 4) if multi_probe else 0
+    emitter = _band("both", bc, max(1, q_salts), n_flips, id_col, vec_col)
+    banded = _emit(embeddings, emitter, id_col, vec_col)
     local = banded.groupBy("tbl", "bucket", "qs").applyInPandas(
-        _bucket_topk_kernel(k), schema="query_id long, neighbor_id long, cosine double"
+        _bucket_topk_kernel(k), schema=_LOCAL_SCHEMA
     )
     return _global_topk(local, k)
 
@@ -644,8 +914,6 @@ def _sliced_cell_rows(op, mat, cents):
     sees exactly the rows it would have seen unsliced, and each call
     site passes its original reduction (argsort vs argmax tie-breaking
     is preserved per site)."""
-    from etl_covid19_brasil_spark.llm import similarity as _sim
-    from etl_covid19_brasil_spark.llm.similarity import _ordered_dot
 
     rows_per = max(1, _sim.SIMS_BUDGET_BYTES // (8 * max(1, len(cents))))
     outs = [
@@ -672,8 +940,6 @@ def auto_n_cells(n_est: int) -> int:
     guidance); on cluster-free random data recall necessarily decays
     with n, and n_probe is the caller's recall-for-compute knob.
     """
-    import math
-
     return max(16, math.ceil(n_est / _TARGET_CELL_ROWS))
 
 
@@ -709,8 +975,6 @@ def auto_n_probe(n_cells: int) -> int:
     (with a logged cost warning) only on flat occupancy, keeping fixed
     probes — linear total work — on clustered corpora.
     """
-    import math
-
     return max(_PROBE_NUM, math.ceil(n_cells * _PROBE_NUM / _PROBE_DEN))
 
 
@@ -784,8 +1048,6 @@ def _rank_derived_probes(
     rank WORSE and the derived count errs toward more probes — linear
     extra exact-kernel work, never recall.
     """
-    from etl_covid19_brasil_spark.llm import similarity as _sim
-    from etl_covid19_brasil_spark.llm.similarity import _ordered_dot
 
     pair_i, pair_j = _sample_top_pairs(unit)
     if len(pair_i) == 0:
@@ -890,7 +1152,6 @@ def pick_probe_strategy(
     if auto <= fixed and not force_sample:
         # regimes coincide at the <=16-cell floor: ZERO extra jobs
         return ProbeRoute("fraction", auto, float("nan"), float("nan"))
-    from etl_covid19_brasil_spark.llm.similarity import _normalize
 
     pdf = (
         embeddings.select(id_col, vec_col)
@@ -1031,15 +1292,6 @@ def ivf_topk(
     the regimes diverge (zero extra jobs at the <=16-cell gate/bench
     floor); pass ``n_probe`` explicitly for a pure-lazy builder.
     """
-    from etl_covid19_brasil_spark.llm.similarity import (
-        _by_query_chunks,
-        _estimate_rows,
-        _normalize,
-        _ordered_dot,
-        _spread,
-    )
-
-    spark = embeddings.sparkSession
     if label_col is not None:
         # pack label into the id's low byte (preserves vec_id ordering
         # for tie-breaks; labels are small ints by contract)
@@ -1067,145 +1319,21 @@ def ivf_topk(
     if q_salts is None:
         # expected query rows per cell ~ n_probe x the held cell size —
         # independent of n by construction; see _TARGET_CELL_QUERY_ROWS
-        q_salts = max(
-            1, -(-n_probe * _TARGET_CELL_ROWS // _TARGET_CELL_QUERY_ROWS)
-        )
-    s_n = max(1, q_salts)
-    bc = spark.sparkContext.broadcast(cent_mat)
-
-    assign_schema = StructType(
-        [
-            StructField("cell", IntegerType()),
-            StructField("vid", LongType()),
-            StructField("vec", ArrayType(DoubleType())),
-            StructField("is_index", IntegerType()),  # 1 only in the nearest cell
-            StructField("qs", IntegerType()),  # query-salt sub-group
-            StructField("qrole", IntegerType()),  # 0 = index replica only
-        ]
-    )
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cents = bc.value
-        # row-sliced yields: each input row fans out to n_probe query
-        # rows + (s_n - 1) index replicas, all vector-carrying (see
-        # _FANOUT_OUT_ROWS)
-        sliced = (
-            sub
-            for whole in batches
-            for sub in _fanout_slices(whole, n_probe + s_n - 1)
-        )
-        for pdf in sliced:
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = _normalize(np.stack(pdf[vec_col].to_numpy()))
-            cells = _sliced_cell_rows(
-                lambda s: np.argsort(-s, axis=1)[:, :n_probe], mat, cents
-            )  # (n, n_probe)
-            # salt from the UNPACKED vector id: with label_col the ids
-            # are vec_id*256+label, and any s_n dividing 256 (2 or 4 —
-            # exactly the derived counts at n_probe~20-60) collapses
-            # ids % s_n to label % s_n, so skewed/constant labels put
-            # every query in one salt and silently defeat the
-            # direct-memory guard while still paying the replica cost
-            # (ADVICE r13). Result-invariant: the salt only partitions
-            # query rows across sub-groups.
-            raw_ids = (ids >> 8) if label_col is not None else ids
-            own = (raw_ids % s_n).astype(np.int32)
-            out = {
-                "cell": cells.reshape(-1).astype(np.int32),
-                "vid": np.repeat(ids, n_probe),
-                "vec": list(np.repeat(mat, n_probe, axis=0)),
-                "is_index": np.tile(
-                    (np.arange(n_probe) == 0).astype(np.int32), len(ids)
-                ),
-                "qs": np.repeat(own, n_probe),
-                "qrole": np.ones(len(ids) * n_probe, dtype=np.int32),
-            }
-            if s_n > 1:
-                # index replicas into the OTHER salts of the home cell,
-                # flagged qrole=0 so they never re-query
-                other = np.arange(1, s_n, dtype=np.int32)
-                out = {
-                    "cell": np.concatenate(
-                        [out["cell"], np.repeat(cells[:, 0], s_n - 1).astype(np.int32)]
-                    ),
-                    "vid": np.concatenate([out["vid"], np.repeat(ids, s_n - 1)]),
-                    "vec": out["vec"] + list(np.repeat(mat, s_n - 1, axis=0)),
-                    "is_index": np.concatenate(
-                        [out["is_index"], np.ones(len(ids) * (s_n - 1), dtype=np.int32)]
-                    ),
-                    "qs": np.concatenate(
-                        [out["qs"], ((own[:, None] + other[None, :]) % s_n).reshape(-1)]
-                    ),
-                    "qrole": np.concatenate(
-                        [out["qrole"], np.zeros(len(ids) * (s_n - 1), dtype=np.int32)]
-                    ),
-                }
-            yield pd.DataFrame(out)
-
-    # _spread the map input: the assign kernel inherits the source
-    # partitioning, and a cached/few-file corpus otherwise serializes
-    # the whole assign + fan-out into 1-2 tasks (r16 — observed live:
-    # the 32x two-frame probe's one Python worker CPU-pinned for
-    # minutes; the exact and LSH tiers already carry _spread)
-    assigned = _spread(embeddings.select(id_col, vec_col)).mapInPandas(
-        assign, schema=assign_schema
-    )
-
-    empty_cols = {"query_id": "int64", "neighbor_id": "int64", "cosine": "float64"}
-    if label_col is not None:
-        empty_cols["neighbor_label"] = "int32"
-
-    def cell_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        # query-chunked: cell membership is expected-constant (corpus-
-        # derived cell count) but unbounded on degenerate data — the
-        # (|Q|, |I|) sims allocation must stay under SIMS_BUDGET_BYTES
-        # (the r9 64x-probe OOM class); per-query top-k is
-        # row-independent so slicing is bit-identical.
-        idx = pdf[pdf["is_index"] == 1]
-        qry = pdf[pdf["qrole"] == 1]
-        if idx.empty or qry.empty:
-            return pd.DataFrame({c: [] for c in empty_cols}).astype(empty_cols)
-        return _by_query_chunks(
-            _cell_block,
-            qry["vid"].to_numpy(dtype=np.int64),
-            np.stack(qry["vec"].to_numpy()),
-            idx["vid"].to_numpy(dtype=np.int64),
-            np.stack(idx["vec"].to_numpy()),
-        )
-
-    def _cell_block(q_ids, q_mat, i_ids, i_mat) -> pd.DataFrame:
-        sims = q_mat @ i_mat.T  # pre-normalized -> cosine
-        # self-pairs -> -inf so they sort last; rows keep their top
-        # min(k, |cell|) and any -inf that leaked into a short row is
-        # dropped after the gather. One 2D lexsort replaces the per-row
-        # Python loop. With packed labels the mask widens from self to
-        # the whole same-label slice (which subsumes self).
-        if label_col is not None:
-            sims[(q_ids & 255)[:, None] == (i_ids & 255)[None, :]] = -np.inf
-        else:
-            sims[q_ids[:, None] == i_ids[None, :]] = -np.inf
-        kk = min(k, len(i_ids))
-        order = np.lexsort(
-            (np.broadcast_to(i_ids, sims.shape), -sims), axis=-1
-        )[:, :kk]
-        got = np.take_along_axis(sims, order, axis=1).reshape(-1)
-        keep = got > -np.inf
-        picked = i_ids[order].reshape(-1)[keep]
-        out = {
-            "query_id": np.repeat(q_ids, kk)[keep],
-            "neighbor_id": picked,
-            "cosine": got[keep],
-        }
-        if label_col is not None:
-            out["query_id"] = out["query_id"] >> 8
-            out["neighbor_id"] = picked >> 8
-            out["neighbor_label"] = (picked & 255).astype(np.int32)
-        return pd.DataFrame(out)
-
-    out_schema = "query_id long, neighbor_id long, cosine double"
+        q_salts = _query_salts(n_probe * _TARGET_CELL_ROWS)
+    bc = embeddings.sparkSession.sparkContext.broadcast(cent_mat)
+    # salt from the UNPACKED vector id: with label_col the ids are
+    # vec_id*256+label, and any salt count dividing 256 collapses
+    # ids % s_n to label % s_n — skewed labels would put every query in
+    # one salt (ADVICE r13)
+    shift = 8 if label_col is not None else 0
+    emitter = _cells("both", bc, n_probe, max(1, q_salts), id_col, vec_col, id_shift=shift)
+    assigned = _emit(embeddings, emitter, id_col, vec_col)
+    out_schema = _LOCAL_SCHEMA
     if label_col is not None:
         out_schema += ", neighbor_label int"
-    local = assigned.groupBy("cell", "qs").applyInPandas(cell_topk, schema=out_schema)
+    local = assigned.groupBy("cell", "qs").applyInPandas(
+        _cell_topk_kernel(k, packed_labels=label_col is not None), schema=out_schema
+    )
     # meet-once tier: every (query, neighbor) pair appears in at most
     # one (cell, salt) group — skip the dedup exchange (r16)
     return _global_topk(local, k, dedup=False)
@@ -1238,9 +1366,6 @@ def kmeans_lloyd(
     100 TB: sweeps scan the corpus k-independently; production would
     train on a hash-sample (sample_hash_split) — plumbing is identical.
     """
-    from pyspark.sql import functions as F
-
-    from etl_covid19_brasil_spark.llm.similarity import _normalize, _ordered_dot
 
     spark = embeddings.sparkSession
     init = (
@@ -1326,8 +1451,6 @@ def pq_train(
     (embedding_pq_codes: pq_train + pq_encode, both unnormalized) stays
     self-consistent with the default False.
     """
-    import pyspark.sql.functions as F
-
     sample = (
         embeddings.select(id_col, vec_col)
         .orderBy(F.xxhash64(F.col(id_col)), F.col(id_col))
@@ -1336,12 +1459,8 @@ def pq_train(
     )
     mat = np.stack(sample[vec_col].to_numpy()).astype(np.float64)
     if normalize and centroids is None:
-        from etl_covid19_brasil_spark.llm.similarity import _normalize
-
         mat = _normalize(mat)
     if centroids is not None:
-        from etl_covid19_brasil_spark.llm.similarity import _normalize
-
         cents = np.asarray(centroids, dtype=np.float64)
         mat = _normalize(mat)
         nearest = _sliced_cell_rows(lambda s: np.argmax(s, axis=1), mat, cents)
@@ -1419,7 +1538,7 @@ def _adc_scores(q_mat: np.ndarray, i_codes: np.ndarray, books: np.ndarray) -> np
     algebraically ``sum_j dot(q[j*sub:(j+1)*sub], books[j][codes[i,j]])``,
     i.e. the dot product of the query against the PQ *reconstruction* of
     the index vector, computed without materializing reconstructions.
-    Pure kernel shared by the per-cell ``applyInPandas`` scorer so the
+    Pure kernel under :func:`_adc_kernel` (every ADC tier) so the
     property differential (tests/test_ann_recall.py) exercises the
     exact shipped math against a sequential per-pair reference.
     Shapes: q_mat (Q, dim), i_codes (I, m) ints, books (m, pq_k, dim/m)
@@ -1570,14 +1689,6 @@ def ivfpq_topk(
     construction-time-job and cost disclosures as :func:`ivf_topk`;
     pass a fixed ``n_probe`` for a pure-lazy builder.
     """
-    from etl_covid19_brasil_spark.llm.similarity import (
-        _by_query_chunks,
-        _estimate_rows,
-        _normalize,
-        _ordered_dot,
-        _spread,
-    )
-
     spark = embeddings.sparkSession
     if centroids is not None:
         # precomputed handle (prepare_ann_route / ann_topk_auto route
@@ -1704,173 +1815,32 @@ def ivfpq_topk(
     )
     bc_c = spark.sparkContext.broadcast(cents)
     bc_b = spark.sparkContext.broadcast(books)
-
     # query-salt count: same derivation and rationale as ivf_topk's
     # (see _TARGET_CELL_QUERY_ROWS) — 1 at the 10-probe operating point,
     # growing only with the probe count. Index replicas here are SKINNY
     # code rows (m bytes), so salting costs (s_n - 1) code rows per
     # vector, never vectors.
-    s_n = max(1, -(-n_probe * _TARGET_CELL_ROWS // _TARGET_CELL_QUERY_ROWS))
-
-    schema = StructType(
-        [
-            StructField("cell", IntegerType()),
-            StructField("vid", LongType()),
-            StructField("vec", ArrayType(DoubleType())),  # queries only
-            StructField("codes", ArrayType(IntegerType())),  # index only
-            StructField("is_index", IntegerType()),
-            StructField("qs", IntegerType()),  # query-salt sub-group
-        ]
+    emitter = _cells(
+        "both",
+        bc_c,
+        n_probe,
+        _query_salts(n_probe * _TARGET_CELL_ROWS),
+        id_col,
+        vec_col,
+        ("cell", "vid", "vec", "codes", "is_index", "qs"),
+        bc_books=bc_b,
+        residual=by_residual,
     )
-
-    def assign(batches):
-        cmat, bks = bc_c.value, bc_b.value
-        mm, _, sub = bks.shape
-        # row-sliced yields: each input row fans out to s_n index rows
-        # + n_probe query rows, the query side carrying the full vector
-        # (see _FANOUT_OUT_ROWS)
-        sliced = (
-            s for whole in batches for s in _fanout_slices(whole, s_n + n_probe)
-        )
-        for pdf in sliced:
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = _normalize(np.stack(pdf[vec_col].to_numpy()).astype(np.float64))
-            probed = _sliced_cell_rows(
-                lambda s: np.argsort(-s, axis=1)[:, :n_probe], mat, cmat
-            )
-            # under by_residual, encode the residual to the assigned
-            # cell's centroid (codebooks are residual-trained to match)
-            res = mat - cmat[probed[:, 0]] if by_residual else mat
-            codes = np.empty((len(mat), mm), dtype=np.int32)
-            for j in range(mm):
-                x = res[:, j * sub : (j + 1) * sub]
-                d2 = ((x[:, None, :] - bks[j][None, :, :]) ** 2).sum(axis=2)
-                codes[:, j] = np.argmin(d2, axis=1)
-            # index rows (nearest cell, codes only, one per salt) +
-            # query rows (probed cells, own salt); index and query are
-            # disjoint rows here, so no qrole flag is needed
-            own = (ids % s_n).astype(np.int32)
-            out = {
-                "cell": np.concatenate(
-                    [np.repeat(probed[:, 0], s_n), probed.reshape(-1)]
-                ).astype(np.int32),
-                "vid": np.concatenate([np.repeat(ids, s_n), np.repeat(ids, n_probe)]),
-                "vec": [None] * (len(ids) * s_n)
-                + list(np.repeat(mat, n_probe, axis=0)),
-                "codes": list(np.repeat(codes, s_n, axis=0))
-                + [None] * (len(ids) * n_probe),
-                "is_index": np.concatenate(
-                    [np.ones(len(ids) * s_n), np.zeros(len(ids) * n_probe)]
-                ).astype(np.int32),
-                "qs": np.concatenate(
-                    [
-                        np.tile(np.arange(s_n, dtype=np.int32), len(ids)),
-                        np.repeat(own, n_probe),
-                    ]
-                ),
-            }
-            yield pd.DataFrame(out)
-
-    # _spread the map input (the ivf_topk rationale — r16): the
-    # assign + byte-code kernel otherwise serializes on a cached or
-    # few-file corpus's source partitioning
-    assigned = _spread(embeddings.select(id_col, vec_col)).mapInPandas(
-        assign, schema=schema
-    )
-
-    def cell_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"query_id": [], "neighbor_id": [], "score": []}).astype(
-            {"query_id": "int64", "neighbor_id": "int64", "score": "float64"}
-        )
-        idx = pdf[pdf["is_index"] == 1]
-        qry = pdf[pdf["is_index"] == 0]
-        if idx.empty or qry.empty:
-            return empty
-        # query-chunked (same class as the LSH/IVF kernels): the
-        # (|Q|, |I|) ADC scores allocation must stay bounded on
-        # degenerate hot cells; per-query scoring is row-independent.
-        # The group key is constant: pass this cell's centroid so the
-        # block can restore the residual layout's dropped ADC term.
-        cent = bc_c.value[int(pdf["cell"].iloc[0])] if by_residual else None
-        return _by_query_chunks(
-            _adc_block,
-            qry["vid"].to_numpy(dtype=np.int64),
-            np.stack(qry["vec"].to_numpy()),
-            idx["vid"].to_numpy(dtype=np.int64),
-            np.stack(idx["codes"].to_numpy()),
-            cent,
-        )
-
-    def _adc_block(q_ids, q_mat, i_ids, i_codes, cent) -> pd.DataFrame:
-        # under by_residual the LUT gather yields dot(q, x_i) -
-        # dot(q, c_cell); the dropped term is constant per (query,
-        # cell) but NOT across cells, and the global rerank pool ranks
-        # ACROSS cells — restore it (one ordered fold per query, r13)
-        # so emitted scores are dot(q, PQ-reconstruction) in both code
-        # layouts. The ordered fold keeps the restored score
-        # deterministic for a (query, cell) pair at any chunking.
-        scores = _adc_scores(q_mat, i_codes, bc_b.value)
-        if cent is not None:
-            scores = scores + _ordered_dot(q_mat, cent[None, :])[:, None]
-        scores[q_ids[:, None] == i_ids[None, :]] = -np.inf
-        take = min(emit_rows, len(i_ids))
-        order = np.lexsort((np.broadcast_to(i_ids, scores.shape), -scores), axis=-1)[
-            :, :take
-        ]
-        got = np.take_along_axis(scores, order, axis=1).reshape(-1)
-        keep = got > -np.inf
-        return pd.DataFrame(
-            {
-                "query_id": np.repeat(q_ids, take)[keep],
-                "neighbor_id": i_ids[order].reshape(-1)[keep],
-                "score": got[keep],
-            }
-        )
-
+    assigned = _emit(embeddings, emitter, id_col, vec_col)
     local = assigned.groupBy("cell", "qs").applyInPandas(
-        cell_topk, schema="query_id long, neighbor_id long, score double"
+        _adc_kernel(bc_b, emit_rows, bc_c if by_residual else None),
+        schema=_SCORE_SCHEMA,
     )
-    # Global per-query rerank pool (r13, VERDICT r12 item 1): keep the
-    # best rerank*k ADC candidates ACROSS probed cells before touching
-    # any exact vector — the faiss global-heap step. Spark 4 rewrites
-    # the row_number filter to a WindowGroupLimit (partial below the
-    # exchange), so the pool's shuffle carries skinny (query_id,
-    # neighbor_id, score) triples and the exact-rerank join input drops
-    # from n_q*n_probe*rerank*k rows to n_q*rerank*k. No pair dedup
-    # needed: an index vector lands in exactly one cell, so each
-    # (query, neighbor) pair meets at most once.
-    pool_w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    cand = (
-        local.withColumn("__pr", F.row_number().over(pool_w))
-        .filter(F.col("__pr") <= k * rerank)
-        .select("query_id", "neighbor_id")
-    )
-
-    @F.pandas_udf("double")
-    def _exact_cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        if a.empty:
-            return pd.Series([], dtype="float64")
-        am = _normalize(np.stack(a.to_numpy()))
-        bm = _normalize(np.stack(b.to_numpy()))
-        return pd.Series(_ordered_dot(am, bm))
-
-    nbr = embeddings.select(F.col(id_col).alias("__nid"), F.col(vec_col).alias("__nvec"))
-    qry = embeddings.select(F.col(id_col).alias("__qid"), F.col(vec_col).alias("__qvec"))
-    exact = (
-        cand.join(nbr, cand["neighbor_id"] == nbr["__nid"])
-        .join(qry, cand["query_id"] == qry["__qid"])
-        .select(
-            "query_id",
-            "neighbor_id",
-            _exact_cos("__qvec", "__nvec").alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return exact.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    # the global pool (best rerank*k ADC candidates ACROSS probed cells)
+    # feeds the exact rerank: its join input is n_q*rerank*k rows, not
+    # n_q*n_probe*rerank*k; an index vector lands in exactly one cell,
+    # so no pair dedup is needed
+    return _rerank_exact(local, embeddings, embeddings, k, k * rerank, id_col, vec_col)
 
 
 def lsh_pairs_above(
@@ -2003,7 +1973,6 @@ def pick_ann_tier(
     its own knobs on its own (trained) geometry, each with its own
     conservative derivation.
     """
-    from etl_covid19_brasil_spark.llm.similarity import _estimate_rows, _normalize
 
     # n_rows: caller-known corpus size — plans whose statistics lie
     # (an anti-joined live frame after ann_index_delete inherits its
@@ -2148,7 +2117,6 @@ def ann_index_append(
     — both on the DELTA, the small side by construction, never the
     accumulated index (the 8x probe in SCALECHECK_r16 measures append
     cost well under rebuild cost)."""
-    from etl_covid19_brasil_spark.llm.similarity import _normalize
 
     union = base.unionByName(delta)
     # exact count on the DELTA only — the bounded side of an append by

@@ -1,13 +1,24 @@
 """Separate query-set retrieval: ``ann_search(queries, index)``.
 
-Every other ANN entry point in this engine (``lsh_topk``, ``ivf_topk``,
-``ivfpq_topk``, ``brute_force_topk``, ``ann_topk_auto``) is SELF-JOIN
-top-k: one table in which every vector is both query and index. The
-real serving/eval shape — a small query batch against a big frozen
-index, train-vs-test contamination checks, eval-set nearest-neighbor
-lookups — was only reachable through label-packing hacks (the
-hard-negative-mining pattern). ``ann_search`` is the two-DataFrame form
-(VERDICT r14 item 1).
+The self-join ANN entry points (``lsh_topk``, ``ivf_topk``,
+``ivfpq_topk``, ``brute_force_topk``, ``ann_topk_auto``) take one table
+in which every vector is both query and index. The real serving/eval
+shape — a small query batch against a big frozen index, train-vs-test
+contamination checks, eval-set nearest-neighbor lookups — was only
+reachable through label-packing hacks (the hard-negative-mining
+pattern). ``ann_search`` is the two-DataFrame form (VERDICT r14 item 1).
+
+The two forms are ONE implementation per tier. The emitters, kernels
+and tails live in llm/ann.py and are shared: ``_band`` (LSH signature
++ multi-probe rows), ``_cells`` (IVF / IVF-PQ cell assignment),
+``_bucket_topk_kernel`` / ``_cell_topk_kernel`` / ``_adc_kernel`` (per-
+group ranking over the shared ``similarity._lexsort_topk`` tail) and
+``_rerank_exact`` (global ADC pool + exact-cosine rerank). An emitter
+takes a ROLE: the self-join entry points emit their one frame in the
+"both" role, the two-frame entry points here union an "index"-role
+frame with a "query"-role frame — so each form keeps the exact rows
+its exchanges always carried, and passing the corpus as both frames
+returns the self-join result (pinned in tests/test_ann_search.py).
 
 Reference basis: the reference repo's data lake exists "para consultas"
 (arbitrary queries over loaded tables, ``/root/reference/dags/
@@ -23,17 +34,18 @@ SHAPE is cheapest):
   index once, stream the queries through an Arrow kernel — recall 1.0,
   zero shuffle, ranks straight from the kernel. The eval-set-lookup
   twin of ``brute_force_topk``'s broadcast tier.
-- **clustered big index** (``pick_ann_tier`` → ivf/ivfpq): one
-  cell-meet shuffle — index rows land in their home Voronoi cell
-  (trained 3-iter Lloyd, or the centroids carried by a
-  ``prepare_ann_route`` handle), query rows fan to their ``n_probe``
-  nearest cells, exact in-cell scoring (the measured winner on
-  clustered shapes), global window top-k. Per-query work is n_probe x
-  ~constant cell size, independent of index size. Under a declared
-  ``index_budget_bytes`` the ivfpq route takes :func:`_ivfpq_search`
-  instead: the index side shuffles only m-byte residual codes (64x
-  smaller than the vectors — the thing the budget bought), ADC
-  scoring + global rerank pool + exact-cosine rerank join.
+- **clustered big index** (``pick_ann_tier`` → ivf/ivfpq):
+  :func:`_ivf_search` — ``ivf_topk``'s cell meet split across two
+  frames: index rows land in their home Voronoi cell (trained 3-iter
+  Lloyd, or the centroids carried by a ``prepare_ann_route`` handle),
+  query rows fan to their ``n_probe`` nearest cells, exact in-cell
+  scoring (the measured winner on clustered shapes), global window
+  top-k. Per-query work is n_probe x ~constant cell size, independent
+  of index size. Under a declared ``index_budget_bytes`` the ivfpq
+  route takes :func:`_ivfpq_search` instead — ``ivfpq_topk``'s layout
+  split the same way: the index side shuffles only m-byte residual
+  codes (64x smaller than the vectors — the thing the budget bought),
+  ADC scoring + global rerank pool + exact-cosine rerank join.
 - **flat big index** (``pick_ann_tier`` → lsh): the honest answer for
   a SEPARATE small query batch is the broadcast-query exact scan —
   queries broadcast once (bounded: <= _EXACT_TIER_MAX rows), the index
@@ -44,9 +56,10 @@ SHAPE is cheapest):
   pays its recall decay for exactly this scan's cost (the lsh_topk
   docstring's information bound), and the batch amortizes the scan
   across all its queries in ONE pass. When BOTH sides are big and
-  sublinear is worth its recall trade, :func:`lsh_search` is the
-  opt-in two-frame LSH bucket meet (never a silent default — exact
-  plans exist for every regime).
+  sublinear is worth its recall trade, :func:`lsh_search` (``lsh_topk``
+  split across two frames) is the opt-in bucket meet, and
+  :func:`lsh_adc_search` its budget form with codes on the index side
+  — never a silent default: exact plans exist for every regime.
 - **both sides big**: the cogrouped block-nested-loop
   (``_cogrouped_partials`` — index hash-tiled, queries hash-salted,
   no broadcast, no driver transit) + window merge, exactly
@@ -72,20 +85,28 @@ from pyspark.sql import DataFrame, Window
 
 from etl_covid19_brasil_spark.llm.ann import (
     TierRoute,
-    _BANDED_SCHEMA,
+    _adc_emission_depth,
+    _adc_kernel,
+    _band,
     _bucket_topk_kernel,
-    _fanout_slices,
+    _cell_topk_kernel,
+    _cells,
+    _emit,
     _global_topk,
+    _LOCAL_SCHEMA,
     _planes,
-    _sliced_cell_rows,
-    _TARGET_BUCKET_ROWS,
-    _TARGET_CELL_QUERY_ROWS,
+    _plane_count,
+    _query_salts,
+    _rerank_exact,
+    _sample_matrix,
+    _SCORE_SCHEMA,
+    _TIGHT_RERANK,
     auto_n_cells,
-    auto_n_tables,
     derive_n_tables,
     kmeans_lloyd,
     pick_ann_tier,
     pick_probe_strategy,
+    pq_train,
 )
 from etl_covid19_brasil_spark.llm.similarity import (
     MAX_INDEX_ROWS,
@@ -104,14 +125,6 @@ from etl_covid19_brasil_spark.llm.similarity import (
 # sample uses (_EXACT_TIER_MAX / _OCCUPANCY_SAMPLE_CAP). Bigger batches
 # take the cogrouped tier.
 QUERY_BROADCAST_MAX = 4096
-
-# r17 (VERDICT r16 item 3): the ADC rerank pool pre-partitions the
-# candidate stream on query_id so the pair dedup and the pool window
-# share ONE exchange (the old shape paid a (query_id, neighbor_id)
-# exchange AND a query_id exchange). Module switch so the A/B probe can
-# time both forms in one session; False reproduces the r16 plan.
-_POOL_SINGLE_EXCHANGE = True
-
 
 def _exact_pair_counts(
     index: DataFrame,
@@ -277,120 +290,19 @@ def _ivf_search(
     salting splits hot cells' query sides across sub-groups exactly as
     ivf_topk does (applyInPandas groups are indivisible units AQE can't
     split); index rows replicate into every salt flagged qrole=0."""
-    spark = index.sparkSession
-    n_cells = len(cent_mat)
     # expected per-cell QUERY rows = n_q * n_probe / n_cells (the
     # two-frame version of ivf_topk's derivation — there n_q == n and
     # cell size is held constant); one salt at small batches
-    s_n = max(1, -(-n_q * n_probe // max(1, n_cells * _TARGET_CELL_QUERY_ROWS)))
-    bc = spark.sparkContext.broadcast(cent_mat)
+    s_n = _query_salts(n_q * n_probe, len(cent_mat))
+    bc = index.sparkSession.sparkContext.broadcast(cent_mat)
 
-    assign_schema = (
-        "cell int, vid long, vec array<double>, is_index int, qs int, qrole int"
-    )
+    def cells(frame: DataFrame, role: str) -> DataFrame:
+        emitter = _cells(role, bc, n_probe, s_n, id_col, vec_col)
+        return _emit(frame, emitter, id_col, vec_col)
 
-    def assign_query(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cents = bc.value
-        # fan-out slicing: each yielded frame carries <= _FANOUT_OUT_ROWS
-        # full-vector rows (input rows fan n_probe-fold) — the
-        # OutOfDirectMemoryError guard every other fan-out kernel in the
-        # family already applies (_ivfpq_search, lsh_search; ADVICE r15)
-        sliced = (s for whole in batches for s in _fanout_slices(whole, n_probe))
-        for pdf in sliced:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = _normalize(np.stack(pdf[vec_col].to_numpy()))
-            cells = _sliced_cell_rows(
-                lambda s: np.argsort(-s, axis=1)[:, :n_probe], mat, cents
-            )  # (n, n_probe)
-            own = (ids % s_n).astype(np.int32)
-            yield pd.DataFrame(
-                {
-                    "cell": cells.reshape(-1).astype(np.int32),
-                    "vid": np.repeat(ids, n_probe),
-                    "vec": list(np.repeat(mat, n_probe, axis=0)),
-                    "is_index": np.zeros(len(ids) * n_probe, dtype=np.int32),
-                    "qs": np.repeat(own, n_probe),
-                    "qrole": np.ones(len(ids) * n_probe, dtype=np.int32),
-                }
-            )
-
-    def assign_index(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cents = bc.value
-        sliced = (s for whole in batches for s in _fanout_slices(whole, s_n))
-        for pdf in sliced:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = _normalize(np.stack(pdf[vec_col].to_numpy()))
-            home = _sliced_cell_rows(
-                lambda s: np.argmax(s, axis=1), mat, cents
-            ).astype(np.int32)
-            # index rows replicate into EVERY query salt of their home
-            # cell (qrole=0: they never query — the two-frame shape has
-            # no query role on the index side at all)
-            yield pd.DataFrame(
-                {
-                    "cell": np.repeat(home, s_n),
-                    "vid": np.repeat(ids, s_n),
-                    "vec": list(np.repeat(mat, s_n, axis=0)),
-                    "is_index": np.ones(len(ids) * s_n, dtype=np.int32),
-                    "qs": np.tile(np.arange(s_n, dtype=np.int32), len(ids)),
-                    "qrole": np.zeros(len(ids) * s_n, dtype=np.int32),
-                }
-            )
-
-    # _spread both map inputs: the assign kernels inherit the SOURCE
-    # partitioning, and a cached/few-file corpus otherwise serializes
-    # the whole assign + fan-out into 1-2 tasks (observed live at the
-    # 32x probe: one Python worker CPU-pinned for minutes while 31
-    # cores idled — r16; the exact tiers already carry _spread)
-    assigned = (
-        _spread(queries.select(id_col, vec_col))
-        .mapInPandas(assign_query, schema=assign_schema)
-        .unionByName(
-            _spread(index.select(id_col, vec_col)).mapInPandas(
-                assign_index, schema=assign_schema
-            )
-        )
-    )
-
-    empty_cols = {"query_id": "int64", "neighbor_id": "int64", "cosine": "float64"}
-
-    def cell_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        idx = pdf[pdf["is_index"] == 1]
-        qry = pdf[pdf["qrole"] == 1]
-        if idx.empty or qry.empty:
-            return pd.DataFrame({c: [] for c in empty_cols}).astype(empty_cols)
-        return _by_query_chunks(
-            _cell_block,
-            qry["vid"].to_numpy(dtype=np.int64),
-            np.stack(qry["vec"].to_numpy()),
-            idx["vid"].to_numpy(dtype=np.int64),
-            np.stack(idx["vec"].to_numpy()),
-        )
-
-    def _cell_block(q_ids, q_mat, i_ids, i_mat) -> pd.DataFrame:
-        sims = q_mat @ i_mat.T  # pre-normalized -> cosine
-        # family-consistent same-id mask (no-op on disjoint splits)
-        sims[q_ids[:, None] == i_ids[None, :]] = -np.inf
-        kk = min(k, len(i_ids))
-        order = np.lexsort(
-            (np.broadcast_to(i_ids, sims.shape), -sims), axis=-1
-        )[:, :kk]
-        got = np.take_along_axis(sims, order, axis=1).reshape(-1)
-        keep = got > -np.inf
-        return pd.DataFrame(
-            {
-                "query_id": np.repeat(q_ids, kk)[keep],
-                "neighbor_id": i_ids[order].reshape(-1)[keep],
-                "cosine": got[keep],
-            }
-        )
-
+    assigned = cells(queries, "query").unionByName(cells(index, "index"))
     local = assigned.groupBy("cell", "qs").applyInPandas(
-        cell_topk, schema="query_id long, neighbor_id long, cosine double"
+        _cell_topk_kernel(k), schema=_LOCAL_SCHEMA
     )
     # meet-once tier: every (query, neighbor) pair appears in at most
     # one (cell, salt) group — skip the dedup exchange (r16)
@@ -421,14 +333,6 @@ def _ivfpq_search(
     (pick_ann_tier), so codes are residual-to-centroid and the pool
     takes the tight default ``_TIGHT_RERANK * n_probe`` — the 8x
     clustered self-join sweep measured 0.989 at that width."""
-    from etl_covid19_brasil_spark.llm.ann import (
-        _adc_emission_depth,
-        _adc_scores,
-        _TIGHT_RERANK,
-        pq_train,
-    )
-    from etl_covid19_brasil_spark.llm.similarity import _ordered_dot
-
     spark = index.sparkSession
     n_cells = len(cent_mat)
     books = pq_train(
@@ -437,149 +341,24 @@ def _ivfpq_search(
     )
     rerank = _TIGHT_RERANK * max(1, n_probe)
     emit_rows = _adc_emission_depth(k, rerank, n_probe, n_cells, tight_cells=True)
-    s_n = max(1, -(-n_q * n_probe // max(1, n_cells * _TARGET_CELL_QUERY_ROWS)))
+    s_n = _query_salts(n_q * n_probe, n_cells)
     bc_c = spark.sparkContext.broadcast(cent_mat)
     bc_b = spark.sparkContext.broadcast(books)
 
-    assign_schema = (
-        "cell int, vid long, vec array<double>, codes array<int>, qs int, "
-        "is_index int"
-    )
-
-    def assign_index(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cmat, bks = bc_c.value, bc_b.value
-        mm, _, sub = bks.shape
-        sliced = (s for whole in batches for s in _fanout_slices(whole, s_n))
-        for pdf in sliced:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = _normalize(np.stack(pdf[vec_col].to_numpy()).astype(np.float64))
-            home = _sliced_cell_rows(lambda s: np.argmax(s, axis=1), mat, cmat)
-            res = mat - cmat[home]  # residual codes (clustered-only tier)
-            codes = np.empty((len(mat), mm), dtype=np.int32)
-            for j in range(mm):
-                x = res[:, j * sub : (j + 1) * sub]
-                d2 = ((x[:, None, :] - bks[j][None, :, :]) ** 2).sum(axis=2)
-                codes[:, j] = np.argmin(d2, axis=1)
-            yield pd.DataFrame(
-                {
-                    "cell": np.repeat(home.astype(np.int32), s_n),
-                    "vid": np.repeat(ids, s_n),
-                    "vec": [None] * (len(ids) * s_n),
-                    "codes": list(np.repeat(codes, s_n, axis=0)),
-                    "qs": np.tile(np.arange(s_n, dtype=np.int32), len(ids)),
-                    "is_index": np.ones(len(ids) * s_n, dtype=np.int32),
-                }
-            )
-
-    def assign_query(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cmat = bc_c.value
-        sliced = (s for whole in batches for s in _fanout_slices(whole, n_probe))
-        for pdf in sliced:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = _normalize(np.stack(pdf[vec_col].to_numpy()).astype(np.float64))
-            probed = _sliced_cell_rows(
-                lambda s: np.argsort(-s, axis=1)[:, :n_probe], mat, cmat
-            )
-            yield pd.DataFrame(
-                {
-                    "cell": probed.reshape(-1).astype(np.int32),
-                    "vid": np.repeat(ids, n_probe),
-                    "vec": list(np.repeat(mat, n_probe, axis=0)),
-                    "codes": [None] * (len(ids) * n_probe),
-                    "qs": np.repeat((ids % s_n).astype(np.int32), n_probe),
-                    "is_index": np.zeros(len(ids) * n_probe, dtype=np.int32),
-                }
-            )
-
-    # _spread both map inputs (the _ivf_search rationale — r16)
-    assigned = (
-        _spread(index.select(id_col, vec_col))
-        .mapInPandas(assign_index, schema=assign_schema)
-        .unionByName(
-            _spread(queries.select(id_col, vec_col)).mapInPandas(
-                assign_query, schema=assign_schema
-            )
+    def cells(frame: DataFrame, role: str) -> DataFrame:
+        cols = ("cell", "vid", "vec", "codes", "qs", "is_index")
+        emitter = _cells(
+            role, bc_c, n_probe, s_n, id_col, vec_col, cols, bc_books=bc_b, residual=True
         )
-    )
+        return _emit(frame, emitter, id_col, vec_col)
 
-    def _adc_block(q_ids, q_mat, i_ids, i_codes, cent) -> pd.DataFrame:
-        # residual layout: the LUT gather yields dot(q, x) - dot(q, c);
-        # restore the per-(query, cell) term so scores are cross-cell
-        # comparable in the global pool (the ivfpq_topk r13 invariant)
-        scores = _adc_scores(q_mat, i_codes, bc_b.value)
-        scores = scores + _ordered_dot(q_mat, cent[None, :])[:, None]
-        scores[q_ids[:, None] == i_ids[None, :]] = -np.inf
-        take = min(emit_rows, len(i_ids))
-        order = np.lexsort(
-            (np.broadcast_to(i_ids, scores.shape), -scores), axis=-1
-        )[:, :take]
-        got = np.take_along_axis(scores, order, axis=1).reshape(-1)
-        keep = got > -np.inf
-        return pd.DataFrame(
-            {
-                "query_id": np.repeat(q_ids, take)[keep],
-                "neighbor_id": i_ids[order].reshape(-1)[keep],
-                "score": got[keep],
-            }
-        )
-
-    def cell_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"query_id": [], "neighbor_id": [], "score": []}
-        ).astype({"query_id": "int64", "neighbor_id": "int64", "score": "float64"})
-        idx = pdf[pdf["is_index"] == 1]
-        qry = pdf[pdf["is_index"] == 0]
-        if idx.empty or qry.empty:
-            return empty
-        cent = bc_c.value[int(pdf["cell"].iloc[0])]
-        return _by_query_chunks(
-            _adc_block,
-            qry["vid"].to_numpy(dtype=np.int64),
-            np.stack(qry["vec"].to_numpy()),
-            idx["vid"].to_numpy(dtype=np.int64),
-            np.stack(idx["codes"].to_numpy()),
-            cent,
-        )
-
-    local = assigned.groupBy("cell", "qs").applyInPandas(
-        cell_topk, schema="query_id long, neighbor_id long, score double"
+    local = (
+        cells(index, "index")
+        .unionByName(cells(queries, "query"))
+        .groupBy("cell", "qs")
+        .applyInPandas(_adc_kernel(bc_b, emit_rows, bc_c), schema=_SCORE_SCHEMA)
     )
-    pool_w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    cand = (
-        local.withColumn("__pr", F.row_number().over(pool_w))
-        .filter(F.col("__pr") <= k * rerank)
-        .select("query_id", "neighbor_id")
-    )
-
-    @F.pandas_udf("double")
-    def _exact_cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        if a.empty:
-            return pd.Series([], dtype="float64")
-        am = _normalize(np.stack(a.to_numpy()))
-        bm = _normalize(np.stack(b.to_numpy()))
-        return pd.Series(_ordered_dot(am, bm))
-
-    nbr = index.select(F.col(id_col).alias("__nid"), F.col(vec_col).alias("__nvec"))
-    qry = queries.select(F.col(id_col).alias("__qid"), F.col(vec_col).alias("__qvec"))
-    exact = (
-        cand.join(nbr, cand["neighbor_id"] == nbr["__nid"])
-        .join(qry, cand["query_id"] == qry["__qid"])
-        .select(
-            "query_id",
-            "neighbor_id",
-            _exact_cos("__qvec", "__nvec").alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return exact.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rerank_exact(local, queries, index, k, k * rerank, id_col, vec_col)
 
 
 def ann_search(
@@ -795,6 +574,44 @@ def ann_search_filtered(
     )
 
 
+def _lsh_geometry(
+    queries: DataFrame,
+    index: DataFrame,
+    id_col: str,
+    vec_col: str,
+    n_queries: "int | None",
+    n_index: "int | None",
+):
+    """Broadcast planes, probe flips and query salts of the two-frame
+    LSH meet, or None on an empty index. Plane count derives from the
+    INDEX size (expected bucket size ~constant), the table count from
+    the index's measured neighbor angles (:func:`~.ann.derive_n_tables`
+    over the shared shape sample — the floor of 5 at P=4), and the salt
+    count from the expected per-(table, bucket) query rows n_q x fan /
+    2^P (the lsh_topk q_salts discipline, derived not assumed).
+
+    Exact counts, not plan statistics, when the caller gives no hint:
+    unlike the tier choices (performance-only — any tier is correct),
+    the plane count is RECALL-BEARING, and Catalyst's estimate on a
+    filtered/cached frame overshoots by orders of magnitude (measured:
+    the 8x split estimated ~10^6 for 15,200 rows, deriving P=12 whose
+    4-bit probe fan collapsed recall to 0.37 vs 0.92 at the true P=6).
+    The same overshoot on n_q would derive ~100 query salts and
+    replicate the index 100x. ONE fused count job is the documented
+    construction cost (r17, VERDICT r16 item 7 — was two separate
+    count() jobs); pass both hints for the pure-lazy form."""
+    n_idx, n_q = _exact_pair_counts(index, queries, n_index, n_queries)
+    sample = _sample_matrix(index, id_col, vec_col)
+    if sample is None:
+        return None
+    dim = sample.shape[1]
+    p_n = _plane_count(n_idx)
+    planes = _planes(derive_n_tables(sample, p_n, dim).n_tables, p_n, dim)
+    n_flips = min(p_n, 4)
+    s_n = _query_salts(n_q * (1 + n_flips), 1 << p_n)
+    return index.sparkSession.sparkContext.broadcast(planes), n_flips, s_n
+
+
 def lsh_search(
     queries: DataFrame,
     index: DataFrame,
@@ -827,117 +644,18 @@ def lsh_search(
     shape sample — clustered indexes come out at the floor), and hot
     buckets split their query side across salts with index replicas,
     the same skew discipline as every bucketed kernel in the engine."""
-    import math
+    geo = _lsh_geometry(queries, index, id_col, vec_col, n_queries, n_index)
+    if geo is None:
+        return index.sparkSession.createDataFrame([], schema=TOPK_SCHEMA)
+    bc, n_flips, s_n = geo
 
-    from etl_covid19_brasil_spark.llm.ann import _sample_matrix
+    def band(frame: DataFrame, role: str) -> DataFrame:
+        emitter = _band(role, bc, s_n, n_flips, id_col, vec_col)
+        return _emit(frame, emitter, id_col, vec_col)
 
-    spark = index.sparkSession
-    # Exact counts, not plan statistics, when the caller gives no hint:
-    # unlike the tier choices (performance-only — any tier is correct),
-    # the plane count is RECALL-BEARING, and Catalyst's estimate on a
-    # filtered/cached frame overshoots by orders of magnitude (measured:
-    # the 8x split estimated ~10^6 for 15,200 rows, deriving P=12 whose
-    # 4-bit probe fan collapsed recall to 0.37 vs 0.92 at the true P=6).
-    # The same overshoot on n_q would derive ~100 query salts and
-    # replicate the index 100x. ONE fused count job is the documented
-    # construction cost (r17, VERDICT r16 item 7 — was two separate
-    # count() jobs); pass both hints for the pure-lazy form.
-    n_idx, n_q = _exact_pair_counts(index, queries, n_index, n_queries)
-    sample = _sample_matrix(index, id_col, vec_col)
-    if sample is None:
-        return spark.createDataFrame([], schema=TOPK_SCHEMA)
-    dim = sample.shape[1]
-    p_n = max(4, math.ceil(math.log2(max(2, n_idx / _TARGET_BUCKET_ROWS))))
-    t_n = (
-        derive_n_tables(sample, p_n, dim).n_tables
-        if p_n > 4
-        else auto_n_tables(p_n)
-    )
-    planes = _planes(t_n, p_n, dim)
-    bc = spark.sparkContext.broadcast(planes)
-    n_flips = min(p_n, 4)
-    fan = 1 + n_flips
-    # expected per-(tbl, bucket) query rows = n_q * fan / 2^P; salt hot
-    # buckets' query sides so no applyInPandas group outgrows the Arrow
-    # budget (the lsh_topk q_salts discipline, derived not assumed)
-    s_n = max(1, -(-n_q * fan // ((1 << p_n) * _TARGET_CELL_QUERY_ROWS)))
-
-    def _codes(pl, mat):
-        t, p = pl.shape[0], pl.shape[1]
-        proj = (mat @ pl.reshape(t * p, -1).T).reshape(len(mat), t, p)
-        weights = (1 << np.arange(p)).astype(np.int64)
-        return proj, ((proj > 0) * weights).sum(axis=2).astype(np.int32)
-
-    def sign_index(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pl = bc.value
-        t = pl.shape[0]
-        sliced = (
-            sub for whole in batches for sub in _fanout_slices(whole, t * s_n)
-        )
-        for pdf in sliced:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            _, buckets = _codes(pl, mat)  # (n, T)
-            rows = t * s_n
-            yield pd.DataFrame(
-                {
-                    "vid": np.repeat(ids, rows),
-                    "vec": list(np.repeat(mat, rows, axis=0)),
-                    "tbl": np.tile(
-                        np.repeat(np.arange(t, dtype=np.int32), s_n), len(ids)
-                    ),
-                    "bucket": np.repeat(buckets.reshape(-1), s_n),
-                    "is_index": np.ones(len(ids) * rows, dtype=np.int32),
-                    "qs": np.tile(np.arange(s_n, dtype=np.int32), len(ids) * t),
-                    "qrole": np.zeros(len(ids) * rows, dtype=np.int32),
-                }
-            )
-
-    def sign_query(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pl = bc.value
-        t = pl.shape[0]
-        sliced = (
-            sub for whole in batches for sub in _fanout_slices(whole, t * fan)
-        )
-        for pdf in sliced:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            proj, buckets = _codes(pl, mat)
-            probes = buckets[:, :, None]
-            if n_flips:
-                least = np.argsort(np.abs(proj), axis=2)[:, :, :n_flips]
-                flips = buckets[:, :, None] ^ (1 << least).astype(np.int32)
-                probes = np.concatenate([probes, flips], axis=2)  # (n, T, fan)
-            rows = t * fan
-            yield pd.DataFrame(
-                {
-                    "vid": np.repeat(ids, rows),
-                    "vec": list(np.repeat(mat, rows, axis=0)),
-                    "tbl": np.tile(
-                        np.repeat(np.arange(t, dtype=np.int32), fan), len(ids)
-                    ),
-                    "bucket": probes.reshape(-1),
-                    "is_index": np.zeros(len(ids) * rows, dtype=np.int32),
-                    "qs": np.repeat((ids % s_n).astype(np.int32), rows),
-                    "qrole": np.ones(len(ids) * rows, dtype=np.int32),
-                }
-            )
-
-    banded = (
-        _spread(index.select(id_col, vec_col))
-        .mapInPandas(sign_index, schema=_BANDED_SCHEMA)
-        .unionByName(
-            _spread(queries.select(id_col, vec_col)).mapInPandas(
-                sign_query, schema=_BANDED_SCHEMA
-            )
-        )
-    )
+    banded = band(index, "index").unionByName(band(queries, "query"))
     local = banded.groupBy("tbl", "bucket", "qs").applyInPandas(
-        _bucket_topk_kernel(k), schema="query_id long, neighbor_id long, cosine double"
+        _bucket_topk_kernel(k), schema=_LOCAL_SCHEMA
     )
     return _global_topk(local, k)
 
@@ -993,41 +711,14 @@ def lsh_adc_search(
     recomputes them), deterministic tie-break. Self-join callers pass
     the corpus as both frames — the q_id == i_id mask reproduces
     ``lsh_topk``'s exclusion semantics."""
-    import math
-
-    from etl_covid19_brasil_spark.llm.ann import (
-        _adc_scores,
-        _sample_matrix,
-        pq_train,
-    )
-    from etl_covid19_brasil_spark.llm.similarity import _ordered_dot
-
-    spark = index.sparkSession
-    # exact counts when no hint: plane count is RECALL-BEARING (the
-    # lsh_search r15 lesson — estimate overshoot derived P=12 and
-    # collapsed recall to 0.37); fused into one job (r17, VERDICT r16
-    # item 7)
-    n_idx, n_q = _exact_pair_counts(index, queries, n_index, n_queries)
-    sample = _sample_matrix(index, id_col, vec_col)
-    if sample is None:
-        return spark.createDataFrame([], schema=TOPK_SCHEMA)
-    dim = sample.shape[1]
-    p_n = max(4, math.ceil(math.log2(max(2, n_idx / _TARGET_BUCKET_ROWS))))
-    t_n = (
-        derive_n_tables(sample, p_n, dim).n_tables
-        if p_n > 4
-        else auto_n_tables(p_n)
-    )
-    planes = _planes(t_n, p_n, dim)
+    geo = _lsh_geometry(queries, index, id_col, vec_col, n_queries, n_index)
+    if geo is None:
+        return index.sparkSession.createDataFrame([], schema=TOPK_SCHEMA)
+    bc_p, n_flips, s_n = geo
     books = pq_train(
         index, m=m, k=pq_k, id_col=id_col, vec_col=vec_col, normalize=True
     )
-    bc_p = spark.sparkContext.broadcast(planes)
-    bc_b = spark.sparkContext.broadcast(books)
-    n_flips = min(p_n, 4)
-    fan = 1 + n_flips
-    s_n = max(1, -(-n_q * fan // ((1 << p_n) * _TARGET_CELL_QUERY_ROWS)))
-    pool_rows = k * rerank
+    bc_b = index.sparkSession.sparkContext.broadcast(books)
     # Per-bucket emission depth, NOT the pool width: a query visits
     # T x fan buckets and the pool ranks their deduped union, so
     # emitting the full pool width from EVERY bucket multiplies the
@@ -1039,193 +730,18 @@ def lsh_adc_search(
     # emitted rows stay a k-proportional sliver of each ~256-row bucket.
     emit_rows = bucket_emit if bucket_emit is not None else 4 * k
 
-    adc_schema = (
-        "vid long, vec array<double>, codes array<int>, tbl int, bucket int, "
-        "is_index int, qs int, qrole int"
-    )
+    def band(frame: DataFrame, role: str) -> DataFrame:
+        emitter = _band(role, bc_p, s_n, n_flips, id_col, vec_col, bc_books=bc_b)
+        return _emit(frame, emitter, id_col, vec_col)
 
-    def _codes(pl, mat):
-        t, p = pl.shape[0], pl.shape[1]
-        proj = (mat @ pl.reshape(t * p, -1).T).reshape(len(mat), t, p)
-        weights = (1 << np.arange(p)).astype(np.int64)
-        return proj, ((proj > 0) * weights).sum(axis=2).astype(np.int32)
-
-    def sign_index(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pl, bks = bc_p.value, bc_b.value
-        mm, _, sub = bks.shape
-        t = pl.shape[0]
-        sliced = (
-            s for whole in batches for s in _fanout_slices(whole, t * s_n)
-        )
-        for pdf in sliced:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = _normalize(
-                np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            )
-            _, buckets = _codes(pl, mat)  # buckets on the normalized mat:
-            # sign(w . x) is scale-invariant, so buckets match the
-            # full-vector form's exactly
-            codes = np.empty((len(mat), mm), dtype=np.int32)
-            for j in range(mm):
-                x = mat[:, j * sub : (j + 1) * sub]
-                d2 = ((x[:, None, :] - bks[j][None, :, :]) ** 2).sum(axis=2)
-                codes[:, j] = np.argmin(d2, axis=1)
-            rows = t * s_n
-            yield pd.DataFrame(
-                {
-                    "vid": np.repeat(ids, rows),
-                    "vec": [None] * (len(ids) * rows),  # the budget: no vectors
-                    "codes": list(np.repeat(codes, rows, axis=0)),
-                    "tbl": np.tile(
-                        np.repeat(np.arange(t, dtype=np.int32), s_n), len(ids)
-                    ),
-                    "bucket": np.repeat(buckets.reshape(-1), s_n),
-                    "is_index": np.ones(len(ids) * rows, dtype=np.int32),
-                    "qs": np.tile(np.arange(s_n, dtype=np.int32), len(ids) * t),
-                    "qrole": np.zeros(len(ids) * rows, dtype=np.int32),
-                }
-            )
-
-    def sign_query(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pl = bc_p.value
-        t = pl.shape[0]
-        sliced = (
-            s for whole in batches for s in _fanout_slices(whole, t * fan)
-        )
-        for pdf in sliced:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = _normalize(
-                np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            )
-            proj, buckets = _codes(pl, mat)
-            probes = buckets[:, :, None]
-            if n_flips:
-                least = np.argsort(np.abs(proj), axis=2)[:, :, :n_flips]
-                flips = buckets[:, :, None] ^ (1 << least).astype(np.int32)
-                probes = np.concatenate([probes, flips], axis=2)
-            rows = t * fan
-            yield pd.DataFrame(
-                {
-                    "vid": np.repeat(ids, rows),
-                    "vec": list(np.repeat(mat, rows, axis=0)),
-                    "codes": [None] * (len(ids) * rows),
-                    "tbl": np.tile(
-                        np.repeat(np.arange(t, dtype=np.int32), fan), len(ids)
-                    ),
-                    "bucket": probes.reshape(-1),
-                    "is_index": np.zeros(len(ids) * rows, dtype=np.int32),
-                    "qs": np.repeat((ids % s_n).astype(np.int32), rows),
-                    "qrole": np.ones(len(ids) * rows, dtype=np.int32),
-                }
-            )
-
-    def _adc_block(q_ids, q_mat, i_ids, i_codes) -> pd.DataFrame:
-        scores = _adc_scores(q_mat, i_codes, bc_b.value)
-        scores[q_ids[:, None] == i_ids[None, :]] = -np.inf
-        take = min(emit_rows, len(i_ids))
-        order = np.lexsort(
-            (np.broadcast_to(i_ids, scores.shape), -scores), axis=-1
-        )[:, :take]
-        got = np.take_along_axis(scores, order, axis=1).reshape(-1)
-        keep = got > -np.inf
-        return pd.DataFrame(
-            {
-                "query_id": np.repeat(q_ids, take)[keep],
-                "neighbor_id": i_ids[order].reshape(-1)[keep],
-                "score": got[keep],
-            }
-        )
-
-    def bucket_adc(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"query_id": [], "neighbor_id": [], "score": []}
-        ).astype(
-            {"query_id": "int64", "neighbor_id": "int64", "score": "float64"}
-        )
-        idx = pdf[pdf["is_index"] == 1]
-        qry = pdf[pdf["qrole"] == 1]
-        if idx.empty or qry.empty:
-            return empty
-        return _by_query_chunks(
-            _adc_block,
-            qry["vid"].to_numpy(dtype=np.int64),
-            np.stack(qry["vec"].to_numpy()),
-            idx["vid"].to_numpy(dtype=np.int64),
-            np.stack(idx["codes"].to_numpy()),
-        )
-
-    banded = (
-        _spread(index.select(id_col, vec_col))
-        .mapInPandas(sign_index, schema=adc_schema)
-        .unionByName(
-            _spread(queries.select(id_col, vec_col)).mapInPandas(
-                sign_query, schema=adc_schema
-            )
-        )
+    local = (
+        band(index, "index")
+        .unionByName(band(queries, "query"))
+        .groupBy("tbl", "bucket", "qs")
+        .applyInPandas(_adc_kernel(bc_b, emit_rows), schema=_SCORE_SCHEMA)
     )
-    local = banded.groupBy("tbl", "bucket", "qs").applyInPandas(
-        bucket_adc, schema="query_id long, neighbor_id long, score double"
-    )
-    # a pair colliding in several tables carries the SAME ADC score
-    # (one code row per vector) — dedup before the pool so duplicates
-    # don't crowd out distinct candidates.
-    #
-    # r17 optimization round (VERDICT r16 item 3): the pool used to run
-    # dropDuplicates (a full hash exchange on (query_id, neighbor_id))
-    # FOLLOWED by the row_number window (a second exchange on query_id
-    # plus a sort) — the candidate stream crossed the network twice to
-    # answer one query-keyed question. One explicit repartition on
-    # query_id now establishes the partitioning ONCE: HashPartitioning
-    # on query_id satisfies the dedup aggregate's ClusteredDistribution
-    # on (query_id, neighbor_id) — a subset partitioning colocates every
-    # row of each (q, n) group — and the window's own query_id
-    # requirement, so both run partition-local above a SINGLE exchange
-    # (guide §2.4: two operations keyed the same way share one
-    # exchange). Per-query pool input is bounded (tables x fan x
-    # emit_rows rows), so the query-keyed exchange cannot skew. Results
-    # are byte-identical: dedup keeps one of several identical-score
-    # copies, and the (score desc, neighbor_id asc) pool order is a
-    # total order over the deduped rows.
-    pool_w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    if _POOL_SINGLE_EXCHANGE:
-        local = local.repartition("query_id")
-    cand = (
-        local.dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("__pr", F.row_number().over(pool_w))
-        .filter(F.col("__pr") <= pool_rows)
-        .select("query_id", "neighbor_id")
-    )
-
-    @F.pandas_udf("double")
-    def _exact_cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        if a.empty:
-            return pd.Series([], dtype="float64")
-        am = _normalize(np.stack(a.to_numpy()))
-        bm = _normalize(np.stack(b.to_numpy()))
-        return pd.Series(_ordered_dot(am, bm))
-
-    nbr = index.select(F.col(id_col).alias("__nid"), F.col(vec_col).alias("__nvec"))
-    qry = queries.select(
-        F.col(id_col).alias("__qid"), F.col(vec_col).alias("__qvec")
-    )
-    exact = (
-        cand.join(nbr, cand["neighbor_id"] == nbr["__nid"])
-        .join(qry, cand["query_id"] == qry["__qid"])
-        .select(
-            "query_id",
-            "neighbor_id",
-            _exact_cos("__qvec", "__nvec").alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return exact.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
+    # a pair colliding in several tables carries the SAME ADC score —
+    # the pool dedups before ranking, sharing one query_id exchange
+    return _rerank_exact(
+        local, queries, index, k, k * rerank, id_col, vec_col, dedup=True
     )

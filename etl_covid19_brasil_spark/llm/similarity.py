@@ -179,44 +179,75 @@ def _scan_parallel_enough(df: DataFrame, target: int) -> bool:
 
 
 def _spread(df: DataFrame) -> DataFrame:
-    """Repartition the query stream up to the cluster's parallelism when
-    the source scan is narrow (a 2-file parquet table would otherwise
-    run the O(n_q x n_index) kernel on 2 cores). Gated on scan BYTES
+    """Round-robin repartition ``df`` up to the cluster's parallelism
+    BEFORE CPU-heavy per-row work when the source scan is narrow: a
+    table small enough to arrive as one or two splits would otherwise
+    pin the O(n_q x n_index) kernel, or the tokenize/shingle/hash
+    projection, on as many cores (maxPartitionBytes sizes splits by
+    bytes, not by the compute they feed). Gated on scan BYTES
     (:func:`_scan_parallel_enough` — r17; file count was the previous
     proxy and under-parallelized many-tiny-file corpora); non-file
     sources take the repartition, which AQE coalesces if it was
-    unnecessary. The shuffle moves only the small query rows; at real
-    scale the input already scans wide and this is a no-op."""
+    unnecessary. The shuffle moves few bytes next to the freed cores;
+    at real scale the input already scans wide and this is a no-op
+    (no round-robin re-shuffle of every byte for nothing)."""
     target = df.sparkSession.sparkContext.defaultParallelism
     if not _scan_parallel_enough(df, target):
         return df.repartition(target)
     return df
 
 
+def _lexsort_topk(
+    q_ids: np.ndarray,
+    i_ids: np.ndarray,
+    scores: np.ndarray,
+    depth: int,
+    score: str = "cosine",
+    ranked: bool = False,
+    packed_labels: bool = False,
+) -> pd.DataFrame:
+    """The masked top-k tail every block kernel shares: set excluded
+    pairs of the (|Q|, |I|) ``scores`` to -inf so they sort last, then
+    keep each query row's best ``depth`` by (score desc, neighbor id
+    asc) in ONE 2D lexsort (stable, last key primary). Any -inf that
+    leaks into the top of a short row is dropped after the gather —
+    drops only happen at a row's tail, so ``ranked`` ranks stay
+    contiguous. Callers compute ``scores`` their own way (ordered fold,
+    matmul, ADC), so the doubles they emit are theirs.
+
+    Excluded pairs share an id; with ``packed_labels`` (ids are
+    ``id * 256 + label``) the mask widens to the whole same-label slice
+    (which subsumes self) and the output unpacks ids + neighbor_label."""
+    if packed_labels:
+        scores[(q_ids & 255)[:, None] == (i_ids & 255)[None, :]] = -np.inf
+    else:
+        scores[q_ids[:, None] == i_ids[None, :]] = -np.inf
+    kk = min(depth, len(i_ids))
+    order = np.lexsort((np.broadcast_to(i_ids, scores.shape), -scores), axis=-1)[:, :kk]
+    got = np.take_along_axis(scores, order, axis=1).reshape(-1)
+    keep = got > -np.inf
+    picked = i_ids[order].reshape(-1)[keep]
+    out = {"query_id": np.repeat(q_ids, kk)[keep], "neighbor_id": picked}
+    if packed_labels:
+        out = {
+            "query_id": out["query_id"] >> 8,
+            "neighbor_id": picked >> 8,
+            "neighbor_label": (picked & 255).astype(np.int32),
+        }
+    out[score] = got[keep]
+    if ranked:
+        out["rank"] = np.tile(np.arange(1, kk + 1, dtype=np.int32), len(q_ids))[keep]
+    return pd.DataFrame(out)
+
+
 def _topk_block(
     q_ids: np.ndarray, q_mat: np.ndarray, ids: np.ndarray, mat: np.ndarray, k: int
 ) -> pd.DataFrame:
     """Local top-k of one (query block x index block): (nq, d) x (m, d)
-    similarities with dimension-ordered accumulation, then top-k by
-    (cosine desc, neighbor_id asc) in ONE 2D lexsort (stable, last key
-    primary). Each query's self-pair is set to -inf so it sorts last,
-    and any -inf that leaks into the top-k of a short index is dropped
-    after the gather — ranks stay contiguous because drops only happen
-    at the tail."""
+    similarities with dimension-ordered accumulation, ranked by the
+    shared :func:`_lexsort_topk` tail (self-pairs excluded)."""
     sims = _ordered_dot(q_mat[:, None, :], mat[None, :, :])
-    sims[q_ids[:, None] == ids[None, :]] = -np.inf
-    kk = min(k, len(ids))
-    order = np.lexsort((np.broadcast_to(ids, sims.shape), -sims), axis=-1)[:, :kk]
-    got = np.take_along_axis(sims, order, axis=1).reshape(-1)
-    keep = got > -np.inf
-    return pd.DataFrame(
-        {
-            "query_id": np.repeat(q_ids, kk)[keep],
-            "neighbor_id": ids[order].reshape(-1)[keep],
-            "cosine": got[keep],
-            "rank": np.tile(np.arange(1, kk + 1, dtype=np.int32), len(q_ids))[keep],
-        }
-    )
+    return _lexsort_topk(q_ids, ids, sims, k, ranked=True)
 
 
 def _pairs_block(
@@ -545,21 +576,7 @@ def hard_negative_topk(
 
     def block(q_ids, q_mat, ids, mat):
         sims = _ordered_dot(q_mat[:, None, :], mat[None, :, :])
-        sims[(q_ids & 255)[:, None] == (ids & 255)[None, :]] = -np.inf
-        kk = min(k, len(ids))
-        order = np.lexsort((np.broadcast_to(ids, sims.shape), -sims), axis=-1)[:, :kk]
-        got = np.take_along_axis(sims, order, axis=1).reshape(-1)
-        keep = got > -np.inf
-        picked = ids[order].reshape(-1)[keep]
-        return pd.DataFrame(
-            {
-                "query_id": (np.repeat(q_ids, kk)[keep]) >> 8,
-                "neighbor_id": picked >> 8,
-                "neighbor_label": (picked & 255).astype(np.int32),
-                "cosine": got[keep],
-                "rank": np.tile(np.arange(1, kk + 1, dtype=np.int32), len(q_ids))[keep],
-            }
-        )
+        return _lexsort_topk(q_ids, ids, sims, k, ranked=True, packed_labels=True)
 
     schema = StructType(
         [

@@ -20,6 +20,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.window import Window
 
+from etl_covid19_brasil_spark.llm.similarity import _spread
 from etl_covid19_brasil_spark.registry import T, query
 
 _STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it", "on", "for")
@@ -30,31 +31,6 @@ def _tokens() -> F.Column:
     """Whitespace tokenization of pre-normalized text (documents.text is
     already lowercase word-soup; the regex strips any stray punctuation)."""
     return F.split(F.trim(F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9 ]", " ")), " +")
-
-
-def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Round-robin repartition a SMALL scan across every core BEFORE a
-    CPU-heavy per-row projection. A corpus table small enough to arrive as
-    one parquet split otherwise pins tokenize/shingle/hash work on a
-    single task (maxPartitionBytes sizes splits by bytes, not by the
-    compute they feed); the few-MB shuffle is noise next to the freed
-    parallelism.
-
-    r16 optimization round: conditional, matching llm/similarity._spread
-    — when the scan already arrives wide enough the repartition is
-    SKIPPED outright instead of issuing a full round-robin shuffle of
-    the corpus (the unconditional form re-shuffled every byte at real
-    scale for nothing). r17: the gate is scan BYTES
-    (llm/similarity._scan_parallel_enough), not file count — Spark
-    bin-packs small files into splits, so a many-tiny-file corpus
-    passed the old count gate yet arrived in a handful of tasks
-    (VERDICT r16 item 6)."""
-    from etl_covid19_brasil_spark.llm.similarity import _scan_parallel_enough
-
-    target = spark.sparkContext.defaultParallelism
-    if _scan_parallel_enough(df, target):
-        return df
-    return df.repartition(target)
 
 
 _O_TOKENS = "string_split_regex(trim(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g')), ' +')"
@@ -293,7 +269,7 @@ def ngram_profile(spark: SparkSession, sf: str) -> DataFrame:
     # tokenizer regex per bigram (O(len^2) per doc; the
     # dedup_substring_ngrams lesson, found via thread dump at the 8x
     # probe).
-    tok_df = _spread(spark, d).select(
+    tok_df = _spread(d).select(
         "doc_id", _tokens().alias("tk")
     ).localCheckpoint(eager=False)
     tk = F.col("tk")
@@ -361,7 +337,7 @@ def _shingle_hashes(tokens: F.Column) -> F.Column:
 def _near_dup_corpus(spark: SparkSession, sf: str) -> DataFrame:
     """documents plus a mutated copy (first 3 tokens dropped) of every
     third document, ids offset by 1M — deterministic near-dup pairs."""
-    d = _spread(spark, T(spark, sf, "documents")).select("doc_id", _tokens().alias("w"))
+    d = _spread(T(spark, sf, "documents")).select("doc_id", _tokens().alias("w"))
     mutated = d.filter(F.col("doc_id") % 3 == 0).select(
         (F.col("doc_id") + 1_000_000).alias("doc_id"),
         F.slice(F.col("w"), 4, F.greatest(F.size("w") - 3, F.lit(0))).alias("w"),
@@ -979,7 +955,7 @@ def ann_ivf_topk(spark: SparkSession, sf: str) -> DataFrame:
 )
 def doc_fingerprint_winnow(spark: SparkSession, sf: str) -> DataFrame:
     K, W, M = 7, 4, 1_000_000_007
-    d = _spread(spark, T(spark, sf, "documents")).filter(F.length("text") >= 10)
+    d = _spread(T(spark, sf, "documents")).filter(F.length("text") >= 10)
     chars = F.transform(F.split(F.col("text"), ""), lambda c: F.ascii(c).cast("long"))
     # Each stage checkpoints before the next positional lambda consumes
     # it: adjacent Projects otherwise collapse and the char/hash array
@@ -1296,7 +1272,7 @@ def _cc_parts(spark: SparkSession, sf: str) -> tuple[DataFrame, DataFrame]:
     assignment) — shared by the two duplicate-group queries."""
     from etl_covid19_brasil_spark.operators.concomp import connected_components
 
-    d = _spread(spark, T(spark, sf, "documents")).select("doc_id", _tokens().alias("w"))
+    d = _spread(T(spark, sf, "documents")).select("doc_id", _tokens().alias("w"))
 
     def gen(drop: int) -> DataFrame:
         return d.filter(F.col("doc_id") % 3 == 0).select(
@@ -2378,8 +2354,6 @@ def embedding_covariance_milli(spark: SparkSession, sf: str) -> DataFrame:
     # repartition the n-row side up to cluster parallelism first (a
     # shuffle of n thin rows, nothing at scale where the input already
     # has >= parallelism splits and _spread is a no-op).
-    from etl_covid19_brasil_spark.llm.similarity import _spread
-
     q = _spread(q)
     qv = F.col("qv")
     tri = F.flatten(
@@ -3016,7 +2990,7 @@ def dedup_prefix_truncation(spark: SparkSession, sf: str) -> DataFrame:
     "hash-exact on the fixed corpora).",
 )
 def dedup_substring_ngrams(spark: SparkSession, sf: str) -> DataFrame:
-    d = _spread(spark, T(spark, sf, "documents"))
+    d = _spread(T(spark, sf, "documents"))
     W = 8
     # Two-stage shingling with a MATERIALIZATION BARRIER between
     # tokenize and shingle. Single-stage formulations are a trap: the
@@ -3166,7 +3140,7 @@ def embedding_class_centroids(spark: SparkSession, sf: str) -> DataFrame:
     "aggregate shuffle on doc_id.",
 )
 def text_lexical_mattr(spark: SparkSession, sf: str) -> DataFrame:
-    d = _spread(spark, T(spark, sf, "documents"))
+    d = _spread(T(spark, sf, "documents"))
     W = 50
     # Materialization barrier between tokenize and the per-chunk lambda
     # (the dedup_substring_ngrams lesson): without it the token-array
@@ -3240,8 +3214,6 @@ def embedding_pca_power(spark: SparkSession, sf: str) -> DataFrame:
     # absorbs the d^2 blowup map-side and the only shuffle carries d^2
     # keys per partition. _spread parallelizes the blowup when the scan
     # arrives in fewer partitions than the cluster (no-op at scale).
-    from etl_covid19_brasil_spark.llm.similarity import _spread
-
     q = _spread(q)
     qv = F.col("qv")
     full = F.flatten(
@@ -3509,7 +3481,7 @@ def near_dedup_containment(spark: SparkSession, sf: str) -> DataFrame:
     "by docs x 64.",
 )
 def text_feature_hashing(spark: SparkSession, sf: str) -> DataFrame:
-    d = _spread(spark, T(spark, sf, "documents"))
+    d = _spread(T(spark, sf, "documents"))
     bucket = F.conv(F.substring(F.md5("token"), 1, 8), 16, 10).cast("long") % 64
     return (
         d.select("doc_id", F.explode(_tokens()).alias("token"))
@@ -3554,7 +3526,7 @@ def text_feature_hashing(spark: SparkSession, sf: str) -> DataFrame:
     "window argument of corpus_vocab_growth).",
 )
 def corpus_vocab_coverage(spark: SparkSession, sf: str) -> DataFrame:
-    d = _spread(spark, T(spark, sf, "documents"))
+    d = _spread(T(spark, sf, "documents"))
     tf = (
         d.select(F.explode(_tokens()).alias("token"))
         .groupBy("token")
@@ -3626,7 +3598,7 @@ def text_compression_ratio(spark: SparkSession, sf: str) -> DataFrame:
 
     comp_ppm = pandas_udf(_comp_ppm, "long")
 
-    d = _spread(spark, T(spark, sf, "documents"))
+    d = _spread(T(spark, sf, "documents"))
     return d.select(
         "doc_id",
         comp_ppm(F.col("text")).alias("compress_ppm"),
@@ -3856,7 +3828,7 @@ def media_image_phash_dedup(spark: SparkSession, sf: str) -> DataFrame:
         synth_ppm_near_dup_media,
     )
 
-    media = synth_ppm_near_dup_media(_spread(spark, T(spark, sf, "documents")))
+    media = synth_ppm_near_dup_media(_spread(T(spark, sf, "documents")))
     hashed = image_average_hash(media)
     return hashed.groupBy("phash").agg(
         F.count(F.lit(1)).alias("n_images"),
@@ -3886,7 +3858,7 @@ def media_audio_fingerprint_dedup(spark: SparkSession, sf: str) -> DataFrame:
         synth_wav_near_dup_media,
     )
 
-    media = synth_wav_near_dup_media(_spread(spark, T(spark, sf, "documents")))
+    media = synth_wav_near_dup_media(_spread(T(spark, sf, "documents")))
     fp = audio_energy_fingerprint(media)
     return fp.groupBy("fingerprint").agg(
         F.count(F.lit(1)).alias("n_clips"),
@@ -3917,7 +3889,7 @@ def media_video_phash_dedup(spark: SparkSession, sf: str) -> DataFrame:
         video_phash_signature,
     )
 
-    media = synth_video_near_dup_media(_spread(spark, T(spark, sf, "documents")))
+    media = synth_video_near_dup_media(_spread(T(spark, sf, "documents")))
     sig = video_phash_signature(media)
     return sig.groupBy("signature").agg(
         F.count(F.lit(1)).alias("n_videos"),
@@ -4043,7 +4015,7 @@ def rank_hybrid_rrf(spark: SparkSession, sf: str) -> DataFrame:
     # scoring (hash-sign fold over 64 components) measured 0.9 s pinned
     # on the scan's single split; round-robin across the cluster it is
     # embarrassingly parallel (guide §2.5 input-parallelism).
-    e = _spread(spark, T(spark, sf, "embeddings"))
+    e = _spread(T(spark, sf, "embeddings"))
     ne = F.transform(
         F.col("embedding"),
         lambda x: x.cast("double") / F.sqrt(_dot(F.col("embedding"), F.col("embedding"))),
@@ -4887,7 +4859,7 @@ def sample_importance_dsir(spark: SparkSession, sf: str) -> DataFrame:
     # shuffle, §2.4 share one exchange). All downstream sums weight by
     # c — exact integer arithmetic, bit-identical to the per-token sum.
     tb = (
-        _spread(spark, d)
+        _spread(d)
         .select("doc_id", "lang", F.explode(_tokens()).alias("token"))
         .withColumn("b", bucket.cast("int"))
         .groupBy("doc_id", "lang", "b")

@@ -246,24 +246,118 @@ def test_ann_search_query_collect_is_bounded_on_lying_estimate(spark, monkeypatc
     assert rows == ref and len(rows) > 0
 
 
-def test_ivf_search_kernels_are_fanout_sliced():
-    """Memory-guard pin (ADVICE r16 medium): _ivf_search's assign
-    kernels fan each input batch n_probe- / s_n-fold with full vectors,
-    so they must yield through _fanout_slices like every other fan-out
-    kernel in the family (_ivfpq_search, lsh_search) — one unsliced
-    yield at scale is the SCALECHECK_r12 OutOfDirectMemoryError shape.
-    The slice step is a worker-side constant unobservable at gate scale
-    (65536 output rows far exceeds any test batch), so pin the guard's
-    presence in the kernel source; bit-identity of sliced yields is
-    _fanout_slices' own contract (only Arrow framing changes)."""
-    import inspect
+def _emitters():
+    """Every shared emitter configuration the ANN tiers build: (name,
+    (emit, schema), output rows per input row). Broadcasts are stood in
+    by objects with a ``.value`` — the emitters are pure pandas."""
+    from types import SimpleNamespace as B
 
-    from etl_covid19_brasil_spark.llm.search import _ivf_search
+    from etl_covid19_brasil_spark.llm.ann import _band, _cells, _planes
 
-    src = inspect.getsource(_ivf_search)
-    assert src.count("_fanout_slices") >= 2, (
-        "_ivf_search lost its fan-out slicing guard"
+    rng = np.random.default_rng(5)
+    planes = B(value=_planes(5, 4, 8))  # T=5 tables of P=4 planes
+    cents = B(value=_unit(rng.normal(size=(16, 8))))
+    books = B(value=rng.normal(size=(4, 16, 2)))
+    pq_cols = ("cell", "vid", "vec", "codes", "is_index", "qs")
+    out = []
+    for role in ("both", "index", "query"):
+        # 2 query salts; LSH fan 1 + 4 flips, IVF 10 probes
+        band_rows = 5 * {"both": 5 + 1, "index": 2, "query": 5}[role]
+        cell_rows = {"both": 10 + 1, "index": 2, "query": 10}[role]
+        out.append((f"band-{role}", _band(role, planes, 2, 4, "vec_id", "embedding"), band_rows))
+        out.append((f"cells-{role}", _cells(role, cents, 10, 2, "vec_id", "embedding"), cell_rows))
+        pq = _cells(role, cents, 10, 2, "vec_id", "embedding", pq_cols, bc_books=books, residual=True)
+        # a codes payload never doubles: index rows go to every salt
+        out.append((f"cells-pq-{role}", pq, cell_rows + (role == "both")))
+        if role != "both":
+            adc = _band(role, planes, 2, 4, "vec_id", "embedding", bc_books=books)
+            out.append((f"band-adc-{role}", adc, band_rows))
+    return out
+
+
+def _batch(n, dim=8, seed=3):
+    rng = np.random.default_rng(seed)
+    return pd.DataFrame(
+        {"vec_id": np.arange(n, dtype=np.int64), "embedding": list(rng.normal(size=(n, dim)))}
     )
+
+
+def _row_bag(frame):
+    """Rows as a multiset of hashable tuples (arrays as tuples)."""
+    from collections import Counter
+
+    def cell(v):
+        return None if v is None else tuple(v) if hasattr(v, "__len__") else v
+
+    return Counter(tuple(cell(v) for v in r) for r in frame.itertuples(index=False))
+
+
+def test_emitters_slice_fanout_past_the_output_cap(monkeypatch):
+    """Memory guard (ADVICE r16 medium, SCALECHECK_r12's
+    OutOfDirectMemoryError shape): every shared emitter multiplies its
+    input rows by a fan-out, so one batch whose fan-out exceeds
+    _FANOUT_OUT_ROWS must yield more than one frame — each under the
+    cap — and the slices must carry exactly the rows one unsliced yield
+    would (only the Arrow framing changes). Covers every tier,
+    self-join and two-frame, through the emitters they share. The cap
+    is read at run time, so a lowered cap exercises the same slicing
+    on small batches."""
+    from etl_covid19_brasil_spark.llm import ann
+
+    cap = 4096
+    for name, (emit, schema), per_row in _emitters():
+        n = cap // per_row + 7
+        monkeypatch.setattr(ann, "_FANOUT_OUT_ROWS", cap)
+        frames = list(emit(iter([_batch(n)])))
+        assert len(frames) > 1, f"{name}: one unsliced yield of {n * per_row} rows"
+        assert all(len(f) <= cap for f in frames), name
+        assert sum(len(f) for f in frames) == n * per_row, name
+        assert list(frames[0].columns) == [c.split()[0] for c in schema.split(", ")]
+        monkeypatch.setattr(ann, "_FANOUT_OUT_ROWS", 10**9)
+        (whole,) = list(emit(iter([_batch(n)])))
+        assert _row_bag(pd.concat(frames)) == _row_bag(whole), name
+
+
+def test_codes_payload_index_rows_ship_no_vectors():
+    """The budget tiers' whole point (lsh_adc_search, ivfpq_topk,
+    _ivfpq_search): with a codes payload, index rows carry PQ codes and
+    a NULL vector, query rows the vector and null codes — in every role
+    that emits them."""
+    for name, (emit, _schema), _ in _emitters():
+        frame = pd.concat(list(emit(iter([_batch(50)]))), ignore_index=True)
+        if "codes" not in frame.columns:
+            assert frame["vec"].map(lambda v: v is not None).all(), name
+            continue
+        idx = frame[frame["is_index"] == 1]
+        qry = frame[frame["is_index"] == 0]
+        assert len(idx) + len(qry) > 0, name
+        assert idx["vec"].isna().all() and idx["codes"].notna().all(), name
+        assert qry["vec"].notna().all() and qry["codes"].isna().all(), name
+
+
+def test_self_join_and_two_frame_forms_are_one_operator(spark):
+    """The self-join entry points and the two-frame ones share their
+    emitters and kernels: with the corpus passed as both frames, the
+    two-frame LSH meet returns exactly lsh_topk's rows, and the
+    two-frame IVF meet exactly ivf_topk's (cosine and rank included) —
+    the layouts differ (one frame in the "both" role vs an index-role
+    plus a query-role frame), the operator does not."""
+    from etl_covid19_brasil_spark.io import load_table
+    from etl_covid19_brasil_spark.llm.ann import ivf_topk, kmeans_lloyd, lsh_topk
+    from etl_covid19_brasil_spark.llm.search import _ivf_search, lsh_search
+
+    def rows(df):
+        return sorted(
+            (r["query_id"], r["neighbor_id"], r["cosine"], r["rank"]) for r in df.collect()
+        )
+
+    e = load_table(spark, SF, "embeddings")
+    lsh = rows(lsh_topk(e, k=5))
+    assert len(lsh) > 0 and lsh == rows(lsh_search(e, e, k=5))
+    cents = kmeans_lloyd(e, k=16, iters=3)
+    ivf = rows(ivf_topk(e, k=5, centroids=cents, n_probe=10))
+    two = _ivf_search(e, e, 5, "vec_id", "embedding", cents, 10, e.count())
+    assert len(ivf) > 0 and ivf == rows(two)
 
 
 def test_lsh_search_recall_floor_on_gate_split(spark):
@@ -322,17 +416,26 @@ def test_lsh_search_recall_floor_at_8x_flat(spark):
         shutil.rmtree(path, ignore_errors=True)
 
 
-def test_lsh_adc_search_matches_bucket_recall_on_gate_split(spark):
+def test_lsh_adc_search_matches_bucket_recall_on_gate_split(spark, monkeypatch):
     """The ADC budget form shares lsh_search's planes/tables/fan/salting
     exactly, so at gate scale (small buckets, pool >> bucket) its result
     must match the full-vector form — the added approximation (ADC
     ranking inside the pool bound) has no room to bite here. Also pins
-    that the index side genuinely ships NO vectors (source pin on the
-    sign_index kernel's vec column)."""
-    import inspect
-
+    that the index side genuinely ships NO vectors: its index-role
+    emitter takes the codes payload, whose index rows carry a null
+    vector (test_codes_payload_index_rows_ship_no_vectors)."""
+    import etl_covid19_brasil_spark.llm.search as search_mod
     from etl_covid19_brasil_spark.io import load_table
     from etl_covid19_brasil_spark.llm.search import lsh_adc_search, lsh_search
+
+    built = []
+    orig = search_mod._band
+
+    def spy(role, *a, bc_books=None, **kw):
+        built.append((role, bc_books is not None))
+        return orig(role, *a, bc_books=bc_books, **kw)
+
+    monkeypatch.setattr(search_mod, "_band", spy)
 
     e = load_table(spark, SF, "embeddings")
     q, i = e.filter("vec_id % 20 = 0"), e.filter("vec_id % 20 <> 0")
@@ -347,8 +450,8 @@ def test_lsh_adc_search_matches_bucket_recall_on_gate_split(spark):
     r = len(adc & full) / len(full)
     print(f"lsh_adc_search gate recall vs full-vector form: {r:.3f}")
     assert r >= 0.95, f"ADC form diverged from the full-vector form: {r:.3f}"
-    src = inspect.getsource(lsh_adc_search)
-    assert '"vec": [None] * (len(ids) * rows),  # the budget: no vectors' in src
+    # lsh_search bands full vectors; lsh_adc_search codes its index side
+    assert built == [("index", False), ("query", False), ("index", True), ("query", True)]
 
 
 def test_ann_topk_auto_budget_routes_flat_to_adc(spark, monkeypatch):
