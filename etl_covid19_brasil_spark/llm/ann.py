@@ -65,9 +65,11 @@ from etl_covid19_brasil_spark.llm import similarity as _sim
 from etl_covid19_brasil_spark.llm.similarity import (
     _by_query_chunks,
     _estimate_rows,
+    _global_topk,
     _lexsort_topk,
     _normalize,
     _ordered_dot,
+    _pack_labels,
     _spread,
 )
 
@@ -440,24 +442,6 @@ def _adc_kernel(bc_books, depth: int, bc_cents=None):
         return _meet(pdf, pdf["is_index"] == 0, "codes", block, empty, cent)
 
     return kernel
-
-
-def _global_topk(local: DataFrame, k: int, dedup: bool = True) -> DataFrame:
-    """Merge per-group local top-k lists into the global per-query
-    top-k.
-
-    ``dedup=False`` (r16 optimization round): the IVF tiers deliver
-    each (query, neighbor) pair AT MOST ONCE by construction — an
-    index row lives in exactly ONE home cell and a query's probe cells
-    are distinct, so no pair can meet twice — and their dropDuplicates
-    was a full extra exchange spent deduplicating already-unique rows
-    (guide §2.4: "a distinct on data that is already unique"). The LSH
-    tiers keep the dedup: a pair collides in up to T tables x fan
-    probes."""
-    if dedup:
-        local = local.dropDuplicates(["query_id", "neighbor_id"])
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return local.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def _rerank_exact(
@@ -1254,8 +1238,9 @@ def ivf_topk(
     ``label_col``: when set, neighbors sharing the query's label are
     masked out inside the per-cell kernel — the ANN scale twin of
     :func:`similarity.hard_negative_topk` (labels ride PACKED into the
-    id, ``id * 256 + label``, exactly the packing the exact tier uses,
-    so the cell machinery is unchanged; output gains neighbor_label).
+    id through the exact tier's ``similarity._pack_labels``, so the cell
+    machinery is unchanged; output gains neighbor_label; a null label or
+    one outside [0, 255] raises).
 
     The second ANN scheme next to random-hyperplane LSH: partition the
     space into ``n_cells`` Voronoi cells around coarse centroids, assign
@@ -1293,14 +1278,7 @@ def ivf_topk(
     floor); pass ``n_probe`` explicitly for a pure-lazy builder.
     """
     if label_col is not None:
-        # pack label into the id's low byte (preserves vec_id ordering
-        # for tie-breaks; labels are small ints by contract)
-        embeddings = embeddings.select(
-            (F.col(id_col).cast("long") * 256 + F.col(label_col).cast("long")).alias(
-                id_col
-            ),
-            vec_col,
-        )
+        embeddings = _pack_labels(embeddings, id_col, vec_col, label_col)
     if centroids is not None:
         cent_mat = _normalize(np.asarray(centroids, dtype=np.float64))
     else:

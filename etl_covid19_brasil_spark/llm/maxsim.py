@@ -85,8 +85,9 @@ def _maxsim_score(
 ) -> DataFrame:
     """Exact MaxSim top-``k``: the bounded query side (n_query_docs x
     <= max_doc_tokens token vectors) broadcasts as a NUMPY MATRIX into
-    an Arrow kernel over the corpus token stream — the
-    `_broadcast_query_scan` pattern (llm/search.py) applied to
+    an Arrow kernel over the corpus token stream — the query-side
+    broadcast scan of ``ann_search`` (llm/similarity.py:
+    ``_broadcast_scan``) applied to
     late-interaction scoring (r16).
 
     Each batch computes EVERY (corpus token, query token) dot as one

@@ -1,30 +1,43 @@
-"""Brute-force cosine top-k: broadcast kernel for bounded indexes, a
-cogrouped block-nested-loop for indexes beyond broadcast size
-(SURVEY.md §2.10 similarity_topk).
+"""The exact-cosine tier: brute-force top-k, threshold pairs and
+label-masked hard negatives over one table (self-join), and the exact
+plans of the two-frame ``search.ann_search`` (SURVEY.md §2.10
+similarity_topk).
 
 The naive formulation — crossJoin + per-pair higher-order folds — is
 correct but interpreted per array element; at n=2000 vectors it spends
-~75 s materializing 4M pairs. These kernels keep the same *numerical
-semantics* while vectorizing over pairs:
+~75 s materializing 4M pairs. Every exact plan here runs the same
+vectorized machinery, and the entry points differ only in their block
+kernel (:func:`_topk_block`, :func:`_pairs_block`, the label-masked
+top-k) and output schema:
 
-- a SMALL index (<= ``max_index_rows``) is collected once (bounded
-  constant, the same discipline as ann.py's training samples) and rides
-  a broadcast into an Arrow kernel over the query stream — the classic
-  broadcast-kNN shape: zero shuffle, embarrassingly parallel in the
-  queries;
-- a LARGE index never touches the driver: the index is hash-tiled, the
+- **one guarded collect** (:func:`_collect_bounded`): the bounded side
+  is collected through a ``limit(bound + 1)`` probe, so a low row-count
+  estimate can never pull an over-bound side through the driver — the
+  probe IS the broadcast payload when it fits, and proves the side
+  over-bound when it does not (the caller then takes the
+  block-nested-loop). An empty side gives an empty result;
+- **one broadcast scan** (:func:`_broadcast_scan`): the collected side
+  rides a broadcast into an Arrow kernel over the other side's stream —
+  the classic broadcast-kNN shape, zero shuffle, embarrassingly
+  parallel. Either side can be the bounded one: the self-join callers
+  and ``ann_search``'s bounded-index tier broadcast the index,
+  ``ann_search``'s small-batch tier broadcasts the QUERIES and streams
+  the index without ever shuffling its vectors;
+- **one block-nested-loop** (:func:`_cogrouped_partials`): beyond the
+  bound the index never touches the driver — it is hash-tiled, the
   query stream is hash-salted into bounded blocks, and each (tile,
-  salt) pair of blocks meets in ONE ``cogroup().applyInPandas`` shuffle
-  — the doubly-blocked nested-loop join. Every (query, index) pair
-  meets exactly once (the query's salt x the index row's tile); peak
-  task memory is one index tile + one query block + one
+  salt) pair of blocks meets in ONE ``cogroup().applyInPandas``
+  shuffle. Every (query, index) pair meets exactly once; peak task
+  memory is one index tile + one query block + one
   SIMS_BUDGET_BYTES-bounded similarity slice (kernels are fed
-  query-row chunks, never a full block pair — see _by_query_chunks)
-  regardless of either side's total size, and no single machine
-  (driver included) ever holds the index. Per-block partial top-k candidates (n_q x k x
-  n_tiles rows, never the similarity matrix) merge under one window
-  re-rank. Exact all-pairs at that scale is a deliberate O(n_q x n)
-  spend — the ANN tier (llm/ann.py) is the sub-linear path;
+  query-row chunks — see _by_query_chunks). Exact all-pairs at that
+  scale is a deliberate O(n_q x n) spend — the ANN tier (llm/ann.py)
+  is the sub-linear path;
+- **one top-k merge** (:func:`_global_topk`, shared with every ANN
+  tier): per-task or per-block local top-k candidates (n_q x k x
+  n_tiles rows, never the similarity matrix) merge under one
+  row_number window that Spark 4 rewrites to a partial
+  WindowGroupLimit;
 - each kernel computes similarities **accumulating
   dimension-by-dimension in index order** (``acc += a[:, i] * b[:, i]``)
   — the exact IEEE operation sequence of ``F.aggregate(zip_with(a, b,
@@ -36,15 +49,16 @@ semantics* while vectorizing over pairs:
 - vectors are L2-normalized once per block (element / norm, norm from
   the same ordered fold), not per pair.
 
-Scale shape: zero shuffle in the single-tile path. The cogrouped path
-shuffles n_q x n_tiles + n_index x n_salts rows — both sides spread
-across the cluster, driver out of the data path entirely.
+Scale shape: zero shuffle in the index-broadcast plan. The cogrouped
+path shuffles n_q x n_tiles + n_index x n_salts rows — both sides
+spread across the cluster, driver out of the data path entirely.
 """
 
 from __future__ import annotations
 
 import math
 from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -143,39 +157,39 @@ def _scan_parallel_enough(df: DataFrame, target: int) -> bool:
     to parallelize. Bytes are the right proxy in both directions: a
     corpus under target x maxPartitionBytes is cheap to spread (the
     shuffle moves few bytes, the freed cores dominate), and one over it
-    already scans wide. File sizes come from the Hadoop FileSystem the
-    plan resolved; the loop exits as soon as the threshold is crossed,
-    so at real scale (big files) it stats a handful of files. Unknown
-    sizes / non-file sources return False — the spread is applied and
-    AQE coalesces it if it was unnecessary."""
-    files = df.inputFiles()
-    if not files:
-        return False
+    already scans wide.
+
+    Scan bytes are the ``sizeInBytes`` statistics of the optimized
+    plan's file-relation leaves (``LogicalRelation`` over a
+    ``HadoopFsRelation``: the file index's listed sizes, read when the
+    relation resolved) — no per-file ``getFileStatus`` call, so the
+    driver work is O(plan leaves), never O(files). Other leaves report
+    Spark's ``defaultSizeInBytes`` placeholder and are not counted.
+    Non-file sources, and plans whose statistics cannot be read, return
+    False — the spread is applied and AQE coalesces it if it was
+    unnecessary."""
     spark = df.sparkSession
-    sc = spark.sparkContext
     try:
         max_pb = int(
-            sc._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+            spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
                 spark.conf.get("spark.sql.files.maxPartitionBytes")
             )
         )
     except Exception:  # noqa: BLE001 — unparseable conf: assume default
         max_pb = 128 << 20
-    need = target * max_pb
-    jvm, hconf = sc._jvm, sc._jsc.hadoopConfiguration()
-    fs = None
-    total = 0
-    for f in files:
-        p = jvm.org.apache.hadoop.fs.Path(f)
-        if fs is None:
-            fs = p.getFileSystem(hconf)
-        try:
-            total += fs.getFileStatus(p).getLen()
-        except Exception:  # noqa: BLE001 — vanished/unstattable file
-            return False
-        if total >= need:
-            return True
-    return False
+    try:
+        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+        total = 0
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            if (
+                leaf.getClass().getSimpleName() == "LogicalRelation"
+                and leaf.relation().getClass().getSimpleName() == "HadoopFsRelation"
+            ):
+                total += int(str(leaf.stats().sizeInBytes()))
+    except Exception:  # noqa: BLE001 — py4j surface drift: spread
+        return False
+    return total >= target * max_pb
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -272,18 +286,22 @@ def _cogrouped_partials(
     vectors: DataFrame,
     id_col: str,
     vec_col: str,
-    n_tiles: int,
-    n_salts: int,
+    n_q: int,
+    n_idx: int,
+    bound: int,
     block_fn,
     schema: StructType,
 ) -> DataFrame:
-    """Driver-free block-nested-loop: index hash-tiled, queries
-    hash-salted, every (tile, salt) block pair meets in one cogrouped
-    applyInPandas. The shuffle carries n_q * n_tiles + n_index * n_salts
-    rows; no collect, no broadcast, peak task memory = one index tile +
-    one query block."""
-    # Parallelism floor (r16): the callers derive tiles/salts from
-    # MEMORY bounds (MAX_INDEX_ROWS / QUERY_BLOCK_ROWS), which near the
+    """Driver-free block-nested-loop: index hash-tiled into
+    ``ceil(n_idx / bound)`` tiles, queries hash-salted into
+    ``ceil(n_q / QUERY_BLOCK_ROWS)`` blocks, every (tile, salt) block
+    pair meets in one cogrouped applyInPandas. The shuffle carries
+    n_q * n_tiles + n_index * n_salts rows; no collect, no broadcast,
+    peak task memory = one index tile + one query block."""
+    n_tiles = max(1, math.ceil(n_idx / bound))
+    n_salts = max(1, math.ceil(n_q / QUERY_BLOCK_ROWS))
+    # Parallelism floor (r16): tiles/salts derive from MEMORY bounds
+    # (the index bound / QUERY_BLOCK_ROWS), which near the
     # broadcast bound yields a 2x1 grid — the whole O(n_q x n_idx)
     # kernel then runs in TWO applyInPandas groups while 30 of 32 cores
     # idle (observed live: the 32x two-frame BNL probe sat in a
@@ -433,14 +451,129 @@ def _estimate_rows(df: DataFrame) -> int:
     return df.count()
 
 
-def _bounded_index(vectors: DataFrame, id_col: str, vec_col: str):
-    """Collect a small index ONCE as (ids, normalized matrix) — callers
-    guarantee the row bound, keeping this a constant-size transfer (the
-    same bounded-collect discipline as ann.py's training samples)."""
-    pdf = vectors.select(id_col, vec_col).toPandas()
-    return pdf[id_col].to_numpy(dtype=np.int64), _normalize(
-        np.stack(pdf[vec_col].to_numpy())
+def _collect_bounded(
+    df: DataFrame, id_col: str, vec_col: str, bound: int
+) -> "pd.DataFrame | None":
+    """The ONE driver collect of the exact tier: ``df``'s (id, vector)
+    rows through a ``limit(bound + 1)`` probe — the bounded side
+    itself, or None when the probe proves the side over ``bound``.
+
+    Row-count estimates only decide whether to PROBE; the probe bounds
+    the collect, so a low estimate (a post-filter CBO selectivity
+    guess, a lying caller hint) can never pull an unbounded side
+    through the driver — the caller degrades to the block-nested-loop
+    with ``bound + 1`` as the true lower bound on the side's rows. An
+    in-bound probe IS the broadcast payload, so there is no second
+    driver transit (the same bounded-collect discipline as ann.py's
+    training samples)."""
+    pdf = df.select(id_col, vec_col).limit(bound + 1).toPandas()
+    return pdf if len(pdf) <= bound else None
+
+
+def _broadcast_scan(
+    bounded: pd.DataFrame,
+    streamed: DataFrame,
+    id_col: str,
+    vec_col: str,
+    block_fn,
+    schema: StructType,
+    bounded_queries: bool = False,
+) -> DataFrame:
+    """Broadcast the collected ``bounded`` side once and stream the
+    other side, _spread, through ``block_fn`` in query-row chunks
+    (:func:`_by_query_chunks`). ``bounded_queries``: the broadcast side
+    holds the QUERIES and ``streamed`` the index — the index's vectors
+    never shuffle, and each scan task emits its local per-query
+    candidates for :func:`_global_topk` to merge. Otherwise the
+    broadcast side is the index and each streamed row's result is
+    final. The broadcast side stays the q side of ``block_fn`` either
+    way, so ranks and tie-breaks are the same in both roles. An empty
+    bounded side gives an empty ``schema`` frame."""
+    spark = streamed.sparkSession
+    if bounded.empty:  # zero-row side: zero-row result, not np.stack([])
+        return spark.createDataFrame([], schema=schema)
+    ids = bounded[id_col].to_numpy(dtype=np.int64)
+    bc = spark.sparkContext.broadcast((ids, _normalize(np.stack(bounded[vec_col].to_numpy()))))
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        b = bc.value
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            s_ids = pdf[id_col].to_numpy(dtype=np.int64)
+            s = (s_ids, _normalize(np.stack(pdf[vec_col].to_numpy())))
+            yield _by_query_chunks(block_fn, *(b + s if bounded_queries else s + b))
+
+    return _spread(streamed.select(id_col, vec_col)).mapInPandas(kernel, schema=schema)
+
+
+def _global_topk(local: DataFrame, k: int, dedup: bool = True) -> DataFrame:
+    """Merge per-group local top-k lists into the global per-query
+    top-k.
+
+    ``dedup=False`` (r16 optimization round): the IVF tiers deliver
+    each (query, neighbor) pair AT MOST ONCE by construction — an
+    index row lives in exactly ONE home cell and a query's probe cells
+    are distinct, so no pair can meet twice — and their dropDuplicates
+    was a full extra exchange spent deduplicating already-unique rows
+    (guide §2.4: "a distinct on data that is already unique"). The LSH
+    tiers keep the dedup: a pair collides in up to T tables x fan
+    probes."""
+    if dedup:
+        local = local.dropDuplicates(["query_id", "neighbor_id"])
+    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
+    return local.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _pack_labels(df: DataFrame, id_col: str, vec_col: str, label_col: str) -> DataFrame:
+    """(``id * 256 + label``, vector) rows: the label rides PACKED into
+    the id's low byte, so the shared tiling / cell machinery carries it
+    unchanged — the packed id preserves vec_id ordering for tie-breaks
+    (label bits only distinguish equal ids, which never tie) and kernels
+    recover ``label = id & 255``. Exact for vec_id < 2^55 (pinned by
+    test_hard_negative_id_packing_bounds).
+
+    A label outside [0, 255] (or null) would silently corrupt both the
+    unpacked id and the label, so every row is checked inside the same
+    projection: ``F.raise_error`` fails the first action that reads a
+    bad row. The check is lazy — no extra job."""
+    label = F.col(label_col).cast("long")
+    msg = F.format_string(
+        "%s must be an integer in [0, 255] to pack into the id; got %s",
+        F.lit(label_col),
+        F.col(label_col),
     )
+    checked = F.when(label.between(0, 255), label).otherwise(F.raise_error(msg))
+    return df.select((F.col(id_col).cast("long") * 256 + checked).alias(id_col), vec_col)
+
+
+def _exact_self_join(
+    vectors: DataFrame,
+    id_col: str,
+    vec_col: str,
+    block_fn,
+    schema: StructType,
+    k: "int | None",
+    max_index_rows: int,
+    n_rows: "int | None",
+) -> DataFrame:
+    """The self-join exact plan every entry point below shares: under
+    the bound (``n_rows`` hint, else plan statistics — no extra scan,
+    see _estimate_rows) the guarded collect feeds one broadcast scan;
+    beyond it, or when the probe proves the estimate low, the cogrouped
+    block-nested-loop. With ``k`` its per-block top-k candidates merge
+    through :func:`_global_topk`; ``k=None`` keeps every emitted row.
+    Both plans are bit-identical (same ordered fold, same tie-break)."""
+    n = n_rows if n_rows is not None else _estimate_rows(vectors)
+    if n <= max_index_rows:
+        side = _collect_bounded(vectors, id_col, vec_col, max_index_rows)
+        if side is not None:
+            return _broadcast_scan(side, vectors, id_col, vec_col, block_fn, schema)
+        n = max_index_rows + 1
+    local = _cogrouped_partials(
+        vectors, vectors, id_col, vec_col, n, n, max_index_rows, block_fn, schema
+    )
+    return local if k is None else _global_topk(local, k, dedup=False)
 
 
 def cosine_pairs_above(
@@ -458,32 +591,9 @@ def cosine_pairs_above(
     declarative SQL formulation (same ordered fold). ``n_rows`` is a
     caller hint for the tier choice; when omitted, plan statistics are
     used (no extra scan — see _estimate_rows)."""
-    n = n_rows if n_rows is not None else _estimate_rows(vectors)
-    n_tiles = max(1, math.ceil(n / max_index_rows))
-    if n_tiles == 1:
-        spark = vectors.sparkSession
-        bc = spark.sparkContext.broadcast(_bounded_index(vectors, id_col, vec_col))
-
-        def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            ids, mat = bc.value
-            for pdf in batches:
-                q_ids = pdf[id_col].to_numpy(dtype=np.int64)
-                q_mat = _normalize(np.stack(pdf[vec_col].to_numpy()))
-                yield _by_query_chunks(_pairs_block, q_ids, q_mat, ids, mat, threshold)
-
-        return _spread(vectors.select(id_col, vec_col)).mapInPandas(
-            kernel, schema=PAIRS_SCHEMA
-        )
-    n_salts = max(1, math.ceil(n / QUERY_BLOCK_ROWS))
-    return _cogrouped_partials(
-        vectors,
-        vectors,
-        id_col,
-        vec_col,
-        n_tiles,
-        n_salts,
-        lambda q_ids, q_mat, ids, mat: _pairs_block(q_ids, q_mat, ids, mat, threshold),
-        PAIRS_SCHEMA,
+    block = partial(_pairs_block, threshold=threshold)
+    return _exact_self_join(
+        vectors, id_col, vec_col, block, PAIRS_SCHEMA, None, max_index_rows, n_rows
     )
 
 
@@ -507,37 +617,9 @@ def brute_force_topk(
     similarity matrix, and the index never transits the driver.
     ``n_rows`` is a caller hint for the tier choice; when omitted, plan
     statistics are used (no extra scan — see _estimate_rows)."""
-    n = n_rows if n_rows is not None else _estimate_rows(embeddings)
-    n_tiles = max(1, math.ceil(n / max_index_rows))
-    if n_tiles == 1:
-        spark = embeddings.sparkSession
-        bc = spark.sparkContext.broadcast(_bounded_index(embeddings, id_col, vec_col))
-
-        def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            ids, mat = bc.value
-            for pdf in batches:
-                q_ids = pdf[id_col].to_numpy(dtype=np.int64)
-                q_mat = _normalize(np.stack(pdf[vec_col].to_numpy()))
-                yield _by_query_chunks(_topk_block, q_ids, q_mat, ids, mat, k)
-
-        return _spread(embeddings.select(id_col, vec_col)).mapInPandas(
-            kernel, schema=TOPK_SCHEMA
-        )
-    n_salts = max(1, math.ceil(n / QUERY_BLOCK_ROWS))
-    merged = _cogrouped_partials(
-        embeddings,
-        embeddings,
-        id_col,
-        vec_col,
-        n_tiles,
-        n_salts,
-        lambda q_ids, q_mat, ids, mat: _topk_block(q_ids, q_mat, ids, mat, k),
-        TOPK_SCHEMA,
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        merged.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
+    block = partial(_topk_block, k=k)
+    return _exact_self_join(
+        embeddings, id_col, vec_col, block, TOPK_SCHEMA, k, max_index_rows, n_rows
     )
 
 
@@ -558,21 +640,11 @@ def hard_negative_topk(
 
     Scale shape: IDENTICAL to brute_force_topk — the label constraint is
     a mask inside the per-block kernel, not a join. Labels ride through
-    the shared tiling machinery PACKED into the id (``id * 256 + label``;
-    labels are small ints by contract, asserted below), so both tiers —
-    bounded broadcast index and the cogrouped block-nested-loop — work
-    unchanged: the packed id preserves vec_id ordering for tie-breaks
-    (label bits only distinguish equal ids, which never tie) and the
-    kernel recovers ``label = id & 255`` with two shifts. The mask sets
-    same-label similarities to -inf, which also covers the self-pair.
+    the shared exact plans PACKED into the id (:func:`_pack_labels`;
+    labels must be integers in [0, 255] — a null or out-of-range label
+    raises), and the kernel's mask sets same-label similarities to
+    -inf, which also covers the self-pair.
     """
-    spark = embeddings.sparkSession
-    packed = embeddings.select(
-        (F.col(id_col).cast("long") * 256 + F.col(label_col).cast("long")).alias(
-            id_col
-        ),
-        vec_col,
-    )
 
     def block(q_ids, q_mat, ids, mat):
         sims = _ordered_dot(q_mat[:, None, :], mat[None, :, :])
@@ -587,25 +659,9 @@ def hard_negative_topk(
             StructField("rank", IntegerType()),
         ]
     )
-    n = n_rows if n_rows is not None else _estimate_rows(embeddings)
-    n_tiles = max(1, math.ceil(n / max_index_rows))
-    if n_tiles == 1:
-        bc = spark.sparkContext.broadcast(_bounded_index(packed, id_col, vec_col))
-
-        def kernel(batches):
-            ids, mat = bc.value
-            for pdf in batches:
-                q_ids = pdf[id_col].to_numpy(dtype=np.int64)
-                q_mat = _normalize(np.stack(pdf[vec_col].to_numpy()))
-                yield _by_query_chunks(block, q_ids, q_mat, ids, mat)
-
-        return _spread(packed).mapInPandas(kernel, schema=schema)
-    n_salts = max(1, math.ceil(n / QUERY_BLOCK_ROWS))
-    merged = _cogrouped_partials(
-        packed, packed, id_col, vec_col, n_tiles, n_salts, block, schema
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        merged.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
+    if n_rows is None:  # route on the caller's frame, not the packed projection
+        n_rows = _estimate_rows(embeddings)
+    packed = _pack_labels(embeddings, id_col, vec_col, label_col)
+    return _exact_self_join(
+        packed, id_col, vec_col, block, schema, k, max_index_rows, n_rows
     )

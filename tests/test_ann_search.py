@@ -200,6 +200,27 @@ def test_ann_search_empty_index(spark):
     assert ann_search(e, e.filter("vec_id < 0"), k=5).count() == 0
 
 
+def _spy_exact_tier(monkeypatch, search_mod):
+    """Record every guarded collect ``ann_search`` makes, as (bound,
+    collected row count or None when over-bound), and the id set of
+    every side that reaches the broadcast scan."""
+    probes, scans = [], []
+    collect, scan = search_mod._collect_bounded, search_mod._broadcast_scan
+
+    def spy_collect(df, id_col, vec_col, bound):
+        side = collect(df, id_col, vec_col, bound)
+        probes.append((bound, None if side is None else len(side)))
+        return side
+
+    def spy_scan(bounded, *args, **kwargs):
+        scans.append({int(v) for v in bounded["vec_id"]})
+        return scan(bounded, *args, **kwargs)
+
+    monkeypatch.setattr(search_mod, "_collect_bounded", spy_collect)
+    monkeypatch.setattr(search_mod, "_broadcast_scan", spy_scan)
+    return probes, scans
+
+
 def test_ann_search_query_collect_is_bounded_on_lying_estimate(spark, monkeypatch):
     """The broadcast-query tier's driver collect must be gated by an
     EXACT bound probe, not the Catalyst estimate (VERDICT r15
@@ -222,14 +243,7 @@ def test_ann_search_query_collect_is_bounded_on_lying_estimate(spark, monkeypatc
     # shrink the broadcast bound so the 200-row query side is over it
     monkeypatch.setattr(search_mod, "QUERY_BROADCAST_MAX", 50)
 
-    captured = []
-    orig = search_mod._broadcast_query_scan
-
-    def spy(*args, **kwargs):
-        captured.append(kwargs.get("q_pdf"))
-        return orig(*args, **kwargs)
-
-    monkeypatch.setattr(search_mod, "_broadcast_query_scan", spy)
+    probes, scans = _spy_exact_tier(monkeypatch, search_mod)
     # n_queries=1 lies low — exactly the CBO undershoot shape
     got = ann_search(
         q, i, k=5, route=flat, n_index=MAX_INDEX_ROWS + 1, n_queries=1
@@ -237,8 +251,10 @@ def test_ann_search_query_collect_is_bounded_on_lying_estimate(spark, monkeypatc
     rows = sorted(
         (r["query_id"], r["neighbor_id"], r["rank"]) for r in got.collect()
     )
-    # the over-bound batch never reached the broadcast tier
-    assert captured == [], "lying estimate still routed the driver collect"
+    # the guarded collect probed the batch against the bound and proved
+    # it over-bound; the over-bound batch never reached the broadcast scan
+    assert probes == [(50, None)], probes
+    assert scans == [], "lying estimate still routed the driver collect"
     ref = sorted(
         (r["query_id"], r["neighbor_id"], r["rank"])
         for r in ann_search(q, i, k=5).collect()
@@ -358,6 +374,39 @@ def test_self_join_and_two_frame_forms_are_one_operator(spark):
     ivf = rows(ivf_topk(e, k=5, centroids=cents, n_probe=10))
     two = _ivf_search(e, e, 5, "vec_id", "embedding", cents, 10, e.count())
     assert len(ivf) > 0 and ivf == rows(two)
+
+
+def test_exact_self_join_equals_two_frame(spark):
+    """The exact tier is one operator: the self-join
+    ``brute_force_topk(e)`` and the two-frame ``ann_search(e, e)``
+    share the guarded collect, the broadcast scan, the block-nested-
+    loop and the top-k merge, so they return the same rows — cosine
+    and rank included — under the bound (index broadcast) and forced
+    onto the block-nested-loop."""
+    from etl_covid19_brasil_spark.io import load_table
+    from etl_covid19_brasil_spark.llm.ann import TierRoute
+    from etl_covid19_brasil_spark.llm.search import (
+        MAX_INDEX_ROWS,
+        QUERY_BROADCAST_MAX,
+        ann_search,
+    )
+    from etl_covid19_brasil_spark.llm.similarity import brute_force_topk
+
+    def rows(df):
+        return sorted(
+            (r["query_id"], r["neighbor_id"], r["cosine"], r["rank"]) for r in df.collect()
+        )
+
+    e = load_table(spark, SF, "embeddings")
+    bounded = rows(brute_force_topk(e, k=5))
+    assert len(bounded) > 0 and bounded == rows(ann_search(e, e, k=5))
+    flat = TierRoute("lsh", MAX_INDEX_ROWS + 1, 0, None)
+    bnl_two = ann_search(
+        e, e, k=5, route=flat,
+        n_index=MAX_INDEX_ROWS + 1, n_queries=QUERY_BROADCAST_MAX + 1,
+    )
+    bnl_self = rows(brute_force_topk(e, k=5, max_index_rows=64))
+    assert bnl_self == bounded and bnl_self == rows(bnl_two)
 
 
 def test_lsh_search_recall_floor_on_gate_split(spark):
@@ -617,20 +666,19 @@ def test_ann_search_index_collect_is_bounded_on_lying_estimate(spark, monkeypatc
     # shrink the bound so the 300-row index side is over it
     monkeypatch.setattr(search_mod, "MAX_INDEX_ROWS", 50)
 
-    full_collects = []
-    orig = search_mod._broadcast_index_search
-
-    def spy(*args, **kwargs):
-        full_collects.append(kwargs.get("i_pdf"))
-        return orig(*args, **kwargs)
-
-    monkeypatch.setattr(search_mod, "_broadcast_index_search", spy)
+    probes, scans = _spy_exact_tier(monkeypatch, search_mod)
     # n_index=1 lies low — the probe must catch it
     got = ann_search(q, i, k=5, n_index=1)
     rows = sorted(
         (r["query_id"], r["neighbor_id"], r["rank"]) for r in got.collect()
     )
-    assert full_collects == [], "lying estimate still routed the full collect"
+    # the first probe is the index's, against the shrunk bound, and it
+    # proved the side over-bound; no broadcast scan ever carried an
+    # index row (the flat route may still broadcast the 100-row QUERY
+    # batch — every broadcast id must be a query id)
+    assert probes[0] == (50, None), probes
+    q_ids = {r["vec_id"] for r in q.select("vec_id").collect()}
+    assert all(ids <= q_ids for ids in scans), "lying estimate still routed the full collect"
     monkeypatch.undo()
     ref = sorted(
         (r["query_id"], r["neighbor_id"], r["rank"])

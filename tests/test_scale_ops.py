@@ -486,6 +486,74 @@ def test_hard_negative_id_packing_bounds():
     assert overflowed < 0
 
 
+def _labelled(spark, labels):
+    """40 random 8-d vectors whose labels cycle through ``labels``."""
+    import numpy as np
+
+    rng = np.random.default_rng(3)
+    rows = [
+        (i, [float(x) for x in rng.normal(size=8)], labels[i % len(labels)])
+        for i in range(40)
+    ]
+    return spark.createDataFrame(rows, "vec_id bigint, embedding array<double>, label int")
+
+
+@pytest.mark.parametrize("labels", [(0, 300), (0, None)], ids=["out_of_range", "null"])
+def test_label_packing_rejects_labels_outside_a_byte(spark, labels):
+    """Labels ride packed into the id's low byte (id * 256 + label). A
+    label outside [0, 255] used to bleed into the id bits — phantom
+    query ids and wrong neighbor labels, silently — so both packing
+    entry points must raise instead."""
+    from etl_covid19_brasil_spark.llm.ann import ivf_topk
+    from etl_covid19_brasil_spark.llm.similarity import hard_negative_topk
+
+    df = _labelled(spark, labels)
+    with pytest.raises(Exception, match=r"must be an integer in \[0, 255\]"):
+        hard_negative_topk(df, k=3).collect()
+    with pytest.raises(Exception, match=r"must be an integer in \[0, 255\]"):
+        ivf_topk(df, k=3, n_cells=4, n_probe=2, label_col="label").collect()
+    # in range: no error, and every mined neighbor is other-class
+    ok = hard_negative_topk(_labelled(spark, (0, 255)), k=3).collect()
+    assert ok and all(r["neighbor_label"] == (0 if r["query_id"] % 2 else 255) for r in ok)
+
+
+@pytest.mark.parametrize(
+    "entry", ["brute_force_topk", "cosine_pairs_above", "hard_negative_topk", "ann_search"]
+)
+def test_exact_tier_empty_input_returns_empty_frame(spark, entry):
+    """A zero-row input gives a zero-row result with the entry point's
+    declared schema (not ``ValueError: need at least one array to
+    stack`` from the bounded collect)."""
+    from pyspark.sql.types import DoubleType, IntegerType, LongType
+
+    from etl_covid19_brasil_spark.llm import similarity
+    from etl_covid19_brasil_spark.llm.search import ann_search
+
+    empty = load_table(spark, SF, "embeddings").filter("vec_id < 0")
+    topk = [
+        ("query_id", LongType()),
+        ("neighbor_id", LongType()),
+        ("cosine", DoubleType()),
+        ("rank", IntegerType()),
+    ]
+    calls = {
+        "brute_force_topk": (lambda: similarity.brute_force_topk(empty), topk),
+        "cosine_pairs_above": (
+            lambda: similarity.cosine_pairs_above(empty, 0.5),
+            [("id_a", LongType()), ("id_b", LongType()), ("cosine", DoubleType())],
+        ),
+        "hard_negative_topk": (
+            lambda: similarity.hard_negative_topk(empty),
+            topk[:2] + [("neighbor_label", IntegerType())] + topk[2:],
+        ),
+        "ann_search": (lambda: ann_search(empty, empty), topk),
+    }
+    build, schema = calls[entry]
+    got = build()
+    assert [(f.name, f.dataType) for f in got.schema] == schema
+    assert got.count() == 0
+
+
 def test_estimate_rows_fallback_chain_degrades_not_raises(spark):
     """_estimate_rows reaches into private `_jdf.queryExecution()` py4j
     internals — the most version-fragile code in the tree. Pin the
@@ -1015,3 +1083,35 @@ def test_spread_gate_is_bytes_based(spark, tmp_path):
     # it when unnecessary), matching the documented contract
     local = spark.range(10)
     assert not _scan_parallel_enough(local, target)
+
+
+def test_spread_gate_never_lists_files(spark, tmp_path, monkeypatch):
+    """The bytes gate reads the plan's file-relation statistics, never
+    the file list: with ``DataFrame.inputFiles`` patched to raise it
+    still decides, and its byte total is exactly the data files' sizes
+    (the threshold flips between total // target and one byte more per
+    split)."""
+    import glob
+    import os
+
+    from etl_covid19_brasil_spark.llm.similarity import _scan_parallel_enough
+
+    target = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "files")
+    spark.range(target * 2).repartition(target * 2).write.parquet(path)
+    df = spark.read.parquet(path)
+    total = sum(os.path.getsize(f) for f in glob.glob(f"{path}/part-*.parquet"))
+
+    def listed(self):
+        raise AssertionError("the spread gate listed the input files")
+
+    monkeypatch.setattr(type(df), "inputFiles", listed)
+    assert not _scan_parallel_enough(df, target)
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    try:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", f"{total // target}b")
+        assert _scan_parallel_enough(df, target)
+        spark.conf.set("spark.sql.files.maxPartitionBytes", f"{total // target + 1}b")
+        assert not _scan_parallel_enough(df, target)
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
