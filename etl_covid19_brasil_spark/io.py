@@ -620,13 +620,17 @@ def upsert_partitions(
     scalable ingest pattern for an append-mostly partitioned lake (e.g.
     re-landing one state/date of the covid feed); row-level merge needs
     :func:`merge_by_key` or a table format (Delta/Iceberg).
+
+    The mode is a per-write option, not the session conf: sinks run on
+    concurrent driver threads (``etl.run_tasks_parallel``), and a
+    flip-and-restore of the shared conf could leave the session dynamic.
     """
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_by)
+        .parquet(path)
+    )
 
 
 def _swap_table_dir(path: str, staging: str) -> None:

@@ -30,7 +30,9 @@ Scale notes:
   edge set (count + order-insensitive hash-sum), not a subtract/except
   (which would add two more shuffles per round);
 - labels only ever DECREASE, so the loop is monotone and the iteration
-  cap is a safety net, not a tuning knob.
+  cap is a safety net, not a tuning knob: running out of rounds before
+  the fixed point is seen raises instead of returning a half-contracted
+  edge set (nodes carrying two component ids).
 """
 
 from __future__ import annotations
@@ -101,6 +103,11 @@ def connected_components(
     ``edges`` is an undirected edge list (direction and duplicates are
     ignored). ``nodes``, if given, adds isolated vertices so singletons
     come back as their own component. Returns ``(node, component_id)``.
+
+    ``max_iter`` caps the rounds until the fixed point is OBSERVED — one
+    more than the rounds that reach the star forest, since convergence is
+    only seen when a round leaves the edge set unchanged. Raises
+    ``RuntimeError`` when the cap runs out first.
     """
     cur = _canon(edges, src, dst).localCheckpoint(eager=False)
     fp = _fingerprint(cur)
@@ -111,6 +118,10 @@ def connected_components(
         if nfp == fp:
             break
         fp = nfp
+    else:
+        raise RuntimeError(
+            f"connected_components: no fixed point within max_iter={max_iter} rounds"
+        )
     # Star forest: non-root nodes point at their root (u > v = root).
     member = cur.select(F.col("u").alias("node"), F.col("v").alias("component_id"))
     roots = cur.select(F.col("v").alias("node"), F.col("v").alias("component_id")).distinct()

@@ -16,6 +16,8 @@ Design for 100 TB:
 
 from __future__ import annotations
 
+import functools
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.window import Window
@@ -334,15 +336,20 @@ def _shingle_hashes(tokens: F.Column) -> F.Column:
     return F.when(F.size(tokens) >= 3, gram).otherwise(F.array().cast("array<long>"))
 
 
-def _near_dup_corpus(spark: SparkSession, sf: str) -> DataFrame:
-    """documents plus a mutated copy (first 3 tokens dropped) of every
-    third document, ids offset by 1M — deterministic near-dup pairs."""
+def _near_dup_corpus(spark: SparkSession, sf: str, drops: tuple[int, ...] = (3,)) -> DataFrame:
+    """documents plus, for every third document, one mutated copy per
+    entry of ``drops`` (first ``k`` tokens dropped, id offset by k/3 * 1M)
+    — deterministic near-dup pairs, or groups of len(drops) + 1."""
     d = _spread(T(spark, sf, "documents")).select("doc_id", _tokens().alias("w"))
-    mutated = d.filter(F.col("doc_id") % 3 == 0).select(
-        (F.col("doc_id") + 1_000_000).alias("doc_id"),
-        F.slice(F.col("w"), 4, F.greatest(F.size("w") - 3, F.lit(0))).alias("w"),
-    )
-    return d.unionByName(mutated)
+    out = d
+    for k in drops:
+        out = out.unionByName(
+            d.filter(F.col("doc_id") % 3 == 0).select(
+                (F.col("doc_id") + k // 3 * 1_000_000).alias("doc_id"),
+                F.slice(F.col("w"), k + 1, F.greatest(F.size("w") - k, F.lit(0))).alias("w"),
+            )
+        )
+    return out
 
 
 _O_CORPUS = f"""
@@ -359,6 +366,44 @@ _O_CORPUS = f"""
 # identical; at sf0.1+ the cap keeps the cross join at ~1.8M pairs while
 # the LSH tiers run the full corpus.
 _JACCARD_CAP = 1000
+
+
+def _shingle_sets(corpus: DataFrame, *extra: F.Column) -> DataFrame:
+    """``(doc_id, sh, *extra)`` over the capped corpus: ``sh`` is the
+    distinct hashed 3-shingle set. Hashes, not strings: |A∩B| and |A| are
+    identical either way (xxhash64 collisions aside, ~n^2/2^64), and
+    long arrays cut the quadratic pair stage ~3x (see _shingle_hashes).
+    Lazily checkpointed — every exact tier reads the sets more than once
+    (both posting sides, sizes, verification)."""
+    return (
+        corpus.filter(F.col("doc_id") % 1_000_000 < _JACCARD_CAP)
+        .select("doc_id", F.array_distinct(_shingle_hashes(F.col("w"))).alias("sh"), *extra)
+        .localCheckpoint(eager=False)
+    )
+
+
+def _posting_pairs(d: DataFrame) -> DataFrame:
+    """Exact set-similarity candidates by the POSTING-LIST formulation:
+    explode each ``(doc_id, sh, *extra)`` set, self-join on the shingle
+    value with ``a.doc_id < b.doc_id`` and count — the group count IS
+    |A∩B|, and pairs sharing no shingle never materialize, so work tracks
+    real co-occurrence instead of all O(n^2) pairs (the shuffle key is the
+    shingle hash; Zipf-hot shingles would be the skew to salt, but 3-gram
+    shingles are near-unique by construction). Returns ``(doc_a, doc_b,
+    inter)`` joined to both sides ``sa``/``sb`` = ``(doc_id, sz, *extra)``
+    with ``sz`` = |set| as a long; each caller applies its own gate."""
+    ex = d.select("doc_id", F.explode("sh").alias("s"))
+    cand = (
+        ex.alias("a")
+        .join(ex.alias("b"), (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
+    extra = [c for c in d.columns if c not in ("doc_id", "sh")]
+    sides = d.select("doc_id", F.size("sh").cast("long").alias("sz"), *extra)
+    return cand.join(sides.alias("sa"), F.col("doc_a") == F.col("sa.doc_id")).join(
+        sides.alias("sb"), F.col("doc_b") == F.col("sb.doc_id")
+    )
 
 
 @query(
@@ -397,24 +442,9 @@ _JACCARD_CAP = 1000
     "bounded-signature cost.",
 )
 def near_dedup_jaccard(spark: SparkSession, sf: str) -> DataFrame:
-    d = (
-        _near_dup_corpus(spark, sf)
-        .filter(F.col("doc_id") % 1_000_000 < _JACCARD_CAP)
-        .select("doc_id", F.array_distinct(_shingle_hashes(F.col("w"))).alias("sh"))
-        .localCheckpoint(eager=False)  # feeds the posting join twice + sizes
-    )
-    ex = d.select("doc_id", F.explode("sh").alias("s"))
-    cand = (
-        ex.alias("a")
-        .join(ex.alias("b"), (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sizes = d.select("doc_id", F.size("sh").cast("long").alias("sz"))
     union = F.col("sa.sz") + F.col("sb.sz") - F.col("inter")
     return (
-        cand.join(sizes.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sizes.alias("sb"), F.col("doc_b") == F.col("sb.doc_id"))
+        _posting_pairs(_shingle_sets(_near_dup_corpus(spark, sf)))
         .filter(F.col("inter") * 5 >= union * 4)
         .select(
             "doc_a",
@@ -465,33 +495,12 @@ def near_dedup_jaccard(spark: SparkSession, sf: str) -> DataFrame:
     "built-in levenshtein — no UDF.",
 )
 def near_dedup_verify_edit(spark: SparkSession, sf: str) -> DataFrame:
-    d = (
-        _near_dup_corpus(spark, sf)
-        .filter(F.col("doc_id") % 1_000_000 < _JACCARD_CAP)
-        .select(
-            "doc_id",
-            F.array_distinct(_shingle_hashes(F.col("w"))).alias("sh"),
-            F.substring(F.array_join(F.col("w"), " "), 1, 200).alias("norm"),
-        )
-        .localCheckpoint(eager=False)  # feeds posting join twice + rescoring
-    )
-    ex = d.select("doc_id", F.explode("sh").alias("s"))
-    cand = (
-        ex.alias("a")
-        .join(
-            ex.alias("b"),
-            (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sides = d.select("doc_id", F.size("sh").cast("long").alias("sz"), "norm")
+    norm = F.substring(F.array_join(F.col("w"), " "), 1, 200).alias("norm")
     union = F.col("sa.sz") + F.col("sb.sz") - F.col("inter")
     max_len = F.greatest(F.length("sa.norm"), F.length("sb.norm")).cast("long")
     dist = F.levenshtein(F.col("sa.norm"), F.col("sb.norm")).cast("long")
     return (
-        cand.join(sides.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sides.alias("sb"), F.col("doc_b") == F.col("sb.doc_id"))
+        _posting_pairs(_shingle_sets(_near_dup_corpus(spark, sf), norm))
         .filter(F.col("inter") * 2 >= union)
         .select(
             "doc_a",
@@ -1015,6 +1024,41 @@ def sample_hash_split(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+def _decontam_parts(spark: SparkSession, sf: str) -> tuple[DataFrame, DataFrame]:
+    """``(tr, ev)``: the training shingle stream ``(doc_id, n_shingles,
+    s)`` and the distinct eval shingle vocabulary ``(s)`` — docs with
+    doc_id % 100 == 0 stand in for the benchmark."""
+    docs = T(spark, sf, "documents").select("doc_id", _shingles(_tokens()).alias("sh"))
+    ev = (
+        docs.filter(F.col("doc_id") % 100 == 0)
+        .select(F.explode("sh").alias("s"))
+        .distinct()
+    )
+    tr = docs.filter(F.col("doc_id") % 100 != 0).select(
+        "doc_id", F.size("sh").alias("n_shingles"), F.explode("sh").alias("s")
+    )
+    return tr, ev
+
+
+def _contamination(tr: DataFrame, ev: DataFrame) -> DataFrame:
+    """Per training doc: overlapping shingles with the broadcast eval
+    vocabulary and their share. Shingle arrays are distinct per doc, so
+    COUNT(*) counts distinct overlapping shingles."""
+    return (
+        tr.join(F.broadcast(ev), "s")
+        .groupBy("doc_id", "n_shingles")
+        .agg(F.count(F.lit(1)).alias("n_contaminated"))
+        .select(
+            "doc_id",
+            "n_shingles",
+            "n_contaminated",
+            (F.col("n_contaminated").cast("double") / F.col("n_shingles")).alias(
+                "contamination"
+            ),
+        )
+    )
+
+
 @query(
     "decontaminate_ngram_overlap",
     oracle=f"""
@@ -1044,30 +1088,7 @@ def sample_hash_split(spark: SparkSession, sf: str) -> DataFrame:
     "overlapping shingles.",
 )
 def decontaminate_ngram_overlap(spark: SparkSession, sf: str) -> DataFrame:
-    docs = T(spark, sf, "documents").select(
-        "doc_id", _shingles(_tokens()).alias("sh")
-    )
-    ev = (
-        docs.filter(F.col("doc_id") % 100 == 0)
-        .select(F.explode("sh").alias("s"))
-        .distinct()
-    )
-    tr = docs.filter(F.col("doc_id") % 100 != 0).select(
-        "doc_id", F.size("sh").alias("n_shingles"), F.explode("sh").alias("s")
-    )
-    return (
-        tr.join(F.broadcast(ev), "s")
-        .groupBy("doc_id", "n_shingles")
-        .agg(F.count(F.lit(1)).alias("n_contaminated"))
-        .select(
-            "doc_id",
-            "n_shingles",
-            "n_contaminated",
-            (F.col("n_contaminated").cast("double") / F.col("n_shingles")).alias(
-                "contamination"
-            ),
-        )
-    )
+    return _contamination(*_decontam_parts(spark, sf))
 
 
 @query(
@@ -1272,55 +1293,18 @@ def _cc_parts(spark: SparkSession, sf: str) -> tuple[DataFrame, DataFrame]:
     assignment) — shared by the two duplicate-group queries."""
     from etl_covid19_brasil_spark.operators.concomp import connected_components
 
-    d = _spread(T(spark, sf, "documents")).select("doc_id", _tokens().alias("w"))
-
-    def gen(drop: int) -> DataFrame:
-        return d.filter(F.col("doc_id") % 3 == 0).select(
-            (F.col("doc_id") + drop // 3 * 1_000_000).alias("doc_id"),
-            F.slice(
-                F.col("w"), drop + 1, F.greatest(F.size("w") - drop, F.lit(0))
-            ).alias("w"),
-        )
-
-    t3 = (
-        d.unionByName(gen(3)).unionByName(gen(6))
-        .filter(F.col("doc_id") % 1_000_000 < _JACCARD_CAP)
-        # hashed distinct shingles, not strings: |A∩B| and |A| are identical
-        # either way (xxhash64 collisions aside, ~n^2/2^64), and long-array
-        # intersects cut the quadratic pair stage ~3x (see _shingle_hashes)
-        .select(
-            "doc_id",
-            F.array_distinct(_shingle_hashes(F.col("w"))).alias("sh"),
-            F.size("w").cast("long").alias("n_tokens"),
-        )
-        # shingling is the expensive projection and feeds BOTH the pair join
-        # sides and the node list — materialize it once
-        .localCheckpoint(eager=False)
+    t3 = _shingle_sets(
+        _near_dup_corpus(spark, sf, drops=(3, 6)), F.size("w").cast("long").alias("n_tokens")
     )
-    # Candidate pairs via explode + equi-join on the shingle value: the
-    # group count IS |A∩B|, and pairs sharing nothing never materialize.
-    # This replaces an all-pairs O(n^2) array-intersect join with work
-    # proportional to actual shingle co-occurrence — the posting-list
-    # formulation that survives a 100x corpus scale-up (the shuffle key
-    # is the shingle hash; Zipf-hot shingles would be the skew to salt,
-    # but 3-gram shingles are near-unique by construction).
-    ex = t3.select("doc_id", F.explode("sh").alias("s"))
-    cand = (
-        ex.alias("a")
-        .join(ex.alias("b"), (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sizes = t3.select("doc_id", F.size("sh").alias("sz"))
+    # candidate pairs: the shared posting-list join (see _posting_pairs)
     edges = (
-        cand.join(sizes.alias("sa"), F.col("src") == F.col("sa.doc_id"))
-        .join(sizes.alias("sb"), F.col("dst") == F.col("sb.doc_id"))
+        _posting_pairs(t3.select("doc_id", "sh"))
         .filter(
             F.col("inter").cast("double")
             / (F.col("sa.sz") + F.col("sb.sz") - F.col("inter"))
             >= 0.8
         )
-        .select("src", "dst")
+        .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     )
     comp = connected_components(edges, nodes=t3, node_col="doc_id").select(
         F.col("node").alias("doc_id"), "component_id"
@@ -2625,6 +2609,49 @@ _O_BPE_STEP = """
     )"""
 
 
+def _bpe_round(seq: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """One BPE training round over ``(doc_id, pos, tok)`` — the Spark side
+    of _O_BPE_STEP: lag/lead window, adjacent-pair count, top-1 pick
+    (count desc, lexicographic tie-break), broadcast per-position merge,
+    renumbering window. Returns ``(top, next_seq)``: the 1-row ``(x, y,
+    n)`` merge and the merged sequence, lineage truncated by a lazy
+    localCheckpoint."""
+    w = Window.partitionBy("doc_id").orderBy("pos")
+    s = seq.select(
+        "doc_id",
+        "pos",
+        "tok",
+        F.lead("tok").over(w).alias("nxt"),
+        F.lag("tok").over(w).alias("prv"),
+    )
+    c = (
+        s.filter(F.col("nxt").isNotNull() & (F.col("tok") != F.col("nxt")))
+        .groupBy(F.col("tok").alias("x"), F.col("nxt").alias("y"))
+        .agg(F.count(F.lit(1)).cast("long").alias("n"))
+    )
+    top = c.orderBy(F.desc("n"), F.asc("x"), F.asc("y")).limit(1)
+    merged = (
+        s.crossJoin(F.broadcast(top))
+        .filter(
+            F.col("prv").isNull()
+            | (F.col("prv") != F.col("x"))
+            | (F.col("tok") != F.col("y"))
+        )
+        .select(
+            "doc_id",
+            "pos",
+            F.when(
+                (F.col("tok") == F.col("x")) & (F.col("nxt") == F.col("y")),
+                F.concat("tok", F.lit("_"), F.col("y")),
+            )
+            .otherwise(F.col("tok"))
+            .alias("tok"),
+        )
+    )
+    renumbered = merged.select("doc_id", F.row_number().over(w).alias("pos"), "tok")
+    return top, renumbered.localCheckpoint(eager=False)
+
+
 @query(
     "bpe_train_merges",
     oracle=f"""
@@ -2662,24 +2689,10 @@ _O_BPE_STEP = """
     "thousands of merges; the per-round plan is identical.",
 )
 def bpe_train_merges(spark: SparkSession, sf: str) -> DataFrame:
-    d = T(spark, sf, "documents")
-    seq = d.select("doc_id", F.posexplode(_tokens()).alias("pos", "tok"))
+    seq = T(spark, sf, "documents").select("doc_id", F.posexplode(_tokens()).alias("pos", "tok"))
     tops = []
     for step_no in (1, 2, 3):
-        w = Window.partitionBy("doc_id").orderBy("pos")
-        s = seq.select(
-            "doc_id",
-            "pos",
-            "tok",
-            F.lead("tok").over(w).alias("nxt"),
-            F.lag("tok").over(w).alias("prv"),
-        )
-        c = (
-            s.filter(F.col("nxt").isNotNull() & (F.col("tok") != F.col("nxt")))
-            .groupBy(F.col("tok").alias("x"), F.col("nxt").alias("y"))
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        )
-        t = c.orderBy(F.desc("n"), F.asc("x"), F.asc("y")).limit(1)
+        t, seq = _bpe_round(seq)
         tops.append(
             t.select(
                 F.lit(step_no).alias("step"),
@@ -2687,35 +2700,7 @@ def bpe_train_merges(spark: SparkSession, sf: str) -> DataFrame:
                 F.col("n").alias("n_merges"),
             )
         )
-        merged = (
-            s.crossJoin(F.broadcast(t))
-            .filter(
-                F.col("prv").isNull()
-                | (F.col("prv") != F.col("x"))
-                | (F.col("tok") != F.col("y"))
-            )
-            .select(
-                "doc_id",
-                "pos",
-                F.when(
-                    (F.col("tok") == F.col("x")) & (F.col("nxt") == F.col("y")),
-                    F.concat("tok", F.lit("_"), F.col("y")),
-                )
-                .otherwise(F.col("tok"))
-                .alias("tok"),
-            )
-        )
-        seq = merged.select(
-            "doc_id",
-            F.row_number()
-            .over(Window.partitionBy("doc_id").orderBy("pos"))
-            .alias("pos"),
-            "tok",
-        ).localCheckpoint(eager=False)
-    out = tops[0]
-    for t_df in tops[1:]:
-        out = out.unionByName(t_df)
-    return out
+    return functools.reduce(DataFrame.unionByName, tops)
 
 
 @query(
@@ -2750,52 +2735,12 @@ def bpe_train_merges(spark: SparkSession, sf: str) -> DataFrame:
     "rounds, making apply a pure map-side pass per merge).",
 )
 def bpe_apply_merges(spark: SparkSession, sf: str) -> DataFrame:
-    d = T(spark, sf, "documents")
-    seq = d.select("doc_id", F.posexplode(_tokens()).alias("pos", "tok"))
+    seq = T(spark, sf, "documents").select("doc_id", F.posexplode(_tokens()).alias("pos", "tok"))
     before = seq.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_tokens_raw")
     )
     for _ in range(3):
-        w = Window.partitionBy("doc_id").orderBy("pos")
-        s = seq.select(
-            "doc_id",
-            "pos",
-            "tok",
-            F.lead("tok").over(w).alias("nxt"),
-            F.lag("tok").over(w).alias("prv"),
-        )
-        c = (
-            s.filter(F.col("nxt").isNotNull() & (F.col("tok") != F.col("nxt")))
-            .groupBy(F.col("tok").alias("x"), F.col("nxt").alias("y"))
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        )
-        t = c.orderBy(F.desc("n"), F.asc("x"), F.asc("y")).limit(1)
-        seq = (
-            s.crossJoin(F.broadcast(t))
-            .filter(
-                F.col("prv").isNull()
-                | (F.col("prv") != F.col("x"))
-                | (F.col("tok") != F.col("y"))
-            )
-            .select(
-                "doc_id",
-                "pos",
-                F.when(
-                    (F.col("tok") == F.col("x")) & (F.col("nxt") == F.col("y")),
-                    F.concat("tok", F.lit("_"), F.col("y")),
-                )
-                .otherwise(F.col("tok"))
-                .alias("tok"),
-            )
-            .select(
-                "doc_id",
-                F.row_number()
-                .over(Window.partitionBy("doc_id").orderBy("pos"))
-                .alias("pos"),
-                "tok",
-            )
-            .localCheckpoint(eager=False)
-        )
+        _, seq = _bpe_round(seq)
     after = seq.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_tokens_bpe")
     )
@@ -3324,12 +3269,7 @@ def embedding_pca_power(spark: SparkSession, sf: str) -> DataFrame:
     "standard exact set-similarity join used at corpus scale.",
 )
 def near_dedup_prefix_filter(spark: SparkSession, sf: str) -> DataFrame:
-    d = (
-        _near_dup_corpus(spark, sf)
-        .filter(F.col("doc_id") % 1_000_000 < _JACCARD_CAP)
-        .select("doc_id", F.array_distinct(_shingle_hashes(F.col("w"))).alias("sh"))
-        .localCheckpoint(eager=False)  # feeds postings, prefix ranks, verify
-    )
+    d = _shingle_sets(_near_dup_corpus(spark, sf))
     ex = d.select(
         "doc_id", F.size("sh").cast("long").alias("sz"), F.explode("sh").alias("s")
     )
@@ -3417,26 +3357,8 @@ def near_dedup_prefix_filter(spark: SparkSession, sf: str) -> DataFrame:
     "here too with per-side prefix length |A| - ceil(0.9|A|) + 1.",
 )
 def near_dedup_containment(spark: SparkSession, sf: str) -> DataFrame:
-    d = (
-        _near_dup_corpus(spark, sf)
-        .filter(F.col("doc_id") % 1_000_000 < _JACCARD_CAP)
-        .select("doc_id", F.array_distinct(_shingle_hashes(F.col("w"))).alias("sh"))
-        .localCheckpoint(eager=False)  # feeds postings twice + sizing
-    )
-    ex = d.select("doc_id", F.explode("sh").alias("s"))
-    cand = (
-        ex.alias("a")
-        .join(
-            ex.alias("b"),
-            (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sizes = d.select("doc_id", F.size("sh").cast("long").alias("sz"))
     sized = (
-        cand.join(sizes.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sizes.alias("sb"), F.col("doc_b") == F.col("sb.doc_id"))
+        _posting_pairs(_shingle_sets(_near_dup_corpus(spark, sf)))
         .select(
             "doc_a", "doc_b", "inter",
             F.col("sa.sz").alias("sz_a"), F.col("sb.sz").alias("sz_b"),
@@ -4448,15 +4370,7 @@ def curation_perplexity_filter(spark: SparkSession, sf: str) -> DataFrame:
 def decontaminate_bloom_prefilter(spark: SparkSession, sf: str) -> DataFrame:
     from etl_covid19_brasil_spark.operators.bloom import build_bloom, might_contain
 
-    docs = T(spark, sf, "documents").select("doc_id", _shingles(_tokens()).alias("sh"))
-    ev = (
-        docs.filter(F.col("doc_id") % 100 == 0)
-        .select(F.explode("sh").alias("s"))
-        .distinct()
-    )
-    tr = docs.filter(F.col("doc_id") % 100 != 0).select(
-        "doc_id", F.size("sh").alias("n_shingles"), F.explode("sh").alias("s")
-    )
+    tr, ev = _decontam_parts(spark, sf)
     num_bits, n_hashes = 1 << 15, 3
     bf = build_bloom(ev, "s", num_bits, n_hashes).withColumnRenamed("bf", "__bf")
     pruned = (
@@ -4464,19 +4378,7 @@ def decontaminate_bloom_prefilter(spark: SparkSession, sf: str) -> DataFrame:
         .filter(might_contain(F.col("__bf"), F.col("s"), num_bits, n_hashes))
         .drop("__bf")
     )
-    return (
-        pruned.join(F.broadcast(ev), "s")
-        .groupBy("doc_id", "n_shingles")
-        .agg(F.count(F.lit(1)).alias("n_contaminated"))
-        .select(
-            "doc_id",
-            "n_shingles",
-            "n_contaminated",
-            (F.col("n_contaminated").cast("double") / F.col("n_shingles")).alias(
-                "contamination"
-            ),
-        )
-    )
+    return _contamination(pruned, ev)
 
 
 @query(

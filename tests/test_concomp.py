@@ -120,6 +120,14 @@ def test_long_path_converges_within_log_rounds(spark):
     assert got == {(i, 1) for i in range(1, 201)}
 
 
+def test_exhausted_max_iter_raises(spark):
+    # the same path needs 9 rounds to OBSERVE its fixed point; a cap of 3
+    # used to return the half-contracted edge set (nodes with two ids)
+    e = _edges(spark, [(i, i + 1) for i in range(1, 200)])
+    with pytest.raises(RuntimeError, match="max_iter=3"):
+        connected_components(e, max_iter=3)
+
+
 def test_minhash_components_equal_exact_pair_components(spark):
     """The composed approximate pipeline (minhash -> LSH -> verify ->
     concomp, dedup_minhash_components) must produce EXACTLY the same

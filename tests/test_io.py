@@ -330,7 +330,21 @@ def test_sink_parquet_clustered_disjoint_file_ranges(spark, tmp_path):
         assert hi1 <= lo2, f"overlapping file ranges: {(lo1, hi1)} vs {(lo2, hi2)}"
 
 
-def test_upsert_partitions_touches_only_incoming(spark, tmp_path):
+def test_upsert_partitions_touches_only_incoming(spark, tmp_path, monkeypatch):
+    from pyspark.sql.conf import RuntimeConfig
+
+    # dynamic overwrite must be a per-write option: flipping the shared
+    # session conf races with upserts on concurrent driver threads
+    key = "spark.sql.sources.partitionOverwriteMode"
+    session_mode = spark.conf.get(key)
+    keys_set = []
+    real_set = RuntimeConfig.set
+
+    def spy(self, k, v):
+        keys_set.append(k)
+        return real_set(self, k, v)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
     out = str(tmp_path / "plake")
     base = spark.createDataFrame(
         [(1, "a", 10), (2, "a", 20), (3, "b", 30)], ["id", "pk", "v"]
@@ -341,6 +355,8 @@ def test_upsert_partitions_touches_only_incoming(spark, tmp_path):
     io.upsert_partitions(spark, patch.select("id", "v", "pk"), out, partition_by=["pk"])
     got = {(r["id"], r["pk"], r["v"]) for r in spark.read.parquet(out).collect()}
     assert got == {(9, "a", 99), (3, "b", 30)}
+    assert key not in keys_set
+    assert spark.conf.get(key) == session_mode
 
 
 def test_merge_by_key_upserts_and_keeps(spark, tmp_path):
