@@ -6,12 +6,18 @@ metadata struct; decode / feature-extract run as Arrow-batched
 time (the only sane shape for media decoding on a cluster — per-row UDFs
 pay the serialization tax per record).
 
-The actual media codecs (PIL/ffmpeg/torchaudio) are NOT present in this
-environment, so the decode kernel is stubbed: ``decode_image_stub`` raises
-``NotImplementedError`` unless ``fake=True``, in which case it emits a
-deterministic fake feature vector derived from the payload bytes. The
-Spark-side plumbing — schema, batching, partitioning — is real and tested
-(tests/test_multimodal.py).
+PPM (P6), PNG and WAV decode for real with numpy and the stdlib; JPEG
+needs Pillow (import-gated in :func:`decode_image`). Only
+:func:`extract_features` is a stub: its byte-histogram "feature" stands in
+for a learned image embedding.
+
+Every media stage is one of two kernel shapes:
+
+- a synthesizer, :func:`_synth_media`: documents ``(doc_id, n_chars)`` in,
+  ``MEDIA_SCHEMA`` rows out, one ``make(doc_id, n_chars)`` per format;
+- a per-payload feature stage, :func:`_map_payloads`: media
+  ``(media_id, payload)`` in, ``media_id`` plus one tuple of features per
+  payload out, typed by a DDL schema.
 """
 
 from __future__ import annotations
@@ -66,11 +72,10 @@ def documents_as_media(documents: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Real decoders — no external codecs required.
 #
-# PPM (P6) and WAV (RIFF) are fully parseable with numpy + the stdlib,
-# so the decode tier is genuinely real for those formats; PNG/JPEG route
-# through PIL when it is installed (import-gated — this container has no
-# media libs, real deployments pip-install Pillow and the same dispatcher
-# lights up).
+# PPM (P6), PNG and WAV (RIFF) are fully parseable with numpy + the
+# stdlib, so the decode tier is genuinely real for those formats; JPEG
+# routes through PIL when it is installed (import-gated — real
+# deployments pip-install Pillow and the same dispatcher lights up).
 # ---------------------------------------------------------------------------
 
 
@@ -83,35 +88,44 @@ def encode_ppm(pixels) -> bytes:
     return f"P6\n{w} {h}\n255\n".encode("ascii") + arr.tobytes()
 
 
-def decode_ppm(payload: bytes):
-    """Parse a binary P6 PPM: returns (width, height, (h, w, 3) uint8).
+def _ppm_frame(data: bytes, pos: int = 0):
+    """Parse the P6 frame starting at ``data[pos]``: returns (width,
+    height, (h, w, 3) uint8, offset just past the raster).
 
     Real format parsing — magic, whitespace-delimited header tokens
-    (comments included), maxval check, then the raw pixel plane.
+    (comments included), maxval and dimension checks, then the raw pixel
+    plane.
     """
     import numpy as np
 
-    if not payload.startswith(b"P6"):
-        raise ValueError("not a P6 PPM payload")
+    if data[pos : pos + 2] != b"P6":
+        raise ValueError(f"not a P6 PPM frame at offset {pos}")
     # header = magic + 3 integer tokens; '#' comments run to end-of-line
     tokens: list[bytes] = []
-    pos = 2
+    pos += 2
     while len(tokens) < 3:
-        while pos < len(payload) and payload[pos : pos + 1].isspace():
+        while pos < len(data) and data[pos : pos + 1].isspace():
             pos += 1
-        if payload[pos : pos + 1] == b"#":
-            pos = payload.index(b"\n", pos) + 1
+        if data[pos : pos + 1] == b"#":
+            pos = data.index(b"\n", pos) + 1
             continue
         start = pos
-        while pos < len(payload) and not payload[pos : pos + 1].isspace():
+        while pos < len(data) and not data[pos : pos + 1].isspace():
             pos += 1
-        tokens.append(payload[start:pos])
+        tokens.append(data[start:pos])
     pos += 1  # single whitespace after maxval, then raster
     w, h, maxval = (int(t) for t in tokens)
     if maxval != 255:
         raise ValueError(f"only maxval=255 supported, got {maxval}")
-    plane = np.frombuffer(payload, dtype=np.uint8, count=w * h * 3, offset=pos)
-    return w, h, plane.reshape(h, w, 3)
+    if w <= 0 or h <= 0:
+        raise ValueError(f"PPM dimensions must be positive, got {w}x{h}")
+    plane = np.frombuffer(data, dtype=np.uint8, count=w * h * 3, offset=pos)
+    return w, h, plane.reshape(h, w, 3), pos + w * h * 3
+
+
+def decode_ppm(payload: bytes):
+    """Parse a binary P6 PPM: returns (width, height, (h, w, 3) uint8)."""
+    return _ppm_frame(payload)[:3]
 
 
 def encode_wav(samples, sample_rate: int = 8000) -> bytes:
@@ -320,6 +334,8 @@ def decode_png(payload: bytes):
             f"unsupported PNG shape: depth={depth} comp={comp} "
             f"filter={filt_method} interlace={interlace}"
         )
+    if w <= 0 or h <= 0:
+        raise ValueError(f"PNG dimensions must be positive, got {w}x{h}")
     bpp = {0: 1, 2: 3, 6: 4}.get(color)
     if bpp is None:
         raise ValueError(f"unsupported PNG color type {color}")
@@ -411,77 +427,74 @@ def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
     return media.mapInPandas(kernel, schema=FEATURE_SCHEMA)
 
 
-def synth_ppm_media(documents: DataFrame) -> DataFrame:
-    """Synthesize a REAL P6 PPM image per document (deterministic pixels
-    derived from doc_id, width from n_chars) — gives the decode tier true
-    image bytes to parse without vendoring binary fixtures."""
+# ---------------------------------------------------------------------------
+# The two kernel shapes every synthesizer and feature stage below is built
+# from.
+# ---------------------------------------------------------------------------
+
+
+def _synth_media(documents: DataFrame, media_type: str, height: int, make) -> DataFrame:
+    """Synthesizer kernel: one ``mapInPandas`` over ``(doc_id, n_chars)``
+    that emits ``MEDIA_SCHEMA`` rows. ``make(doc_id, n_chars)`` returns
+    that document's ``(media_id, payload, width)`` rows (near-duplicate
+    corpora return a source and its perturbed copy); ``media_type`` and
+    ``height`` are the same for every row."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
         for pdf in batches:
-            payloads = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                w = max(int(n_chars), 1)
-                v = (int(doc_id) * 7 + np.arange(2 * w)) % 256
-                pixels = np.repeat(v.astype(np.uint8), 3).reshape(2, w, 3)
-                payloads.append(encode_ppm(pixels))
+            rows = [
+                row
+                for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"])
+                for row in make(int(doc_id), int(n_chars))
+            ]
             yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "media_type": "image",
-                    "payload": payloads,
-                    "meta_width": pdf["n_chars"].clip(lower=1).astype("int64"),
-                    "meta_height": 2,
-                }
-            )
+                rows, columns=["media_id", "payload", "meta_width"]
+            ).assign(media_type=media_type, meta_height=height)
 
     return documents.select("doc_id", "n_chars").mapInPandas(
         kernel, schema=MEDIA_SCHEMA
     )
 
 
-def image_ppm_features(media: DataFrame) -> DataFrame:
-    """Decode P6 PPM payloads (real format parsing, decode_ppm) and emit
-    scalar image statistics: dimensions, pixel count, integer luminance
-    sum and milli-mean — the exact-integer feature shape that stays
-    hash-comparable across engines."""
+def _map_payloads(media: DataFrame, fn, schema: str) -> DataFrame:
+    """Per-payload feature kernel: one ``mapInPandas`` over
+    ``(media_id, payload)``. ``fn(payload_bytes)`` returns the values that
+    follow ``media_id`` in the DDL ``schema``, which also names the output
+    columns."""
+    columns = [field.split()[0] for field in schema.split(",")]
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, arr = decode_ppm(bytes(payload))
-                lum = int(arr[:, :, 0].astype("int64").sum())
-                rows.append(
-                    (
-                        int(media_id),
-                        w,
-                        h,
-                        w * h,
-                        lum,
-                        lum * 1000 // (w * h),
-                    )
-                )
             yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "width",
-                    "height",
-                    "n_pixels",
-                    "sum_lum",
-                    "mean_lum_milli",
+                [
+                    (int(media_id), *fn(bytes(payload)))
+                    for media_id, payload in zip(pdf["media_id"], pdf["payload"])
                 ],
+                columns=columns,
             )
 
-    return media.select("media_id", "payload").mapInPandas(
-        kernel,
-        schema=(
-            "media_id long, width long, height long, n_pixels long, "
-            "sum_lum long, mean_lum_milli long"
-        ),
-    )
+    return media.select("media_id", "payload").mapInPandas(kernel, schema=schema)
+
+
+def _doc_pixels(doc_id: int, w: int, shift: int = 0, modulus: int = 256):
+    """A document's synthetic picture: 2 rows of ``w`` grey RGB pixels,
+    pixel i = (doc_id*7 + shift + i) % modulus."""
+    import numpy as np
+
+    v = (doc_id * 7 + shift + np.arange(2 * w)) % modulus
+    return np.repeat(v.astype(np.uint8), 3).reshape(2, w, 3)
+
+
+def synth_ppm_media(documents: DataFrame) -> DataFrame:
+    """Synthesize a REAL P6 PPM image per document (deterministic pixels
+    derived from doc_id, width from n_chars) — gives the decode tier true
+    image bytes to parse without vendoring binary fixtures."""
+
+    def make(doc_id: int, n_chars: int):
+        w = max(n_chars, 1)
+        return [(doc_id, encode_ppm(_doc_pixels(doc_id, w)), w)]
+
+    return _synth_media(documents, "image", 2, make)
 
 
 def synth_png_media(documents: DataFrame, max_width: int = 256) -> DataFrame:
@@ -493,131 +506,65 @@ def synth_png_media(documents: DataFrame, max_width: int = 256) -> DataFrame:
     run exercises every filter branch of the decoder on real PNG bytes.
     """
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def make(doc_id: int, n_chars: int):
+        w = min(max(n_chars, 1), max_width)
+        filters = [(doc_id + r) % 5 for r in range(2)]
+        return [(doc_id, encode_png(_doc_pixels(doc_id, w), filters=filters), w)]
 
-        for pdf in batches:
-            payloads, widths = [], []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                w = min(max(int(n_chars), 1), max_width)
-                v = (int(doc_id) * 7 + np.arange(2 * w)) % 256
-                pixels = np.repeat(v.astype(np.uint8), 3).reshape(2, w, 3)
-                filters = [(int(doc_id) + r) % 5 for r in range(2)]
-                payloads.append(encode_png(pixels, filters=filters))
-                widths.append(w)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "media_type": "image",
-                    "payload": payloads,
-                    "meta_width": pd.Series(widths, dtype="int64"),
-                    "meta_height": 2,
-                }
-            )
-
-    return documents.select("doc_id", "n_chars").mapInPandas(
-        kernel, schema=MEDIA_SCHEMA
-    )
+    return _synth_media(documents, "image", 2, make)
 
 
 def image_features(media: DataFrame) -> DataFrame:
     """Decode image payloads through the :func:`decode_image` DISPATCHER
-    (PPM and PNG both land here) and emit the same exact-integer stats
-    as :func:`image_ppm_features` — so one query can hash-verify the
-    dispatcher + the PNG chunk/inflate/unfilter path end-to-end."""
+    (PPM and PNG both land here) and emit scalar image statistics:
+    dimensions, pixel count, integer luminance sum and milli-mean — the
+    exact-integer feature shape that stays hash-comparable across
+    engines, so one query per format hash-verifies its decode path
+    end-to-end."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, arr = decode_image(bytes(payload))
-                lum = int(arr[:, :, 0].astype("int64").sum())
-                rows.append(
-                    (int(media_id), w, h, w * h, lum, lum * 1000 // (w * h))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "width",
-                    "height",
-                    "n_pixels",
-                    "sum_lum",
-                    "mean_lum_milli",
-                ],
-            )
+    def stats(payload: bytes):
+        w, h, arr = decode_image(payload)
+        lum = int(arr[:, :, 0].astype("int64").sum())
+        return w, h, w * h, lum, lum * 1000 // (w * h)
 
-    return media.select("media_id", "payload").mapInPandas(
-        kernel,
-        schema=(
-            "media_id long, width long, height long, n_pixels long, "
-            "sum_lum long, mean_lum_milli long"
-        ),
+    return _map_payloads(
+        media,
+        stats,
+        "media_id long, width long, height long, n_pixels long, "
+        "sum_lum long, mean_lum_milli long",
     )
 
 
 def synth_wav_media(documents: DataFrame, sample_rate: int = 8000) -> DataFrame:
     """Synthesize a REAL RIFF/WAV payload per document: constant-amplitude
     int16 mono signal, n_samples from n_chars, amplitude from doc_id."""
+    import numpy as np
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def make(doc_id: int, n_chars: int):
+        n = max(n_chars, 1)
+        samples = np.full(n, doc_id % 30000, dtype="<i2")
+        return [(doc_id, encode_wav(samples, sample_rate), n)]
 
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                n = max(int(n_chars), 1)
-                amp = int(doc_id) % 30000
-                payloads.append(
-                    encode_wav(np.full(n, amp, dtype="<i2"), sample_rate)
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "media_type": "audio",
-                    "payload": payloads,
-                    "meta_width": pdf["n_chars"].clip(lower=1).astype("int64"),
-                    "meta_height": 1,
-                }
-            )
-
-    return documents.select("doc_id", "n_chars").mapInPandas(
-        kernel, schema=MEDIA_SCHEMA
-    )
+    return _synth_media(documents, "audio", 1, make)
 
 
 def audio_wav_features(media: DataFrame) -> DataFrame:
     """Decode RIFF/WAV payloads (stdlib wave parser, decode_wav) and emit
     scalar audio statistics: sample count/rate, integer duration, peak
-    amplitude."""
+    amplitude (0 for a 0-frame clip)."""
+    import numpy as np
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def stats(payload: bytes):
+        rate, samples = decode_wav(payload)
+        n = len(samples)
+        peak = int(np.abs(samples.astype("int64")).max(initial=0))
+        return n, rate, n * 1000 // rate, peak
 
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                rate, samples = decode_wav(bytes(payload))
-                rows.append(
-                    (
-                        int(media_id),
-                        len(samples),
-                        rate,
-                        len(samples) * 1000 // rate,
-                        int(np.abs(samples.astype("int64")).max()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "n_samples", "sample_rate", "duration_ms", "peak"],
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        kernel,
-        schema=(
-            "media_id long, n_samples long, sample_rate long, "
-            "duration_ms long, peak long"
-        ),
+    return _map_payloads(
+        media,
+        stats,
+        "media_id long, n_samples long, sample_rate long, "
+        "duration_ms long, peak long",
     )
 
 
@@ -679,49 +626,49 @@ def register_frame_sampler(spark, n_default: int = 4) -> None:
     spark.udtf.register("sample_frames", SampleFrames)
 
 
+
+
 def synth_ppm_near_dup_media(documents: DataFrame) -> DataFrame:
     """The PPM corpus plus a BRIGHTNESS-SHIFTED copy of every third image
     (media_id + 1e6, every channel +24 clipped) — visually the same
     picture, byte-wise a different payload: exactly the near-duplicate
     class byte hashing misses and perceptual hashing exists to catch."""
+    import numpy as np
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def make(doc_id: int, n_chars: int):
+        w = max(n_chars, 1)
+        pixels = _doc_pixels(doc_id, w)
+        rows = [(doc_id, encode_ppm(pixels), w)]
+        if doc_id % 3 == 0:
+            # +24 uniform brightness, clipped — aHash-invariant
+            # wherever no pixel clips (the formula pixels top out
+            # at 255 though, so clipping DOES occur on some rows;
+            # the test pins the observed grouping, not a blanket
+            # invariance claim)
+            shifted = np.clip(pixels.astype(np.int16) + 24, 0, 255).astype(np.uint8)
+            rows.append((doc_id + 1_000_000, encode_ppm(shifted), w))
+        return rows
 
-        for pdf in batches:
-            ids, payloads, widths = [], [], []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                w = max(int(n_chars), 1)
-                v = (int(doc_id) * 7 + np.arange(2 * w)) % 256
-                pixels = np.repeat(v.astype(np.uint8), 3).reshape(2, w, 3)
-                ids.append(int(doc_id))
-                payloads.append(encode_ppm(pixels))
-                widths.append(w)
-                if doc_id % 3 == 0:
-                    # +24 uniform brightness, clipped — aHash-invariant
-                    # wherever no pixel clips (the formula pixels top out
-                    # at 255 though, so clipping DOES occur on some rows;
-                    # the test pins the observed grouping, not a blanket
-                    # invariance claim)
-                    shifted = np.clip(pixels.astype(np.int16) + 24, 0, 255).astype(
-                        np.uint8
-                    )
-                    ids.append(int(doc_id) + 1_000_000)
-                    payloads.append(encode_ppm(shifted))
-                    widths.append(w)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "media_type": "image",
-                    "payload": payloads,
-                    "meta_width": pd.Series(widths, dtype="int64"),
-                    "meta_height": 2,
-                }
-            )
+    return _synth_media(documents, "image", 2, make)
 
-    return documents.select("doc_id", "n_chars").mapInPandas(
-        kernel, schema=MEDIA_SCHEMA
-    )
+
+def _ahash(arr) -> int:
+    """The unsigned 64-bit aHash of an (h, w, 3) image, as
+    :func:`image_average_hash` describes it; cell bounds are clamped so
+    every one of the 8x8 cells holds at least one pixel."""
+    lum = arr[:, :, 0].astype("int64")
+    h, w = lum.shape
+    total_sum, n_total = int(lum.sum()), w * h
+    bits = 0
+    for gy in range(8):
+        y0 = min(gy * h // 8, h - 1)
+        y1 = max((gy + 1) * h // 8, y0 + 1)
+        for gx in range(8):
+            x0 = min(gx * w // 8, w - 1)
+            x1 = max((gx + 1) * w // 8, x0 + 1)
+            cell = lum[y0:y1, x0:x1]
+            bits = (bits << 1) | int(int(cell.sum()) * n_total > total_sum * cell.size)
+    return bits
 
 
 def image_average_hash(media: DataFrame) -> DataFrame:
@@ -733,34 +680,11 @@ def image_average_hash(media: DataFrame) -> DataFrame:
     visually-identical re-encodes collapse to one hash — the property
     that makes aHash the standard first pass of image dedup."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def phash(payload: bytes):
+        bits = _ahash(decode_image(payload)[2])
+        return (bits - (1 << 64) if bits >> 63 else bits,)  # as a signed long
 
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, arr = decode_ppm(bytes(payload))
-                lum = arr[:, :, 0].astype("int64")
-                total_sum = int(lum.sum())
-                n_total = w * h
-                bits = 0
-                for gy in range(8):
-                    y0, y1 = gy * h // 8, max((gy + 1) * h // 8, gy * h // 8 + 1)
-                    y1 = min(y1, h) if gy * h // 8 < h else h
-                    y0 = min(y0, h - 1)
-                    for gx in range(8):
-                        x0, x1 = gx * w // 8, max((gx + 1) * w // 8, gx * w // 8 + 1)
-                        x1 = min(x1, w) if gx * w // 8 < w else w
-                        x0 = min(x0, w - 1)
-                        cell = lum[y0:max(y1, y0 + 1), x0:max(x1, x0 + 1)]
-                        bit = int(cell.sum()) * n_total > total_sum * cell.size
-                        bits = (bits << 1) | int(bit)
-                rows.append((int(media_id), np.int64(np.uint64(bits).astype(np.int64))))
-            yield pd.DataFrame(rows, columns=["media_id", "phash"])
-
-    return media.select("media_id", "payload").mapInPandas(
-        kernel, schema="media_id long, phash long"
-    )
+    return _map_payloads(media, phash, "media_id long, phash long")
 
 
 def synth_wav_near_dup_media(documents: DataFrame, sample_rate: int = 8000) -> DataFrame:
@@ -770,36 +694,19 @@ def synth_wav_near_dup_media(documents: DataFrame, sample_rate: int = 8000) -> D
     fingerprint exists to catch. Samples stay under 8192 so the x2 copy
     is EXACT int16 (no rounding, no clipping) and the scale-invariance
     of the fingerprint holds with no caveats."""
+    import numpy as np
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def make(doc_id: int, n_chars: int):
+        n = max(n_chars, 16)
+        i = np.arange(n, dtype="int64")
+        samples = ((doc_id * 13 + i * i) % 8192).astype("<i2")
+        rows = [(doc_id, encode_wav(samples, sample_rate), n)]
+        if doc_id % 3 == 0:
+            doubled = (samples * 2).astype("<i2")
+            rows.append((doc_id + 1_000_000, encode_wav(doubled, sample_rate), n))
+        return rows
 
-        for pdf in batches:
-            ids, payloads, widths = [], [], []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                n = max(int(n_chars), 16)
-                i = np.arange(n, dtype="int64")
-                samples = ((int(doc_id) * 13 + i * i) % 8192).astype("<i2")
-                ids.append(int(doc_id))
-                payloads.append(encode_wav(samples, sample_rate))
-                widths.append(n)
-                if doc_id % 3 == 0:
-                    ids.append(int(doc_id) + 1_000_000)
-                    payloads.append(encode_wav((samples * 2).astype("<i2"), sample_rate))
-                    widths.append(n)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "media_type": "audio",
-                    "payload": payloads,
-                    "meta_width": pd.Series(widths, dtype="int64"),
-                    "meta_height": 1,
-                }
-            )
-
-    return documents.select("doc_id", "n_chars").mapInPandas(
-        kernel, schema=MEDIA_SCHEMA
-    )
+    return _synth_media(documents, "audio", 1, make)
 
 
 def audio_energy_fingerprint(media: DataFrame) -> DataFrame:
@@ -810,30 +717,23 @@ def audio_energy_fingerprint(media: DataFrame) -> DataFrame:
     multiplies both sides identically, so re-gained copies of the same
     recording share a fingerprint EXACTLY — the audio sibling of
     image_average_hash's brightness invariance."""
+    import numpy as np
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def fingerprint(payload: bytes):
+        _, samples = decode_wav(payload)
+        mag = np.abs(samples.astype("int64"))
+        n = mag.size
+        total = int(mag.sum())
+        bits = 0
+        for b in range(16):
+            lo, hi = b * n // 16, max((b + 1) * n // 16, b * n // 16 + 1)
+            seg = mag[min(lo, n - 1):min(max(hi, lo + 1), n)]
+            if seg.size == 0:
+                seg = mag[-1:]
+            bits = (bits << 1) | int(int(seg.sum()) * n > total * seg.size)
+        return (bits,)
 
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                _, samples = decode_wav(bytes(payload))
-                mag = np.abs(samples.astype("int64"))
-                n = mag.size
-                total = int(mag.sum())
-                bits = 0
-                for b in range(16):
-                    lo, hi = b * n // 16, max((b + 1) * n // 16, b * n // 16 + 1)
-                    seg = mag[min(lo, n - 1):min(max(hi, lo + 1), n)]
-                    if seg.size == 0:
-                        seg = mag[-1:]
-                    bits = (bits << 1) | int(int(seg.sum()) * n > total * seg.size)
-                rows.append((int(media_id), bits))
-            yield pd.DataFrame(rows, columns=["media_id", "fingerprint"])
-
-    return media.select("media_id", "payload").mapInPandas(
-        kernel, schema="media_id long, fingerprint long"
-    )
+    return _map_payloads(media, fingerprint, "media_id long, fingerprint long")
 
 
 def synth_video_near_dup_media(documents: DataFrame, n_frames: int = 4) -> DataFrame:
@@ -842,119 +742,52 @@ def synth_video_near_dup_media(documents: DataFrame, n_frames: int = 4) -> DataF
     BRIGHTNESS-SHIFTED re-encode of every third video (media_id + 1e6,
     all frames +16). Source pixels are capped under 240 so the shift
     never clips — per-frame aHash invariance is exact, no caveats."""
+    import numpy as np
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            ids, payloads, widths = [], [], []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                w = max(int(n_chars), 8)
-                frames = []
-                for f in range(n_frames):
-                    v = (int(doc_id) * 7 + 31 * f + np.arange(2 * w)) % 240
-                    frames.append(
-                        np.repeat(v.astype(np.uint8), 3).reshape(2, w, 3)
-                    )
-                video = b"".join(encode_ppm(p) for p in frames)
-                ids.append(int(doc_id))
-                payloads.append(video)
-                widths.append(w)
-                if doc_id % 3 == 0:
-                    shifted = b"".join(
-                        encode_ppm((p.astype(np.int16) + 16).astype(np.uint8))
-                        for p in frames
-                    )
-                    ids.append(int(doc_id) + 1_000_000)
-                    payloads.append(shifted)
-                    widths.append(w)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "media_type": "video",
-                    "payload": payloads,
-                    "meta_width": pd.Series(widths, dtype="int64"),
-                    "meta_height": 2,
-                }
+    def make(doc_id: int, n_chars: int):
+        w = max(n_chars, 8)
+        frames = [
+            _doc_pixels(doc_id, w, shift=31 * f, modulus=240) for f in range(n_frames)
+        ]
+        rows = [(doc_id, b"".join(encode_ppm(p) for p in frames), w)]
+        if doc_id % 3 == 0:
+            shifted = b"".join(
+                encode_ppm((p.astype(np.int16) + 16).astype(np.uint8)) for p in frames
             )
+            rows.append((doc_id + 1_000_000, shifted, w))
+        return rows
 
-    return documents.select("doc_id", "n_chars").mapInPandas(
-        kernel, schema=MEDIA_SCHEMA
-    )
+    return _synth_media(documents, "video", 2, make)
 
 
 def split_ppm_frames(payload: bytes):
     """Parse a concatenated-PPM video container into its frame arrays by
     walking the real P6 headers (magic, dims, maxval, raster length) —
     container parsing, not byte-slicing guesswork."""
-    frames = []
-    pos = 0
     data = bytes(payload)
+    frames, pos = [], 0
     while pos < len(data):
-        if data[pos : pos + 2] != b"P6":
-            raise ValueError(f"bad frame magic at offset {pos}")
-        # header: P6\n<w> <h>\n<maxval>\n
-        hdr_end = pos
-        fields = []
-        i = pos + 2
-        while len(fields) < 3:
-            while i < len(data) and data[i] in b" \t\r\n":
-                i += 1
-            j = i
-            while j < len(data) and data[j] not in b" \t\r\n":
-                j += 1
-            fields.append(int(data[i:j]))
-            i = j
-        i += 1  # single whitespace after maxval
-        w, h, _maxval = fields
-        raster = 3 * w * h
-        _, _, arr = decode_ppm(data[pos : i + raster])
+        _, _, arr, pos = _ppm_frame(data, pos)
         frames.append(arr)
-        pos = i + raster
-        hdr_end = pos
     return frames
 
 
 def video_phash_signature(media: DataFrame) -> DataFrame:
     """Per-video perceptual signature: each frame gets the image aHash
-    (same exact integer bit rule as image_average_hash), and the ordered
+    (the same :func:`_ahash` as image_average_hash), and the ordered
     frame-hash sequence is collapsed to one md5-derived 63-bit
     signature. Re-encoded videos whose every frame is visually identical
     share the signature exactly; one changed frame changes it."""
+    import hashlib
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def signature(payload: bytes):
+        frames = split_ppm_frames(payload)
+        seq = ",".join(str(_ahash(a)) for a in frames)
+        sig = int.from_bytes(
+            hashlib.md5(seq.encode()).digest()[:8], "big"
+        ) >> 1  # 63-bit: stays positive in a signed long
+        return len(frames), sig
 
-        import numpy as np
-
-        def ahash(arr) -> int:
-            lum = arr[:, :, 0].astype("int64")
-            h, w = lum.shape
-            total_sum, n_total = int(lum.sum()), w * h
-            bits = 0
-            for gy in range(8):
-                y0 = min(gy * h // 8, h - 1)
-                y1 = max(min(max((gy + 1) * h // 8, y0 + 1), h), y0 + 1)
-                for gx in range(8):
-                    x0 = min(gx * w // 8, w - 1)
-                    x1 = max(min(max((gx + 1) * w // 8, x0 + 1), w), x0 + 1)
-                    cell = lum[y0:y1, x0:x1]
-                    bits = (bits << 1) | int(
-                        int(cell.sum()) * n_total > total_sum * cell.size
-                    )
-            return bits
-
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                frames = split_ppm_frames(bytes(payload))
-                seq = ",".join(str(ahash(a)) for a in frames)
-                sig = int.from_bytes(
-                    hashlib.md5(seq.encode()).digest()[:8], "big"
-                ) >> 1  # 63-bit: stays positive in a signed long
-                rows.append((int(media_id), len(frames), sig))
-            yield pd.DataFrame(rows, columns=["media_id", "n_frames", "signature"])
-
-    return media.select("media_id", "payload").mapInPandas(
-        kernel, schema="media_id long, n_frames long, signature long"
+    return _map_payloads(
+        media, signature, "media_id long, n_frames long, signature long"
     )

@@ -809,25 +809,20 @@ def sink_compact_small_files(spark: SparkSession, sf: str) -> DataFrame:
     "footgun). The full orders table lands partitioned by status, then "
     "a corrected 'P' slice (prices doubled) is overwritten in; the "
     "audit proves F/O survived byte-identical while P carries the "
-    "correction. The conf is set per-query and restored in a finally "
-    "(session hygiene — the driver reuses one session). At 100 TB "
+    "correction. The mode is a per-write option (io.upsert_partitions), "
+    "never the session conf, so a session shared across driver threads "
+    "is never left in dynamic mode. At 100 TB "
     "this is exactly how a bad ingestion day is re-landed without "
     "rewriting the lake.",
 )
 def sink_dynamic_partition_overwrite(spark: SparkSession, sf: str) -> DataFrame:
     src = T(spark, sf, "orders").select("o_orderkey", "o_orderstatus", "o_totalprice")
     path = _scratch("dyn_overwrite_lake", sf)
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, "STATIC")
-    try:
-        spark.conf.set(key, "dynamic")
-        src.write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
-        fix = src.filter(F.col("o_orderstatus") == "P").withColumn(
-            "o_totalprice", F.col("o_totalprice") * 2
-        )
-        fix.write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
-    finally:
-        spark.conf.set(key, prev)
+    io.sink_parquet(src, path, partition_by=["o_orderstatus"])
+    fix = src.filter(F.col("o_orderstatus") == "P").withColumn(
+        "o_totalprice", F.col("o_totalprice") * 2
+    )
+    io.upsert_partitions(spark, fix, path, partition_by=["o_orderstatus"])
     return (
         spark.read.parquet(path)
         .groupBy("o_orderstatus")

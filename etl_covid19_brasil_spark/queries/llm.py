@@ -761,9 +761,10 @@ def near_dedup_embedding(spark: SparkSession, sf: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Multimodal columns (binary payload + typed metadata; SURVEY.md §2.10 /
-# north star). The decode kernel is stubbed (no media codecs in this
-# environment) but the Spark plumbing — binary column, Arrow batching,
-# mapInPandas schema — is the real 100 TB shape. See llm/multimodal.py.
+# north star). PPM/PNG/WAV decode for real; only the extract_features
+# embedding is a stub. The Spark plumbing — binary column, Arrow
+# batching, mapInPandas schema — is the real 100 TB shape. See
+# llm/multimodal.py.
 # ---------------------------------------------------------------------------
 
 
@@ -840,9 +841,9 @@ def media_decode_features(spark: SparkSession, sf: str) -> DataFrame:
     "through the same decode_image dispatcher when Pillow is installed.",
 )
 def media_image_ppm_decode(spark: SparkSession, sf: str) -> DataFrame:
-    from etl_covid19_brasil_spark.llm.multimodal import image_ppm_features, synth_ppm_media
+    from etl_covid19_brasil_spark.llm.multimodal import image_features, synth_ppm_media
 
-    return image_ppm_features(synth_ppm_media(T(spark, sf, "documents")))
+    return image_features(synth_ppm_media(T(spark, sf, "documents")))
 
 
 @query(

@@ -359,6 +359,29 @@ def test_upsert_partitions_touches_only_incoming(spark, tmp_path, monkeypatch):
     assert spark.conf.get(key) == session_mode
 
 
+def test_sink_dynamic_partition_overwrite_never_sets_session_conf(spark, monkeypatch):
+    from pyspark.sql.conf import RuntimeConfig
+
+    from etl_covid19_brasil_spark.registry import all_queries
+
+    # the registered backfill query must use the per-write option through
+    # io.upsert_partitions, not a flip-and-restore of the shared conf
+    key = "spark.sql.sources.partitionOverwriteMode"
+    session_mode = spark.conf.get(key)
+    keys_set = []
+    real_set = RuntimeConfig.set
+
+    def spy(self, k, v):
+        keys_set.append(k)
+        return real_set(self, k, v)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+    rows = all_queries()["sink_dynamic_partition_overwrite"](spark, SF).collect()
+    assert {r["o_orderstatus"] for r in rows} == {"F", "O", "P"}
+    assert key not in keys_set
+    assert spark.conf.get(key) == session_mode
+
+
 def test_merge_by_key_upserts_and_keeps(spark, tmp_path):
     out = str(tmp_path / "mlake")
     base = spark.createDataFrame([(1, "old"), (2, "old"), (3, "old")], ["id", "v"])

@@ -1,8 +1,8 @@
 """Multimodal column plumbing (SURVEY.md §2.10 north star).
 
-The decode kernel is stubbed (no media codecs in this container) but the
-distributed plumbing — binary payload column, Arrow batching through
-mapInPandas, typed output schema — is real; these tests pin it down.
+PPM/PNG/WAV codecs are real and only the extract_features embedding is
+stubbed; the distributed plumbing — binary payload column, Arrow batching
+through mapInPandas, typed output schema — is real; these tests pin it down.
 """
 
 from __future__ import annotations
@@ -246,13 +246,13 @@ def test_synth_png_decode_matches_documents(spark):
 def test_synth_decode_pipelines_match_documents(spark):
     from etl_covid19_brasil_spark.llm.multimodal import (
         audio_wav_features,
-        image_ppm_features,
+        image_features,
         synth_ppm_media,
         synth_wav_media,
     )
 
     docs = load_table(spark, SF, "documents").limit(25)
-    img = image_ppm_features(synth_ppm_media(docs)).collect()
+    img = image_features(synth_ppm_media(docs)).collect()
     wav = audio_wav_features(synth_wav_media(docs)).collect()
     by_id = {r["doc_id"]: r["n_chars"] for r in docs.collect()}
     assert len(img) == len(wav) == 25
@@ -264,6 +264,64 @@ def test_synth_decode_pipelines_match_documents(spark):
         n = max(by_id[r["media_id"]], 1)
         assert r["n_samples"] == n and r["sample_rate"] == 8000
         assert r["peak"] == r["media_id"] % 30000
+
+
+def test_image_decoders_reject_non_positive_dimensions(spark):
+    """A non-positive width or height is a corrupt image: decoding must
+    raise, not hand a negative pixel count to image_features or a
+    constant 0 hash to image_average_hash (which would group every
+    degenerate image together)."""
+    import numpy as np
+    import pandas as pd
+
+    from etl_covid19_brasil_spark.llm.multimodal import (
+        decode_png,
+        decode_ppm,
+        encode_png,
+        image_average_hash,
+    )
+
+    with pytest.raises(ValueError, match="1x-1"):
+        decode_ppm(b"P6\n1 -1\n255\nabc")
+    with pytest.raises(ValueError, match="0x0"):
+        decode_ppm(b"P6\n0 0\n255\n")
+    with pytest.raises(ValueError, match="0x1"):
+        decode_png(encode_png(np.zeros((1, 0, 3), np.uint8)))
+    media = spark.createDataFrame(
+        pd.DataFrame({"media_id": [1], "payload": [b"P6\n0 0\n255\n"]})
+    )
+    with pytest.raises(Exception, match="dimensions must be positive"):
+        image_average_hash(media).collect()
+
+
+def test_split_ppm_frames_accepts_header_comments():
+    """'#' comments are legal anywhere in a P6 header; the container
+    parser reads frame headers with the same tokenizer as decode_ppm."""
+    import numpy as np
+
+    from etl_covid19_brasil_spark.llm.multimodal import encode_ppm, split_ppm_frames
+
+    rng = np.random.default_rng(3)
+    first = rng.integers(0, 256, (2, 3, 3), dtype=np.uint8)
+    second = rng.integers(0, 256, (2, 3, 3), dtype=np.uint8)
+    container = encode_ppm(first) + b"P6\n# c\n3 2\n255\n" + second.tobytes()
+    frames = split_ppm_frames(container)
+    assert len(frames) == 2
+    assert (frames[0] == first).all() and (frames[1] == second).all()
+
+
+def test_audio_wav_features_zero_frame_clip(spark):
+    """A valid 0-frame WAV reports zero samples, duration and peak
+    instead of failing the whole stage on an empty max()."""
+    import numpy as np
+    import pandas as pd
+
+    from etl_covid19_brasil_spark.llm.multimodal import audio_wav_features, encode_wav
+
+    media = spark.createDataFrame(
+        pd.DataFrame({"media_id": [5], "payload": [encode_wav(np.zeros(0, "<i2"))]})
+    )
+    assert [tuple(r) for r in audio_wav_features(media).collect()] == [(5, 0, 8000, 0, 0)]
 
 
 def test_ppm_roundtrip_property():
