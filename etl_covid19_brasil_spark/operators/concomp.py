@@ -24,6 +24,32 @@ at its component's minimum id. Rounds needed: O(log^2 n) worst case,
 2-3 in practice for dedup graphs (small dense clusters).
 
 Scale notes:
+- the contraction finishes on the driver once the edge set fits
+  ``DRIVER_FINISH_EDGES``. The canonical edge set is probed once with a
+  ``limit(bound + 1)`` collect (the guarded-collect discipline of
+  ``llm.similarity._collect_bounded``, so an over-bound set never
+  reaches the driver whole); after each distributed round the
+  fingerprint's exact edge count decides, and an in-bound edge set is
+  then collected whole. An in-bound edge set on the driver gets one
+  union-find pass, rooting each union at the smaller id: that is exactly
+  the star forest the rounds would reach — the components of an edge
+  set do not depend on how they are found, and each root is its
+  component's minimum member, as in the distributed finish. The result
+  is an Arrow-built local frame, so the dedup graphs of a few hundred
+  edges pay one collect instead of 2-3 rounds of checkpoint and
+  fingerprint jobs (23 -> 5-6 concomp jobs per
+  ``dedup_minhash_components`` build on the ``llm_curation`` benchmark,
+  whose graphs hold 190-197 edges);
+- the bound is sized so that a driver finish at the bound costs less
+  than one distributed round. Measured on a 4-core box (local[4], 1 GB
+  driver heap) over graphs of 8-node components, driver finish (probe,
+  union-find, Arrow frame, noop write) vs one round with its
+  fingerprint, medians of 3: 0.60 s vs 1.20 s at 50,000 edges; 1.04 s
+  vs 1.16 s at 100,000; 3.4 s vs 2.0 s at 300,000. An over-bound edge
+  set pays the entry probe once on top of its rounds, same box and
+  graphs, probe of the checkpointed edge set vs one round with its
+  fingerprint, medians of 3: 0.08 s vs 1.57 s at 100,000 edges, 0.10 s
+  vs 2.34 s at 300,000;
 - per-round lineage is truncated with a lazy ``localCheckpoint`` —
   without it the plan doubles every round and analysis time explodes;
 - the fixed-point test is a single cheap aggregate over the candidate
@@ -32,13 +58,29 @@ Scale notes:
 - labels only ever DECREASE, so the loop is monotone and the iteration
   cap is a safety net, not a tuning knob: running out of rounds before
   the fixed point is seen raises instead of returning a half-contracted
-  edge set (nodes carrying two component ids).
+  edge set (nodes carrying two component ids). ``max_iter`` counts
+  distributed rounds only; a driver finish runs none;
+- every call logs one structured record (logger ``__name__``, attribute
+  ``concomp``): the finish (``driver``/``distributed``), the probed edge
+  count (``"over bound"`` for a distributed finish), the bound and the
+  distributed rounds run.
 """
 
 from __future__ import annotations
 
+import logging
+
+import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructField, StructType
+
+_log = logging.getLogger(__name__)
+
+# Edge count at or under which the contraction finishes on the driver
+# (module docstring, "Scale notes"). Read at call time.
+DRIVER_FINISH_EDGES = 50_000
 
 
 def _canon(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -90,6 +132,44 @@ def _fingerprint(edges: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["h"])
 
 
+def _driver_finish(cur: DataFrame, probe: pd.DataFrame) -> DataFrame:
+    """``(node, component_id)`` for every endpoint of the collected edge
+    set ``probe``: one union-find pass whose root is always the smaller
+    id, so each root is its component's minimum member — the star
+    forest the distributed rounds would reach, read off directly."""
+    parent: dict = {}
+
+    def find(x):
+        root = parent.setdefault(x, x)
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for u, v in zip(probe["u"].tolist(), probe["v"].tolist()):
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    out = pd.DataFrame(
+        {"node": list(parent), "component_id": [find(n) for n in parent]}
+    )
+    schema = StructType(
+        [
+            StructField("node", cur.schema["u"].dataType),
+            StructField("component_id", cur.schema["v"].dataType),
+        ]
+    )
+    # An Arrow table lands as a JVM LocalRelation (LocalTableScan) under
+    # any session conf and at any size, zero included. A pandas frame
+    # takes that path only when the session enables Arrow and the frame
+    # is non-empty; otherwise createDataFrame parallelizes pickled rows
+    # (Scan ExistingRDD), and every job over them spawns Python workers.
+    return cur.sparkSession.createDataFrame(
+        pa.Table.from_pandas(out, preserve_index=False), schema
+    )
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -104,28 +184,41 @@ def connected_components(
     ignored). ``nodes``, if given, adds isolated vertices so singletons
     come back as their own component. Returns ``(node, component_id)``.
 
-    ``max_iter`` caps the rounds until the fixed point is OBSERVED — one
-    more than the rounds that reach the star forest, since convergence is
-    only seen when a round leaves the edge set unchanged. Raises
-    ``RuntimeError`` when the cap runs out first.
+    ``max_iter`` caps the DISTRIBUTED rounds until the fixed point is
+    OBSERVED — one more than the rounds that reach the star forest,
+    since convergence is only seen when a round leaves the edge set
+    unchanged. Raises ``RuntimeError`` when the cap runs out first. The
+    rounds stop early once the edge set fits the driver finish (module
+    docstring); an edge set that fits it from the start runs none.
     """
+    bound = DRIVER_FINISH_EDGES
     cur = _canon(edges, src, dst).localCheckpoint(eager=False)
-    fp = _fingerprint(cur)
-    for _ in range(max_iter):
-        stepped = _small_star(_large_star(cur)).distinct().localCheckpoint(eager=False)
-        nfp = _fingerprint(stepped)
-        cur = stepped
-        if nfp == fp:
-            break
-        fp = nfp
+    probe, rounds = cur.limit(bound + 1).toPandas(), 0
+    if len(probe) > bound:
+        probe, fp = None, _fingerprint(cur)
+        for rounds in range(1, max_iter + 1):
+            stepped = _small_star(_large_star(cur)).distinct().localCheckpoint(eager=False)
+            nfp = _fingerprint(stepped)
+            cur = stepped
+            if nfp == fp:
+                break
+            if nfp[0] <= bound:  # the exact edge count guards the collect
+                probe = cur.toPandas()
+                break
+            fp = nfp
+        else:
+            raise RuntimeError(
+                f"connected_components: no fixed point within max_iter={max_iter} rounds"
+            )
+    if probe is not None:
+        comp, finish, probed = _driver_finish(cur, probe), "driver", len(probe)
     else:
-        raise RuntimeError(
-            f"connected_components: no fixed point within max_iter={max_iter} rounds"
-        )
-    # Star forest: non-root nodes point at their root (u > v = root).
-    member = cur.select(F.col("u").alias("node"), F.col("v").alias("component_id"))
-    roots = cur.select(F.col("v").alias("node"), F.col("v").alias("component_id")).distinct()
-    comp = member.unionByName(roots)
+        # Star forest: non-root nodes point at their root (u > v = root).
+        member = cur.select(F.col("u").alias("node"), F.col("v").alias("component_id"))
+        roots = cur.select(F.col("v").alias("node"), F.col("v").alias("component_id")).distinct()
+        comp, finish, probed = member.unionByName(roots), "distributed", "over bound"
+    record = {"finish": finish, "probed_edges": probed, "bound": bound, "rounds": rounds}
+    _log.info("connected_components: %s", record, extra={"concomp": record})
     if nodes is not None:
         everyone = nodes.select(F.col(node_col).alias("node")).distinct()
         comp = (

@@ -1327,7 +1327,9 @@ def _cc_parts(spark: SparkSession, sf: str) -> tuple[DataFrame, DataFrame]:
     "alternating large-star/small-star contraction "
     "(operators/concomp.py; Kiveris et al. SoCC'14) — O(log^2 n) rounds, "
     "two (node, candidate-root) shuffles per round, no neighborhood "
-    "lists. Every doc gets a row (singletons are their own component). "
+    "lists — finished by one union-find on the driver once the edge "
+    "set fits operators.concomp.DRIVER_FINISH_EDGES. Every doc gets a "
+    "row (singletons are their own component). "
     "The oracle recomputes components as min-label reachability with a "
     "recursive CTE. Component ids are component-minimum doc ids — "
     "engine-independent.",
@@ -2473,7 +2475,11 @@ def text_bigram_logprob(spark: SparkSession, sf: str) -> DataFrame:
     "assignment with component size. This is the pipeline a 100 TB "
     "corpus actually runs (the exact-pair tier that "
     "dedup_connected_components clusters is quadratic and exists as "
-    "the oracle); every stage here is linear-shuffle. Approximate "
+    "the oracle); every stage here is linear-shuffle, and the "
+    "components run as star-contraction rounds only while the edge set "
+    "exceeds operators.concomp.DRIVER_FINISH_EDGES — a verified pair "
+    "set within it is finished by one union-find on the driver after "
+    "one bounded collect. Approximate "
     "only in candidate RECALL — and because MinHash recall is 1.0 on "
     "this corpus (pinned in tests/test_ann_recall.py), the composed "
     "result must equal the exact-pair clustering exactly, which "

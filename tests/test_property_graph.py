@@ -2,9 +2,10 @@
 operator: large-star/small-star contraction (operators/concomp.py) vs a
 pure-Python union-find on randomly generated graphs — self-loops,
 duplicate and reversed edges, chains that need several contraction
-rounds, isolated vertices via the ``nodes`` frame. The fixed-corpus
-equality tests (tests/test_concomp.py) check one shape; hypothesis
-hunts the adversarial ones.
+rounds, isolated vertices via the ``nodes`` frame — on both finishes
+(the driver union-find and, with the bound lowered to 0, the star
+rounds). The fixed-corpus equality tests (tests/test_concomp.py) check
+one shape; hypothesis hunts the adversarial ones.
 """
 
 from __future__ import annotations
@@ -16,6 +17,7 @@ pytestmark = pytest.mark.slow
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from etl_covid19_brasil_spark.operators import concomp
 from etl_covid19_brasil_spark.operators.concomp import connected_components
 
 PROP = settings(
@@ -66,15 +68,21 @@ def test_connected_components_match_union_find(spark_global, edges, extra):
     if not edges:
         edf = edf.limit(0)
 
-    got = {
-        r["node"]: r["component_id"]
-        for r in connected_components(edf, nodes=nodes).collect()
-    }
-
     uf = _UnionFind()
     for n in node_ids:
         uf.find(n)
     for a, b in edges:
         uf.union(a, b)
     want = {n: uf.find(n) for n in node_ids}
-    assert got == want
+
+    # every drawn graph fits the driver finish; bound 0 sends the same
+    # graph through the distributed star rounds
+    for bound in (None, 0):
+        with pytest.MonkeyPatch.context() as mp:
+            if bound is not None:
+                mp.setattr(concomp, "DRIVER_FINISH_EDGES", bound)
+            got = {
+                r["node"]: r["component_id"]
+                for r in connected_components(edf, nodes=nodes).collect()
+            }
+        assert got == want, f"bound={bound}"
