@@ -49,6 +49,7 @@ from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -2278,12 +2279,13 @@ def ann_index_save(spark, route: TierRoute, path: str) -> None:
     byte-identical results (pinned in tests/test_ann_lifecycle.py);
     ``mode=overwrite`` gives save the same last-writer-wins semantics as
     every engine sink."""
-    # Both frames go through pandas -> Arrow, which lands them as JVM
-    # LocalRelations: a list-of-tuples createDataFrame is a PICKLED-RDD
-    # relation whose every write job spawns defaultParallelism Python
-    # workers for a handful of rows (measured ~5 s per write vs 0.2 s
-    # on this box); the empty frame takes the same fast path via a
-    # zero-row range, for the same reason.
+    # Both frames are built from Arrow tables, which land as JVM
+    # LocalRelations under any session conf. A pandas frame takes that
+    # path only when the session enables Arrow; otherwise (like a
+    # list-of-tuples createDataFrame) it becomes a PICKLED-RDD relation
+    # whose every write job spawns defaultParallelism Python workers for
+    # a handful of rows (measured ~5 s per write vs 0.2 s). The empty
+    # frame takes the same fast path via a zero-row range.
     meta = pd.DataFrame(
         [
             {
@@ -2303,18 +2305,23 @@ def ann_index_save(spark, route: TierRoute, path: str) -> None:
             }
         ]
     )
-    spark.createDataFrame(meta, schema=_INDEX_META_SCHEMA).coalesce(1).write.mode(
+    spark.createDataFrame(
+        pa.Table.from_pandas(meta, preserve_index=False), schema=_INDEX_META_SCHEMA
+    ).coalesce(1).write.mode(
         "overwrite"
     ).parquet(path.rstrip("/") + "/meta")
     cents = route.centroids
     if cents is not None:
         cmat = np.asarray(cents)
         cdf = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "cell_id": np.arange(len(cmat), dtype=np.int64),
-                    "centroid": [list(map(float, c)) for c in cmat],
-                }
+            pa.Table.from_pandas(
+                pd.DataFrame(
+                    {
+                        "cell_id": np.arange(len(cmat), dtype=np.int64),
+                        "centroid": [list(map(float, c)) for c in cmat],
+                    }
+                ),
+                preserve_index=False,
             ),
             schema=_INDEX_CENTROID_SCHEMA,
         )

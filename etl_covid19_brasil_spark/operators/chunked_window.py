@@ -29,6 +29,21 @@ queries/analytics.py):
    tiebreaker, making the per-key order total — same argument as
    id_assign_contiguous).
 
+The four shapes share one layout (``_chunks``: step 1 plus the pin
+below) and one spanning-key set (``_spanning``). The three prefix
+shapes share one stitch (``_stitched_prefix``: steps 2-4).
+``chunked_running_sum`` is that stitch over its value column.
+``chunked_sessionize`` and pass 1 of ``chunked_scd2`` are the stitch
+over a 0/1 break flag ``brk(prev, cur)``, whose chunk-first rows are
+corrected against the predecessor chunk's last value — a gap over
+``gap_us`` microseconds for sessions, a value change for SCD2, the
+same predicates (``_gap_break``, ``_change_break``) their plain
+``*_auto`` routes flag with. The correction needs only spanning keys:
+a key in one partition has one chunk, whose first row is the key's
+first row, so its provisional flag is already right.
+``chunked_moving_frame`` needs no stitch, only ghost rows over the
+same layout and spanning keys.
+
 Cost vs the plain window: the data crosses TWO full shuffles instead
 of one — the range partition plus the chunk window's required
 hash(partition_id, key) clustering (Spark cannot see that the range
@@ -67,16 +82,25 @@ hypothesis differentials pin a null-key corpus against the plain twins.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+import logging
+from collections.abc import Callable, Sequence
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql.window import Window
 
 _PID = "__cw_pid"
 _LOCAL = "__cw_local"
 _TOT = "__cw_tot"
 _OFF = "__cw_off"
+_FLAG = "__cw_flag"
+_RN = "__cw_rn"
+_DELTA = "__cw_delta"
+_US = "__cw_us"
+
+_log = logging.getLogger(__name__)
+
+_Break = Callable[[Column, Column], Column]
 
 
 def _pin(df: DataFrame, reliable: bool) -> DataFrame:
@@ -121,6 +145,123 @@ def _ns_join(
     return left.join(ren, cond, how).drop(*[f"__cw_r_{c}" for c in cols])
 
 
+def _chunks(
+    df: DataFrame, keys: Sequence[str], order: Sequence[str], num_partitions: int | None, reliable: bool
+) -> DataFrame:
+    """The pinned range layout: ``df`` range-partitioned on
+    (keys..., order...) and tagged with its partition id, so a
+    (partition, key) pair is one contiguous chunk of the key's order."""
+    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    return _pin(
+        df.repartitionByRange(n, *[F.col(c) for c in [*keys, *order]]).withColumn(
+            _PID, F.spark_partition_id()
+        ),
+        reliable,
+    )
+
+
+def _spanning(per_chunk: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """Keys present in more than one partition — the only keys any chunk
+    of which needs a stitch. A range partitioning splits at most n - 1
+    keys (one per boundary), so this is O(#partitions) rows no matter
+    how many distinct keys the data holds."""
+    return (
+        per_chunk.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("__cw_npid"))
+        .filter(F.col("__cw_npid") > 1)
+        .drop("__cw_npid")
+    )
+
+
+def _flag(brk: _Break, x: Column, w: Window) -> Column:
+    """1 where ``brk(previous x, x)`` holds over ``w``, else 0. The
+    first row's previous x is null, so ``brk`` must hold on a null
+    ``prev``."""
+    return F.when(brk(F.lag(x).over(w), x), F.lit(1)).otherwise(F.lit(0))
+
+
+def _gap_break(gap_us: int) -> _Break:
+    """Sessionize's break: a gap over ``gap_us`` microseconds (or no
+    previous event)."""
+
+    def brk(prev: Column, cur: Column) -> Column:
+        gap = cur - prev
+        return gap.isNull() | (gap > gap_us)
+
+    return brk
+
+
+def _change_break(prev: Column, cur: Column) -> Column:
+    """SCD2's break: the value changed (or there is no previous value)."""
+    return prev.isNull() | (prev != cur)
+
+
+def _stitched_prefix(
+    src: DataFrame,
+    keys: Sequence[str],
+    order: Sequence[str],
+    out: str,
+    term: Column | None = None,
+    brk: _Break | None = None,
+    x: str | None = None,
+) -> DataFrame:
+    """Exact per-key running ``SUM(term)`` in ``out`` over the pinned
+    layout ``src`` (module docstring, steps 2-4). With ``brk`` the term
+    is the break flag ``_flag(brk, x)``: each chunk's first row is
+    flagged provisionally (its local lag is null), and a chunk that
+    continues a key corrects it by ``delta`` = 0 (real break) or -1
+    from ``brk(predecessor chunk's last x, own first x)``. Corrected
+    totals feed the offsets, and the corrected flag comes back in
+    ``_FLAG``. The first chunk of every key — in particular the only
+    chunk of a key that sits in one partition — has no predecessor, so
+    its provisional flag is already right and only spanning keys join
+    back. Returns ``src``'s columns (``_FLAG``/``_RN`` included with
+    ``brk``, ``_PID`` dropped) plus ``out``."""
+    chunk = Window.partitionBy(_PID, *keys).orderBy(*order)
+    ends = []
+    if brk is not None:
+        src = src.withColumn(_FLAG, _flag(brk, F.col(x), chunk)).withColumn(
+            _RN, F.row_number().over(chunk)
+        )
+        term = F.col(_FLAG)
+        # boundary facts ordered by the chunk row number, not by
+        # struct(order...): that keeps the aggregate a HashAggregate
+        ends = [F.min_by(x, _RN).alias("__cw_first"), F.max_by(x, _RN).alias("__cw_last")]
+    local = src.withColumn(
+        _LOCAL, F.sum(term).over(chunk.rowsBetween(Window.unboundedPreceding, 0))
+    )
+    # Per-chunk totals: O(rows) input but map-side partial aggregation
+    # collapses it to one row per (partition, key) chunk before any
+    # shuffle; <= n - 1 + |keys| chunks exist.
+    per_chunk = src.groupBy(_PID, *keys).agg(F.sum(term).alias(_TOT), *ends)
+    spans = _ns_join(per_chunk, _spanning(per_chunk, keys), keys)
+    w_key = Window.partitionBy(*keys).orderBy(_PID)
+    w_prior = w_key.rowsBetween(Window.unboundedPreceding, -1)
+    if brk is None:
+        offsets = spans.select(
+            _PID, *keys, F.coalesce(F.sum(_TOT).over(w_prior), F.lit(0)).alias(_OFF)
+        ).filter(F.col(_OFF) != 0)
+    else:
+        prev_last = F.lag("__cw_last").over(w_key)
+        delta = F.when(brk(prev_last, F.col("__cw_first")), F.lit(0)).otherwise(F.lit(-1))
+        prior = F.coalesce(F.sum(F.col(_TOT) + F.col(_DELTA)).over(w_prior), F.lit(0))
+        offsets = (
+            spans.withColumn(_DELTA, delta)
+            .select(_PID, *keys, (prior + F.col(_DELTA)).alias(_OFF), _DELTA)
+            .filter((F.col(_OFF) != 0) | (F.col(_DELTA) != 0))
+        )
+    # stitching joins are null-safe on the key columns (_PID never null):
+    # a NULL key spanning a range boundary must receive its offset
+    # exactly like any other key (module docstring, ADVICE r10)
+    stitched = _ns_join(local, offsets, [_PID, *keys], "left", broadcast=True).withColumn(
+        out, F.col(_LOCAL) + F.coalesce(F.col(_OFF), F.lit(0))
+    )
+    if brk is not None:
+        first_fix = F.coalesce(F.when(F.col(_RN) == 1, F.col(_DELTA)), F.lit(0))
+        stitched = stitched.withColumn(_FLAG, F.col(_FLAG) + first_fix).drop(_DELTA)
+    return stitched.drop(_PID, _LOCAL, _OFF)
+
+
 def chunked_running_sum(
     df: DataFrame,
     keys: Sequence[str],
@@ -140,49 +281,8 @@ def chunked_running_sum(
     not double) — chunked summation reorders float rounding.
     """
     keys, order = list(keys), list(order)
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    src = _pin(
-        df.repartitionByRange(n, *[F.col(c) for c in keys + order]).withColumn(
-            _PID, F.spark_partition_id()
-        ),
-        reliable_checkpoint,
-    )
-    chunk = Window.partitionBy(_PID, *keys).orderBy(*order)
-    local = src.withColumn(
-        _LOCAL,
-        F.sum(value).over(chunk.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    # Per-chunk totals: O(rows) input but map-side partial aggregation
-    # collapses it to one row per (partition, key) chunk before any
-    # shuffle; <= n - 1 + |keys| chunks exist.
-    totals = src.groupBy(_PID, *keys).agg(F.sum(value).alias(_TOT))
-    # Keys needing a nonzero offset = keys present in >1 partition;
-    # range partitioning bounds these at n - 1, so `offsets` is tiny no
-    # matter how many distinct keys the data holds.
-    spanning = (
-        totals.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("__cw_npid"))
-        .filter(F.col("__cw_npid") > 1)
-        .drop("__cw_npid")
-    )
-    w_off = (
-        Window.partitionBy(*keys)
-        .orderBy(_PID)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = (
-        _ns_join(totals, spanning, keys)
-        .select(_PID, *keys, F.coalesce(F.sum(_TOT).over(w_off), F.lit(0)).alias(_OFF))
-        .filter(F.col(_OFF) != 0)
-    )
-    # stitching joins are null-safe on the key columns (_PID never null):
-    # a NULL key spanning a range boundary must receive its offset
-    # exactly like any other key (module docstring, ADVICE r10)
-    return (
-        _ns_join(local, offsets, [_PID, *keys], "left", broadcast=True)
-        .withColumn(out, F.col(_LOCAL) + F.coalesce(F.col(_OFF), F.lit(0)))
-        .drop(_PID, _LOCAL, _OFF)
-    )
+    src = _chunks(df, keys, order, num_partitions, reliable_checkpoint)
+    return _stitched_prefix(src, keys, order, out, term=F.col(value))
 
 
 # Measured crossovers (SCALECHECK_r10 + r12, scripts/skew_check.py
@@ -261,7 +361,16 @@ def pick_window_strategy(
         .first()["__cw_max"]
     )
     est = int((hot or 0) / sample_fraction)
-    return "chunked" if est > hot_rows_crossover else "plain"
+    route = "chunked" if est > hot_rows_crossover else "plain"
+    record = {
+        "keys": list(keys),
+        "sample_fraction": sample_fraction,
+        "est_hot_rows": est,
+        "crossover": hot_rows_crossover,
+        "route": route,
+    }
+    _log.info("pick_window_strategy: %s", record, extra={"window_strategy": record})
+    return route
 
 
 def running_sum_auto(
@@ -324,18 +433,16 @@ def sessionize_auto(
             reliable_checkpoint=reliable_checkpoint,
         )
     w = Window.partitionBy(key).orderBy(ts, tiebreak)
-    us = F.unix_micros(F.col(ts))
-    gap = us - F.lag(us).over(w)
-    flag = F.when(gap.isNull() | (gap > gap_us), F.lit(1)).otherwise(F.lit(0))
+    flag = _flag(_gap_break(gap_us), F.unix_micros(F.col(ts)), w)
     return (
-        df.withColumn("__cw_flag", flag)
+        df.withColumn(_FLAG, flag)
         .withColumn(
             out,
-            F.sum("__cw_flag")
+            F.sum(_FLAG)
             .over(w.rowsBetween(Window.unboundedPreceding, 0))
             .cast("long"),
         )
-        .drop("__cw_flag")
+        .drop(_FLAG)
     )
 
 
@@ -362,17 +469,15 @@ def scd2_auto(
             reliable_checkpoint=reliable_checkpoint,
         )
     w = Window.partitionBy(key).orderBy(ts, tiebreak)
-    prev = F.lag(value).over(w)
-    flag = F.when(prev.isNull() | (prev != F.col(value)), F.lit(1)).otherwise(F.lit(0))
     transitions = (
-        df.withColumn("__cw_flag", flag)
+        df.withColumn(_FLAG, _flag(_change_break, F.col(value), w))
         .withColumn(
             "version",
-            F.sum("__cw_flag")
+            F.sum(_FLAG)
             .over(w.rowsBetween(Window.unboundedPreceding, 0))
             .cast("long"),
         )
-        .filter(F.col("__cw_flag") == 1)
+        .filter(F.col(_FLAG) == 1)
         .select(key, value, F.col(ts).alias("valid_from"), "version")
     )
     nxt = Window.partitionBy(key).orderBy("version")
@@ -436,13 +541,14 @@ def chunked_sessionize(
     flag. Proof that the running-sum rewrite generalizes beyond plain
     aggregates (the SCALECHECK_r10 structural argument, implemented).
 
-    Mechanics on top of :func:`chunked_running_sum`'s layout:
+    Mechanics (``_stitched_prefix`` with ``brk`` = gap over ``gap_us``):
 
     - within each (partition, key) chunk, flags and prefix sums are the
       ordinary single-pass window — the chunk's FIRST row provisionally
       flags a new session (local lag is null);
-    - per-chunk boundary facts (first/last event time, provisional flag
-      total) reduce to one row per chunk — O(#chunks), map-side partial;
+    - per-chunk boundary facts (first/last event time by chunk row
+      number, provisional flag total) reduce to one row per chunk in
+      one aggregate — O(#chunks), map-side partial;
     - a chunk whose key continues from an earlier partition corrects its
       first-row flag against the PREDECESSOR chunk's last event time
       (gap compare across the boundary) — a chunk-wide constant in
@@ -457,70 +563,13 @@ def chunked_sessionize(
     the gap compares integer microseconds exactly like the plain
     formulation, so results are bit-identical.
     """
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    us = F.unix_micros(F.col(ts))
-    src = _pin(
-        df.withColumn("__cw_us", us)
-        .repartitionByRange(n, F.col(key), F.col(ts), F.col(tiebreak))
-        .withColumn(_PID, F.spark_partition_id()),
-        reliable_checkpoint,
+    src = _chunks(
+        df.withColumn(_US, F.unix_micros(F.col(ts))),
+        [key], [ts, tiebreak], num_partitions, reliable_checkpoint,
     )
-    chunk = Window.partitionBy(_PID, key).orderBy(ts, tiebreak)
-    gap = F.col("__cw_us") - F.lag("__cw_us").over(chunk)
-    flag = F.when(gap.isNull() | (gap > gap_us), F.lit(1)).otherwise(F.lit(0))
-    local = src.withColumn("__cw_flag", flag).withColumn(
-        _LOCAL,
-        F.sum("__cw_flag").over(chunk.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    bounds = src.groupBy(_PID, key).agg(
-        F.min("__cw_us").alias("__cw_first_us"),
-        F.max("__cw_us").alias("__cw_last_us"),
-    )
-    flag_tot = local.groupBy(_PID, key).agg(F.sum("__cw_flag").alias("__cw_tot"))
-    spanning = (
-        bounds.groupBy(key)
-        .agg(F.count(F.lit(1)).alias("__cw_npid"))
-        .filter(F.col("__cw_npid") > 1)
-        .drop("__cw_npid")
-    )
-    w_key = Window.partitionBy(key).orderBy(_PID)
-    # first-row correction: a continuing chunk's provisional flag (1)
-    # becomes the real gap compare against the predecessor chunk's last
-    # event time; delta is 0 (genuine new session) or -1 (same session)
-    spanning_bounds = _ns_join(bounds, spanning, [key]).withColumn(
-        "__cw_prev_last", F.lag("__cw_last_us").over(w_key)
-    ).withColumn(
-        "__cw_delta",
-        F.when(
-            F.col("__cw_prev_last").isNull()
-            | (F.col("__cw_first_us") - F.col("__cw_prev_last") > gap_us),
-            F.lit(0),
-        ).otherwise(F.lit(-1)),
-    )
-    corr = (
-        _ns_join(spanning_bounds, flag_tot, [_PID, key])
-        .withColumn("__cw_corr_tot", F.col("__cw_tot") + F.col("__cw_delta"))
-        .withColumn(
-            _OFF,
-            F.coalesce(
-                F.sum("__cw_corr_tot").over(
-                    w_key.rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ),
-        )
-        .withColumn("__cw_adj", F.col(_OFF) + F.col("__cw_delta"))
-        .filter(F.col("__cw_adj") != 0)
-        .select(_PID, key, "__cw_adj")
-    )
-    return (
-        _ns_join(local, corr, [_PID, key], "left", broadcast=True)
-        .withColumn(
-            out,
-            (F.col(_LOCAL) + F.coalesce(F.col("__cw_adj"), F.lit(0))).cast("long"),
-        )
-        .drop(_PID, _LOCAL, "__cw_us", "__cw_flag", "__cw_adj")
-    )
+    return _stitched_prefix(
+        src, [key], [ts, tiebreak], out, brk=_gap_break(gap_us), x=_US
+    ).drop(_US, _FLAG, _RN)
 
 
 def chunked_scd2(
@@ -539,7 +588,7 @@ def chunked_scd2(
     (queries/windows.py:scd2_dimension_build), completing the window
     family's chunk-prefix rewrites.
 
-    Pass 1 is :func:`chunked_sessionize`'s machinery with a
+    Pass 1 is :func:`chunked_sessionize`'s stitch with a
     VALUE-CHANGE flag instead of a time-gap flag: each chunk flags
     transitions locally (first row provisionally a transition), chunk
     boundary facts carry the predecessor chunk's LAST value so a
@@ -555,80 +604,20 @@ def chunked_scd2(
     the open-ended current row. This is the trick that keeps pass 2
     skew-free for free.
 
-    Unlike the running-sum/sessionize rewrites the offsets here cannot
-    be pruned to spanning keys only — every chunk-first row needs the
-    predecessor's last value to settle its own flag — so the correction
-    table is O(#chunks) = O(#partitions + #keys present) rows. It joins
-    back by (pid, key) hash join; Spark broadcasts it when it fits and
-    falls back to a shuffle join when a corpus has too many distinct
-    keys for the driver, either of which is skew-safe.
+    Like the other two prefix shapes, the corrections are pruned to
+    spanning keys: only a chunk with a predecessor chunk of the same key
+    can have a wrong provisional first-row flag, and the first chunk of
+    every key — the only chunk of a key that sits in one partition —
+    starts at the key's first row, whose flag is 1. The stitch keeps a
+    spanning chunk whose offset is 0 but whose first-row flag drops, so
+    the correction table is O(#partitions) rows and joins back by
+    broadcast.
     """
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    src = _pin(
-        df.repartitionByRange(n, F.col(key), F.col(ts), F.col(tiebreak)).withColumn(
-            _PID, F.spark_partition_id()
-        ),
-        reliable_checkpoint,
+    src = _chunks(df, [key], [ts, tiebreak], num_partitions, reliable_checkpoint)
+    rows = _stitched_prefix(
+        src, [key], [ts, tiebreak], "version", brk=_change_break, x=value
     )
-    chunk = Window.partitionBy(_PID, key).orderBy(ts, tiebreak)
-    prev_val = F.lag(value).over(chunk)
-    flag = F.when(prev_val.isNull() | (prev_val != F.col(value)), F.lit(1)).otherwise(
-        F.lit(0)
-    )
-    local = (
-        src.withColumn("__cw_flag", flag)
-        .withColumn("__cw_rn", F.row_number().over(chunk))
-        .withColumn(
-            _LOCAL,
-            F.sum("__cw_flag").over(chunk.rowsBetween(Window.unboundedPreceding, 0)),
-        )
-    )
-    bounds = src.groupBy(_PID, key).agg(
-        F.expr(f"min_by({value}, struct({ts}, {tiebreak}))").alias("__cw_first_val"),
-        F.expr(f"max_by({value}, struct({ts}, {tiebreak}))").alias("__cw_last_val"),
-    )
-    flag_tot = local.groupBy(_PID, key).agg(F.sum("__cw_flag").alias("__cw_tot"))
-    w_key = Window.partitionBy(key).orderBy(_PID)
-    corr = (
-        _ns_join(bounds, flag_tot, [_PID, key])
-        .withColumn("__cw_prev_last", F.lag("__cw_last_val").over(w_key))
-        # chunk-first row's REAL flag: 1 unless it continues the
-        # predecessor chunk's final value
-        .withColumn(
-            "__cw_first_flag",
-            F.when(
-                F.col("__cw_prev_last").isNull()
-                | (F.col("__cw_prev_last") != F.col("__cw_first_val")),
-                F.lit(1),
-            ).otherwise(F.lit(0)),
-        )
-        .withColumn("__cw_delta", F.col("__cw_first_flag") - F.lit(1))
-        .withColumn("__cw_corr_tot", F.col("__cw_tot") + F.col("__cw_delta"))
-        .withColumn(
-            _OFF,
-            F.coalesce(
-                F.sum("__cw_corr_tot").over(
-                    w_key.rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ),
-        )
-        .select(_PID, key, "__cw_first_flag", "__cw_delta", _OFF)
-    )
-    rows = (
-        _ns_join(local, corr, [_PID, key])
-        .withColumn(
-            "__cw_real_flag",
-            F.when(F.col("__cw_rn") == 1, F.col("__cw_first_flag")).otherwise(
-                F.col("__cw_flag")
-            ),
-        )
-        .withColumn(
-            "version",
-            (F.col(_LOCAL) + F.col("__cw_delta") + F.col(_OFF)).cast("long"),
-        )
-    )
-    transitions = rows.filter(F.col("__cw_real_flag") == 1).select(
+    transitions = rows.filter(F.col(_FLAG) == 1).select(
         key, F.col(value), F.col(ts).alias("valid_from"), "version"
     )
     nxt = transitions.select(
@@ -694,22 +683,11 @@ def chunked_moving_frame(
     metadata-sized next to the data shuffles.
     """
     order = list(order)
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    src = _pin(
-        df.repartitionByRange(n, F.col(key), *[F.col(c) for c in order]).withColumn(
-            _PID, F.spark_partition_id()
-        ),
-        reliable_checkpoint,
-    )
+    src = _chunks(df, [key], order, num_partitions, reliable_checkpoint)
     w_desc = Window.partitionBy(_PID, key).orderBy(*[F.col(c).desc() for c in order])
     tagged = src.withColumn("__cw_rdesc", F.row_number().over(w_desc))
     chunks = src.groupBy(_PID, key).agg(F.count(F.lit(1)).alias("__cw_n"))
-    spanning = (
-        chunks.groupBy(key)
-        .agg(F.count(F.lit(1)).alias("__cw_npid"))
-        .filter(F.col("__cw_npid") > 1)
-        .drop("__cw_npid")
-    )
+    spanning = _spanning(chunks, [key])
     # candidate pool: the last frame_w-1 rows of every chunk of a
     # spanning key — tiny (<= #spanning-chunks * frame rows)
     cand = _ns_join(

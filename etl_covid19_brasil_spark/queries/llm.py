@@ -5450,6 +5450,8 @@ def tokenizer_unigram_segment(spark: SparkSession, sf: str) -> DataFrame:
     added=16,
 )
 def tokenizer_unigram_train(spark: SparkSession, sf: str) -> DataFrame:
+    import pyarrow as pa
+
     from etl_covid19_brasil_spark.llm.tokenizer import unigram_em_train
 
     fit = unigram_em_train(
@@ -5457,7 +5459,11 @@ def tokenizer_unigram_train(spark: SparkSession, sf: str) -> DataFrame:
     )
     pdf = fit.pieces.copy()
     pdf["prob_u6"] = (pdf["prob"] * 1_000_000 + 0.5).astype("int64")
-    out = spark.createDataFrame(pdf[["piece", "prob_u6"]])
+    # an Arrow table lands as a LocalTableScan under any session conf; a
+    # pandas frame needs the session's Arrow flag (operators/concomp.py)
+    out = spark.createDataFrame(
+        pa.Table.from_pandas(pdf[["piece", "prob_u6"]], preserve_index=False)
+    )
     return out.orderBy(F.desc("prob_u6"), F.asc("piece"))
 
 

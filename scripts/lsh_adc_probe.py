@@ -67,7 +67,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     out: dict = {}
 
-    path = build_scaled_dir(spark, 8)
+    path = build_scaled_dir(spark, 8, tables=("embeddings",))
     emb = load_table(spark, path, "embeddings").cache()
     n = emb.count()
     q = emb.filter(F.col("vec_id") % 20 == 0)

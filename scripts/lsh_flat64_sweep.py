@@ -49,7 +49,7 @@ def main() -> None:
 
     spark = get_spark(app_name="lsh-flat64-sweep")
     spark.sparkContext.setLogLevel("ERROR")
-    path = build_scaled_dir(spark, args.replicas)
+    path = build_scaled_dir(spark, args.replicas, tables=("embeddings",))
     emb = load_table(spark, path, "embeddings").cache()
     n = emb.count()
 

@@ -103,8 +103,16 @@ QUERIES = [
 ]
 
 
-def build_scaled_dir(spark, replicas: int) -> str:
+def build_scaled_dir(spark, replicas: int, tables=None) -> str:
+    """Write the BASE tables scaled ``replicas``-fold into a temp dir and
+    return its path. ``tables`` names the tables to write (all of them
+    by default), so a caller that reads only embeddings skips the 8x
+    lineitem, orders, documents and events writes."""
     out = Path(tempfile.mkdtemp(prefix=f"scale{replicas}x_"))
+
+    def want(t: str) -> bool:
+        return tables is None or t in tables
+
     docs = load_table(spark, BASE, "documents")
     emb = load_table(spark, BASE, "embeddings")
     li = load_table(spark, BASE, "lineitem")
@@ -139,7 +147,8 @@ def build_scaled_dir(spark, replicas: int) -> str:
         # sampling) see values consistent with text (ADVICE r6).
         .withColumn("n_chars", F.length("text").cast(dict(docs.dtypes)["n_chars"]))
     )
-    d.write.mode("overwrite").parquet(str(out / "documents.parquet"))
+    if want("documents"):
+        d.write.mode("overwrite").parquet(str(out / "documents.parquet"))
 
     # embeddings: roll dims per replica; ids shifted
     e = emb.select("*", reps).select(
@@ -150,42 +159,46 @@ def build_scaled_dir(spark, replicas: int) -> str:
         ).alias("embedding"),
         *[c for c in emb.columns if c not in ("vec_id", "embedding")],
     )
-    e.write.mode("overwrite").parquet(str(out / "embeddings.parquet"))
+    if want("embeddings"):
+        e.write.mode("overwrite").parquet(str(out / "embeddings.parquet"))
 
     shift = F.col("rep").cast("long") * F.lit(10**9)
-    li.select("*", reps).select(
-        *[
-            (F.col(c) + shift).alias(c)
-            if c in ("l_orderkey", "l_partkey", "l_suppkey")
-            else F.col(c)
-            for c in li.columns
-        ]
-    ).write.mode("overwrite").parquet(str(out / "lineitem.parquet"))
-    orders.select("*", reps).select(
-        *[
-            (F.col(c) + shift).alias(c)
-            if c in ("o_orderkey", "o_custkey")
-            else F.col(c)
-            for c in orders.columns
-        ]
-    ).write.mode("overwrite").parquet(str(out / "orders.parquet"))
+    if want("lineitem"):
+        li.select("*", reps).select(
+            *[
+                (F.col(c) + shift).alias(c)
+                if c in ("l_orderkey", "l_partkey", "l_suppkey")
+                else F.col(c)
+                for c in li.columns
+            ]
+        ).write.mode("overwrite").parquet(str(out / "lineitem.parquet"))
+    if want("orders"):
+        orders.select("*", reps).select(
+            *[
+                (F.col(c) + shift).alias(c)
+                if c in ("o_orderkey", "o_custkey")
+                else F.col(c)
+                for c in orders.columns
+            ]
+        ).write.mode("overwrite").parquet(str(out / "orders.parquet"))
 
     # events: disjoint user/event spaces per replica — sessionize, funnel,
     # retention, sequence-gap and running-distinct quantities all grow
     # exactly linearly (cross-replica users never interleave). Read via
     # load_table (nanos handling) and write normalized micros.
-    ev = load_table(spark, BASE, "events")
-    ev.select("*", reps).select(
-        (F.col("event_id") + shift).alias("event_id"),
-        "ts",
-        (F.col("user_id") + shift).alias("user_id"),
-        *[c for c in ev.columns if c not in ("event_id", "ts", "user_id")],
-    ).write.mode("overwrite").parquet(str(out / "events.parquet"))
+    if want("events"):
+        ev = load_table(spark, BASE, "events")
+        ev.select("*", reps).select(
+            (F.col("event_id") + shift).alias("event_id"),
+            "ts",
+            (F.col("user_id") + shift).alias("user_id"),
+            *[c for c in ev.columns if c not in ("event_id", "ts", "user_id")],
+        ).write.mode("overwrite").parquet(str(out / "events.parquet"))
 
     # small dims: copy as-is (queries join them by the unshifted keys of
     # replica 0 only where keys shifted; revenue query joins orders ->
     # customer? keep nation/customer/supplier/part/region intact)
-    for t in ("region", "nation", "customer", "supplier", "part"):
+    for t in filter(want, ("region", "nation", "customer", "supplier", "part")):
         src = Path(BASE) / f"{t}.parquet"
         dst = out / f"{t}.parquet"
         if src.is_dir():

@@ -328,7 +328,10 @@ def _replica_corpus(spark, replicas: int):
 def _numpy_truth_topk(mat, ids, k: int = 5) -> set:
     """Exact top-k cosine pairs (self excluded, neighbor_id-asc
     tie-break — brute_force_topk's contract), query-chunked so the sims
-    allocation stays bounded."""
+    allocation stays bounded. Only the entries at or above each row's
+    k-th largest cosine can rank in its top k, so the (cosine desc, id
+    asc) sort runs on those candidates alone (ties at the k-th value
+    included), not on the whole row."""
     import numpy as np
 
     truth = set()
@@ -336,15 +339,23 @@ def _numpy_truth_topk(mat, ids, k: int = 5) -> set:
         sims = mat[s : s + 2000] @ mat.T
         for i in range(sims.shape[0]):
             sims[i, s + i] = -np.inf
-        order = np.lexsort(
-            (np.broadcast_to(ids, sims.shape), -sims), axis=-1
-        )[:, :k]
-        for qi, row in zip(ids[s : s + 2000], order):
-            truth.update((int(qi), int(ids[j])) for j in row)
+        kth = -np.partition(-sims, k - 1, axis=1)[:, k - 1]
+        for qi, row, t in zip(ids[s : s + 2000], sims, kth):
+            cand = np.flatnonzero(row >= t)
+            order = cand[np.lexsort((ids[cand], -row[cand]))[:k]]
+            truth.update((int(qi), int(ids[j])) for j in order)
     return truth
 
 
-def test_ivf_default_config_recall_holds_at_8x(spark):
+@pytest.fixture(scope="module")
+def replica8x(spark):
+    """The 8x replica corpus and its exact top-5 truth, built once for
+    the two recall tests that read it: (DataFrame, truth pairs)."""
+    emb, mat, ids = _replica_corpus(spark, 8)
+    return emb, _numpy_truth_topk(mat, ids, k=5)
+
+
+def test_ivf_default_config_recall_holds_at_8x(replica8x):
     """The r10 8x probe found default-config IVF recall (fixed
     n_probe=10) silently decaying to 0.679/0.653 — below the pinned 0.8
     floors — while the fraction-held config passed. auto_n_probe now
@@ -353,8 +364,7 @@ def test_ivf_default_config_recall_holds_at_8x(spark):
     test_lsh_table_count_tracks_plane_count)."""
     from etl_covid19_brasil_spark.llm.ann import ivf_topk, ivfpq_topk
 
-    emb, mat, ids = _replica_corpus(spark, 8)
-    truth = _numpy_truth_topk(mat, ids, k=5)
+    emb, truth = replica8x
 
     got = {(r["query_id"], r["neighbor_id"]) for r in ivf_topk(emb, k=5).collect()}
     r_ivf = len(got & truth) / len(truth)
@@ -1549,7 +1559,7 @@ def test_ann_topk_auto_exact_tier_at_gate_scale(spark):
     assert set(rows[0].asDict()) == {"query_id", "neighbor_id", "cosine", "rank"}
 
 
-def test_ann_topk_auto_routes_flat_to_lsh_and_holds_recall(spark):
+def test_ann_topk_auto_routes_flat_to_lsh_and_holds_recall(replica8x):
     """Above the exact gate on a FLAT corpus (the 8x dimension-rolled
     replicas — adversarial near-neighbor structure, no clusters) the
     router must pick LSH — the linear-total-work tier where
@@ -1557,11 +1567,10 @@ def test_ann_topk_auto_routes_flat_to_lsh_and_holds_recall(spark):
     the 8x flat recall envelope (scale_check measured 0.933)."""
     from etl_covid19_brasil_spark.llm.ann import ann_topk_auto, pick_ann_tier
 
-    emb, mat, ids = _replica_corpus(spark, 8)
+    emb, truth = replica8x
     route = pick_ann_tier(emb)
     assert route.tier == "lsh", f"flat 8x corpus must route lsh: {route}"
     assert route.probe is not None and route.probe.route == "fraction"
-    truth = _numpy_truth_topk(mat, ids, k=5)
     got = {(r["query_id"], r["neighbor_id"]) for r in ann_topk_auto(emb, k=5).collect()}
     r = len(got & truth) / len(truth)
     print(f"auto-router 8x flat (lsh tier) recall: {r:.3f}")

@@ -424,45 +424,56 @@ def test_lsh_search_recall_floor_on_gate_split(spark):
     assert r >= 0.9, f"two-frame LSH gate recall collapsed: {r:.3f}"
 
 
+@pytest.fixture(scope="module")
+def flat8x(spark):
+    """The 8x flat split (16,000 dimension-rolled vectors, 800 queries
+    with vec_id % 20 == 0, 15,200 index rows), built once for the two
+    8x LSH recall floors, with the full-vector ``lsh_search(q, i, k=5)``
+    pairs both of them compare against: (q, i, lsh_pairs)."""
+    import shutil
+    import sys
+    from pathlib import Path
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+    import pyspark.sql.functions as F
+
+    from etl_covid19_brasil_spark.io import load_table
+    from etl_covid19_brasil_spark.llm.search import lsh_search
+    from scripts.scale_check import build_scaled_dir
+
+    path = build_scaled_dir(spark, 8, tables=("embeddings",))
+    try:
+        emb = load_table(spark, path, "embeddings").cache()
+        emb.count()
+        q = emb.filter(F.col("vec_id") % 20 == 0)
+        i = emb.filter(F.col("vec_id") % 20 != 0)
+        lsh = {
+            (r["query_id"], r["neighbor_id"]) for r in lsh_search(q, i, k=5).collect()
+        }
+        yield q, i, lsh
+        emb.unpersist()
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+
+
 @pytest.mark.slow  # full-lane tier: 8x corpus build + exact reference
-def test_lsh_search_recall_floor_at_8x_flat(spark):
+def test_lsh_search_recall_floor_at_8x_flat(flat8x):
     """The tier's quality gate at the scale it exists for: 8x flat
     (16,000 dimension-rolled vectors, split 800 queries / 15,200
     index), derived P=6 / T=11, recall vs the exact reference —
     measured 0.959. Also the regression pin for the recall-bearing
     count fix: deriving P from Catalyst's filtered-frame estimate
     instead of the exact count measured P=12 and recall 0.367."""
-    import sys
-    from pathlib import Path
+    from etl_covid19_brasil_spark.llm.search import ann_search
 
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-    from scripts.scale_check import build_scaled_dir
-
-    import pyspark.sql.functions as F
-    import shutil
-
-    from etl_covid19_brasil_spark.io import load_table
-    from etl_covid19_brasil_spark.llm.search import ann_search, lsh_search
-
-    path = build_scaled_dir(spark, 8)
-    try:
-        emb = load_table(spark, path, "embeddings").cache()
-        emb.count()
-        q = emb.filter(F.col("vec_id") % 20 == 0)
-        i = emb.filter(F.col("vec_id") % 20 != 0)
-        ref = {
-            (r["query_id"], r["neighbor_id"])
-            for r in ann_search(q, i, k=5, n_index=i.count()).collect()
-        }
-        got = {
-            (r["query_id"], r["neighbor_id"]) for r in lsh_search(q, i, k=5).collect()
-        }
-        r = len(got & ref) / len(ref)
-        print(f"lsh_search 8x flat split recall: {r:.3f}")
-        assert r >= 0.85, f"two-frame LSH 8x recall collapsed: {r:.3f}"
-        emb.unpersist()
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+    q, i, got = flat8x
+    ref = {
+        (r["query_id"], r["neighbor_id"])
+        for r in ann_search(q, i, k=5, n_index=i.count()).collect()
+    }
+    r = len(got & ref) / len(ref)
+    print(f"lsh_search 8x flat split recall: {r:.3f}")
+    assert r >= 0.85, f"two-frame LSH 8x recall collapsed: {r:.3f}"
 
 
 def test_lsh_adc_search_matches_bucket_recall_on_gate_split(spark, monkeypatch):
@@ -535,16 +546,22 @@ def test_ann_topk_auto_budget_routes_flat_to_adc(spark, monkeypatch):
     assert full.count() > 0 and not hit
 
 
-@pytest.mark.slow  # full-lane tier: four materializations + PQ training
+@pytest.mark.slow  # full-lane tier: three materializations + PQ training
 def test_ann_search_budget_routes_flat_big_batch_to_adc(spark, monkeypatch):
     """A DECLARED index byte budget on the flat route with an over-bound
     query batch must route the banded ADC form instead of the cogrouped
     BNL (the budget is the same explicit opt-in that routes ivfpq on
     clustered shapes); without the budget the identical call stays on
-    the exact BNL."""
+    the exact BNL.
+
+    Both bounds shrink to meet the 300-row index and 300-query batch
+    (the index bound to 200 rows, the broadcast batch to 50), so the
+    counts handed to the router are the true ones: the LSH plane count
+    derives from them, and a claimed 200,001-row index on 300 rows
+    would band into ~1,000 buckets per table."""
     import etl_covid19_brasil_spark.llm.search as search_mod
     from etl_covid19_brasil_spark.llm.ann import TierRoute
-    from etl_covid19_brasil_spark.llm.search import MAX_INDEX_ROWS, ann_search
+    from etl_covid19_brasil_spark.llm.search import ann_search
 
     rng = np.random.default_rng(17)
     n, dim = 600, 16
@@ -553,8 +570,11 @@ def test_ann_search_budget_routes_flat_big_batch_to_adc(spark, monkeypatch):
         pd.DataFrame({"vec_id": np.arange(n, dtype=np.int64), "embedding": list(vecs)})
     )
     q, i = df.filter("vec_id % 2 = 0"), df.filter("vec_id % 2 <> 0")
-    flat = TierRoute("lsh", MAX_INDEX_ROWS + 1, dim, None)
+    # the exact reference on the same split, under the real bounds
+    ref = {(r["query_id"], r["neighbor_id"]) for r in ann_search(q, i, k=5).collect()}
+    monkeypatch.setattr(search_mod, "MAX_INDEX_ROWS", 200)
     monkeypatch.setattr(search_mod, "QUERY_BROADCAST_MAX", 50)
+    flat = TierRoute("lsh", 300, dim, None)
     hit = []
     orig = search_mod.lsh_adc_search
 
@@ -565,60 +585,37 @@ def test_ann_search_budget_routes_flat_big_batch_to_adc(spark, monkeypatch):
     monkeypatch.setattr(search_mod, "lsh_adc_search", spy)
     got = ann_search(
         q, i, k=5, route=flat,
-        n_index=MAX_INDEX_ROWS + 1, n_queries=300,
+        n_index=300, n_queries=300,
         index_budget_bytes=1024,  # raw float64 index overflows this
     )
-    assert got.count() > 0 and hit, "budget did not route the ADC form"
+    rows = got.collect()
+    assert rows and hit, "budget did not route the ADC form"
     # recall sanity vs the exact result on the same split
-    ref = {(r["query_id"], r["neighbor_id"]) for r in ann_search(q, i, k=5).collect()}
-    adc = {(r["query_id"], r["neighbor_id"]) for r in got.collect()}
+    adc = {(r["query_id"], r["neighbor_id"]) for r in rows}
     assert len(adc & ref) / len(ref) >= 0.8
     # no budget -> the exact BNL, never a silent approximate default
     hit.clear()
-    exact = ann_search(
-        q, i, k=5, route=flat, n_index=MAX_INDEX_ROWS + 1, n_queries=300
-    )
+    exact = ann_search(q, i, k=5, route=flat, n_index=300, n_queries=300)
     assert not hit
     assert {(r["query_id"], r["neighbor_id"]) for r in exact.collect()} == ref
 
 
 @pytest.mark.slow  # full-lane tier: 8x corpus + PQ train + exact reference
-def test_lsh_adc_search_recall_floor_at_8x_flat(spark):
+def test_lsh_adc_search_recall_floor_at_8x_flat(flat8x):
     """The budget tier's quality gate at the scale it exists for (the
     VERDICT r15 item 3 'done' condition): 8x flat split, recall vs the
     FULL-VECTOR lsh_search it replaces — the byte saving must not cost
     bucket-level recall beyond the ADC pool bound."""
-    import shutil
-    import sys
-    from pathlib import Path
+    from etl_covid19_brasil_spark.llm.search import lsh_adc_search
 
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-    import pyspark.sql.functions as F
-
-    from etl_covid19_brasil_spark.io import load_table
-    from etl_covid19_brasil_spark.llm.search import lsh_adc_search, lsh_search
-    from scripts.scale_check import build_scaled_dir
-
-    path = build_scaled_dir(spark, 8)
-    try:
-        emb = load_table(spark, path, "embeddings").cache()
-        emb.count()
-        q = emb.filter(F.col("vec_id") % 20 == 0)
-        i = emb.filter(F.col("vec_id") % 20 != 0)
-        full = {
-            (r["query_id"], r["neighbor_id"])
-            for r in lsh_search(q, i, k=5).collect()
-        }
-        adc = {
-            (r["query_id"], r["neighbor_id"])
-            for r in lsh_adc_search(q, i, k=5).collect()
-        }
-        r = len(adc & full) / len(full)
-        print(f"lsh_adc_search 8x flat recall vs full-vector form: {r:.3f}")
-        assert r >= 0.85, f"ADC budget tier recall collapsed: {r:.3f}"
-        emb.unpersist()
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+    q, i, full = flat8x
+    adc = {
+        (r["query_id"], r["neighbor_id"])
+        for r in lsh_adc_search(q, i, k=5).collect()
+    }
+    r = len(adc & full) / len(full)
+    print(f"lsh_adc_search 8x flat recall vs full-vector form: {r:.3f}")
+    assert r >= 0.85, f"ADC budget tier recall collapsed: {r:.3f}"
 
 
 @pytest.mark.slow  # full-lane tier: Lloyd + PQ train on a 4k corpus

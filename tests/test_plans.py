@@ -624,19 +624,35 @@ def test_top_k_per_group_partial_window_group_limit(spark, specs):
 
 
 def test_chunked_running_sum_plan_shape(spark, specs):
-    """The chunk-prefix rewrite's scale claims, pinned in the plan:
-    (1) the per-key offsets reach the data through a BroadcastHashJoin
-    — if they ever degrade to a shuffle join the O(#partitions)
-    broadcast claim is gone; (2) every DATA-sized exchange clusters on
-    (__cw_pid, key), never the bare key — a bare-key hashpartitioning
-    of the main input would resurrect exactly the one-reducer-per-key
-    skew the operator exists to remove (the bare-key exchange that IS
-    present belongs to the O(#chunks) totals/offsets side)."""
-    p = plan_of(q(specs, spark, "win_running_sum_chunked"))
-    assert "BroadcastHashJoin LeftOuter" in p, p
-    assert "SortMergeJoin LeftOuter" not in p, p
-    # the window sort requirement rides (pid, key) clustering
-    assert "hashpartitioning(__cw_pid" in p, p
+    """The chunk-prefix rewrite's scale claims, pinned in the plan of
+    every shape built on the shared stitch (running sum, sessionize,
+    SCD2): (1) the per-key offsets — for sessionize and SCD2 also the
+    first-row corrections — reach the data through a broadcast left
+    join with the O(#partitions) table on the build side; if it ever
+    degrades to a shuffle join, or the planner broadcasts the DATA side
+    instead, the O(#partitions) broadcast claim is gone; (2) every
+    DATA-sized exchange clusters on (__cw_pid, key), never the bare key
+    — a bare-key hashpartitioning of the main input would resurrect
+    exactly the one-reducer-per-key skew the operator exists to remove
+    (the bare-key exchange that IS present belongs to the O(#chunks)
+    totals/offsets side)."""
+    plans = {
+        name: plan_of(q(specs, spark, name))
+        for name in (
+            "win_running_sum_chunked",
+            "win_sessionize_events_chunked",
+            "scd2_dimension_build_chunked",
+        )
+    }
+    for name, p in plans.items():
+        assert "BroadcastHashJoin LeftOuter BuildRight" in p, (name, p)
+        # the window sort requirement rides (pid, key) clustering
+        assert "hashpartitioning(__cw_pid" in p, (name, p)
+        # SCD2's pass 2 is a (key, version + 1) self-join by design —
+        # a composite key that subdivides hot keys; the offsets never
+        # arrive by shuffle join
+        if name != "scd2_dimension_build_chunked":
+            assert "SortMergeJoin LeftOuter" not in p, (name, p)
 
 
 def test_rank_maxsim_broadcasts_query_side_and_limits_topk(spark, specs):

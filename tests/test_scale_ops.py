@@ -772,19 +772,25 @@ def test_chunked_running_sum_reliable_checkpoint_smoke(spark, tmp_path):
     assert rows == {(r["k"], r["seq"]): r["rs"] for r in default.collect()}
 
 
-def test_running_sum_auto_routes_both_ways_on_skew_profiles(spark):
+def test_running_sum_auto_routes_both_ways_on_skew_profiles(spark, caplog):
     """The skew-aware dispatcher (VERDICT r10 item 6) must route a
     uniform profile to the plain window and a hot-key profile to the
     chunked rewrite — and the auto result must equal the plain window
     either way (both routes are exact; only the plan differs). The
     crossover is parameterized down so a CI-sized corpus exercises both
-    branches with a full-fraction sample."""
+    branches with a full-fraction sample. Every decision logs one
+    structured record of its inputs and route."""
+    import logging
+
     from pyspark.sql.window import Window
 
+    from etl_covid19_brasil_spark.operators import chunked_window
     from etl_covid19_brasil_spark.operators.chunked_window import (
         pick_window_strategy,
         running_sum_auto,
     )
+
+    caplog.set_level(logging.INFO, logger=chunked_window.__name__)
 
     uniform = spark.range(4_000).select(
         F.pmod(F.col("id"), F.lit(1000)).alias("k"),
@@ -814,6 +820,14 @@ def test_running_sum_auto_routes_both_ways_on_skew_profiles(spark):
             ).collect()
         }
         assert got == want
+    recs = [r.window_strategy for r in caplog.records if hasattr(r, "window_strategy")]
+    # two direct picks, then one per running_sum_auto call
+    assert [r["route"] for r in recs] == ["plain", "chunked", "plain", "chunked"]
+    uni, hot_rec = recs[0], recs[1]
+    assert uni["keys"] == ["k"] and uni["sample_fraction"] == 1.0
+    assert uni["crossover"] == 100 and hot_rec["crossover"] == 100
+    # full-fraction sample: the estimate is the exact hottest-key count
+    assert uni["est_hot_rows"] == 4 and hot_rec["est_hot_rows"] == 2_000
 
 
 def test_auto_dispatch_family_routes_both_ways(spark):

@@ -212,3 +212,25 @@ def test_sample_distribution_matches_lattice_posterior():
         for s in range(n)
     )
     assert abs(hits0 / n - 0.5) < 0.02, hits0 / n
+
+
+def test_unigram_train_frame_is_arrow_backed_without_arrow_conf(spark):
+    """tokenizer_unigram_train builds its result from an Arrow table, so
+    a session that leaves ``spark.sql.execution.arrow.pyspark.enabled``
+    off still plans a LocalTableScan, not a pickled-row ExistingRDD whose
+    every job spawns Python workers — and returns the same rows."""
+    from etl_covid19_brasil_spark.queries.llm import tokenizer_unigram_train
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    old = spark.conf.get(key)
+    want = tokenizer_unigram_train(spark, SF).collect()
+    spark.conf.set(key, "false")
+    try:
+        df = tokenizer_unigram_train(spark, SF)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        got = df.collect()
+    finally:
+        spark.conf.set(key, old)
+    assert "ExistingRDD" not in plan, plan
+    assert "LocalTableScan" in plan, plan
+    assert got == want
