@@ -729,20 +729,30 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name != "events":
         return spark.read.parquet(path)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    ts_dtype = dict(df.dtypes).get("ts")
+    return events_ts(spark.read.parquet(path))
+
+
+def events_ts(events: DataFrame) -> DataFrame:
+    """Normalize the ``ts`` column of raw events.parquet, read under
+    ``spark.sql.legacy.parquet.nanosAsLong``, to TIMESTAMP — the one
+    conversion behind both the batch loader (:func:`load_table`) and the
+    file-replay stream (streaming/jobs.py:file_replay_stream).
+
+    Spark 4.1 reads TIMESTAMP(NANOS) parquet as timestamp_ntz, which
+    unix_micros()/withWatermark() reject; under the UTC session TZ that
+    :func:`load_table` pins, the cast is a relabel, not a wall-clock shift. Earlier readers
+    yield raw nanosecond longs, converted with exact integer division:
+    ``timestamp_micros(ts div 1000)`` truncates exactly like DuckDB's
+    ns->us read of the same file.
+    """
+    import pyspark.sql.functions as F
+
+    ts_dtype = dict(events.dtypes).get("ts")
     if ts_dtype == "bigint":
-        import pyspark.sql.functions as F
-
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_dtype == "timestamp_ntz":
-        # Spark 4.1 reads TIMESTAMP(NANOS) parquet as timestamp_ntz;
-        # unix_micros()/withWatermark() require TIMESTAMP. The session TZ is
-        # pinned UTC above, so the cast is a relabel, not a wall-clock shift.
-        import pyspark.sql.functions as F
-
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+        return events.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if ts_dtype == "timestamp_ntz":
+        return events.withColumn("ts", F.col("ts").cast("timestamp"))
+    return events
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -49,6 +49,7 @@ from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
@@ -139,17 +140,19 @@ def _piece_table_from_wc(
         .limit(int(top_multi))
     )
     kept = chars.unionByName(multi).toPandas()  # <= top_multi + alphabet
-    spark = wc.sparkSession
-    schema = "piece string, freq long, nll_u6 long"
-    if kept.empty:
-        return spark.createDataFrame([], schema=schema)
     tot = float(int(kept["freq"].sum()))  # exact long sum, then the same
     # double division + log + floor(x*1e6 + 0.5) the JVM projection ran
     kept["nll_u6"] = [
         int(math.floor(math.log(tot / float(f)) * 1000000 + 0.5))
         for f in kept["freq"]
     ]
-    return spark.createDataFrame(kept, schema=schema)
+    # An Arrow table lands as a LocalRelation (LocalTableScan) under any
+    # session conf and at any size, zero included; a pandas frame or a
+    # row list becomes pickled rows (Scan ExistingRDD) when Arrow is off.
+    return wc.sparkSession.createDataFrame(
+        pa.Table.from_pandas(kept, preserve_index=False),
+        "piece string, freq long, nll_u6 long",
+    )
 
 
 def _viterbi_word(word: str, table: dict, max_len: int):

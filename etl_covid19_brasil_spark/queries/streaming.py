@@ -15,6 +15,16 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from etl_covid19_brasil_spark.registry import T, query
+from etl_covid19_brasil_spark.streaming.jobs import (
+    file_replay_stream,
+    interval_join_click_purchase,
+    run_foreach_batch_upsert,
+    run_to_memory,
+    running_user_totals,
+    session_counts,
+    static_enrich_segment_sums,
+    tumbling_counts,
+)
 
 
 @query(
@@ -37,12 +47,8 @@ from etl_covid19_brasil_spark.registry import T, query
     "assigns every event to the same bucket Spark does.",
 )
 def stream_tumbling_window(spark: SparkSession, sf: str) -> DataFrame:
-    e = T(spark, sf, "events")
-    return (
-        e.groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
-    )
+    # the batch twin of the streaming job: a batch withWatermark is a no-op
+    return tumbling_counts(T(spark, sf, "events"))
 
 
 @query(
@@ -112,15 +118,10 @@ def stream_sliding_window(spark: SparkSession, sf: str) -> DataFrame:
     "TIMESTAMP_NS-reading oracle engine.",
 )
 def stream_session_window(spark: SparkSession, sf: str) -> DataFrame:
-    e = T(spark, sf, "events")
-    return (
-        e.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.unix_micros(F.col("w.start")).alias("session_start_us"),
-            "n_events",
-        )
+    return session_counts(T(spark, sf, "events")).select(
+        "user_id",
+        F.unix_micros("session_start").alias("session_start_us"),
+        "n_events",
     )
 
 
@@ -157,8 +158,6 @@ def stream_dedup_keys(spark: SparkSession, sf: str) -> DataFrame:
     "is the identical plan minus the (batch-no-op) watermarks.",
 )
 def stream_interval_join(spark: SparkSession, sf: str) -> DataFrame:
-    from etl_covid19_brasil_spark.streaming.jobs import interval_join_click_purchase
-
     e = T(spark, sf, "events")
     return interval_join_click_purchase(e, e)
 
@@ -185,12 +184,6 @@ def stream_interval_join(spark: SparkSession, sf: str) -> DataFrame:
 )
 def stream_arbitrary_state(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql import Window
-
-    from etl_covid19_brasil_spark.streaming.jobs import (
-        file_replay_stream,
-        run_to_memory,
-        running_user_totals,
-    )
 
     stream = file_replay_stream(spark, sf)
     q = run_to_memory(running_user_totals(stream), "arb_state_snapshots", mode="update")
@@ -230,8 +223,6 @@ def stream_arbitrary_state(spark: SparkSession, sf: str) -> DataFrame:
     "this batch twin in tests/test_streaming.py.",
 )
 def stream_static_enrich(spark: SparkSession, sf: str) -> DataFrame:
-    from etl_covid19_brasil_spark.streaming.jobs import static_enrich_segment_sums
-
     e = T(spark, sf, "events")
     c = T(spark, sf, "customer")
     # the batch twin of the streaming job: identical plan minus the watermark
@@ -312,8 +303,6 @@ def stream_windowed_topk(spark: SparkSession, sf: str) -> DataFrame:
     "the actual micro-batch executor against SQL, not the batch twin.",
 )
 def stream_foreach_batch_upsert(spark: SparkSession, sf: str) -> DataFrame:
-    from etl_covid19_brasil_spark.streaming.jobs import run_foreach_batch_upsert
-
     return run_foreach_batch_upsert(spark, sf, n_files=4)
 
 
@@ -338,37 +327,24 @@ def stream_foreach_batch_upsert(spark: SparkSession, sf: str) -> DataFrame:
     "exactly here.",
 )
 def scan_python_datasource_stream(spark: SparkSession, sf: str) -> DataFrame:
-    import time
     import uuid
 
     from etl_covid19_brasil_spark.io import register_synthetic_stream_source
 
     register_synthetic_stream_source(spark)
     name = f"synth_stream_{uuid.uuid4().hex[:8]}"
-    q = (
+    stream = (
         spark.readStream.format("synth_stream")
         .option("n", 500)
         .option("batch_rows", 137)
         .load()
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(processingTime="0 seconds")
-        .start()
     )
-    try:
-        deadline = time.monotonic() + 120
-        while time.monotonic() < deadline:
-            if spark.table(name).count() >= 500:
-                break
-            time.sleep(0.5)
-        else:
-            raise TimeoutError("synthetic stream did not drain")
-    finally:
-        q.stop()
-    # materialize before the memory table goes away with the query
-    rows = spark.table(name).collect()
-    return spark.createDataFrame(rows, spark.table(name).schema)
+    # processAllAvailable drains every offset the source reports; an
+    # availableNow trigger would stop after the first simple-reader batch
+    run_to_memory(stream, name, mode="append").stop()
+    # materialize before the memory table goes away with the query, as an
+    # Arrow-built LocalRelation rather than pickled rows
+    return spark.createDataFrame(spark.table(name).toArrow())
 
 
 @query(

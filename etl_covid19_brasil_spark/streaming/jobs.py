@@ -13,6 +13,14 @@ runs in batch tests and under ``readStream`` file replay:
 Watermarks bound state: at 100 TB/day of events the 10-minute watermark
 means each executor holds only the open windows, and late rows beyond it
 are dropped instead of growing state forever.
+
+The micro-batch replay rig is written once and shared by every job that
+replays a fixture: :func:`_stage_slices` cuts a frame into ``n`` ordered
+single-file slices, :func:`_staged_stream` reads a staged directory back
+as a file-source stream, :func:`_drain` runs a foreachBatch sink to the
+end of the backlog under ``trigger(availableNow=True)``, and
+:func:`_fold` folds a user's pandas batches into the (count, exact cents,
+last event time) state every stateful processor here keeps.
 """
 
 from __future__ import annotations
@@ -27,6 +35,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
 
+from etl_covid19_brasil_spark.io import events_ts, load_table
+
+# Closed-session rows and per-user session state of the two inactivity jobs
+_SESSION_OUT = "user_id long, last_seen_ms long, n_events long, value_cents long"
+_SESSION_STATE = "last_ms long, n long, cents long"
+
 
 def file_replay_stream(
     spark: SparkSession, sf_dir: str, files_per_trigger: int = 1
@@ -38,28 +52,115 @@ def file_replay_stream(
     streaming sources require an explicit schema by design (no inference
     scan on an unbounded source).
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     stage = Path(tempfile.mkdtemp(prefix="events_stream_"))
     src = Path(f"{sf_dir}/events.parquet")
-    if src.is_dir():
-        for i, f in enumerate(sorted(src.glob("*.parquet"))):
-            shutil.copy(f, stage / f"part_{i}.parquet")
-    else:
-        shutil.copy(src, stage / "part_0.parquet")
-    stream = (
-        spark.readStream.schema(schema)
+    for i, f in enumerate(sorted(src.glob("*.parquet")) if src.is_dir() else [src]):
+        shutil.copy(f, stage / f"part_{i}.parquet")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # withWatermark() requires TIMESTAMP (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE)
+    return events_ts(_staged_stream(spark, stage, files_per_trigger))
+
+
+def _staged_stream(
+    spark: SparkSession, stage: Path, files_per_trigger: int = 1
+) -> DataFrame:
+    """Read a staged parquet directory back as a file-source stream of
+    ``files_per_trigger`` files per micro-batch, with the schema of the
+    staged files — streaming sources require an explicit schema by design
+    (no inference scan on an unbounded source)."""
+    return (
+        spark.readStream.schema(spark.read.parquet(str(stage)).schema)
         .option("maxFilesPerTrigger", files_per_trigger)
         .parquet(str(stage))
     )
-    ts_dtype = dict(stream.dtypes).get("ts")
-    if ts_dtype == "bigint":
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_dtype == "timestamp_ntz":
-        # timestamp_ntz -> timestamp is a relabel under the UTC session TZ;
-        # withWatermark() requires TIMESTAMP (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE).
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+
+
+def _stage_slices(df: DataFrame, order: list, n_files: int, stage: Path) -> Path:
+    """Stage ``df`` into ``stage`` as ``n_files`` single-file slices
+    ``slice_000.parquet``, ... cut by a global ntile over ``order``, so a
+    :func:`_staged_stream` replay runs one micro-batch per slice in that
+    order (the file source replays files in the order they were written).
+
+    Each slice is written with Spark and its single part file renamed to
+    a controlled, ordered name — no driver transit. The global ntile
+    window is fixture-rig-only: production streams arrive from
+    Kafka/files and are never re-staged at all.
+    """
+    sliced = df.withColumn("__slice", F.ntile(n_files).over(Window.orderBy(*order)))
+    stage.mkdir(parents=True, exist_ok=True)
+    for i in range(n_files):
+        tmp = stage / f"_tmp_{i}"
+        (
+            sliced.filter(F.col("__slice") == i + 1)
+            .drop("__slice")
+            .coalesce(1)
+            .write.parquet(str(tmp))
+        )
+        part = next(tmp.glob("part-*.parquet"))
+        part.rename(stage / f"slice_{i:03d}.parquet")
+        shutil.rmtree(tmp)
+    return stage
+
+
+def _await_or_stop(q: StreamingQuery, timeout_seconds: float) -> bool:
+    """Wait for a self-terminating query; stop it if it outlives the
+    timeout. Returns True when it ended by itself."""
+    finished = q.awaitTermination(timeout_seconds)
+    if not finished:
+        q.stop()
+    return finished
+
+
+def _drain(
+    stream: DataFrame,
+    sink,
+    timeout_seconds: float,
+    what: str,
+    checkpoint_dir: str | None = None,
+) -> None:
+    """Run the foreachBatch ``sink`` over every micro-batch pending in
+    ``stream`` under ``trigger(availableNow=True)`` — the bounded replay
+    every foreachBatch job here drives — and raise ``TimeoutError`` when
+    the query does not end by itself within ``timeout_seconds``."""
+    writer = (
+        stream.writeStream.outputMode("append")
+        .foreachBatch(sink)
+        .trigger(availableNow=True)
+    )
+    if checkpoint_dir is not None:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    if not _await_or_stop(writer.start(), timeout_seconds):
+        raise TimeoutError(f"{what} replay did not finish")
+
+
+def _fold(pdfs, n: int = 0, cents: int = 0, last_us: int = 0) -> tuple:
+    """Fold one user's pandas batches into ``(n_events, value_cents,
+    last_us)``: event count, exact integer-cents value total and the
+    latest event time in epoch microseconds, starting from the given
+    state."""
+    import pandas as pd
+
+    for pdf in pdfs:
+        n += len(pdf)
+        cents += int(pdf["value"].mul(100).round().sum())
+        batch_max = pdf["ts"].max()
+        if pd.notna(batch_max):
+            last_us = max(last_us, int(batch_max.value // 1000))
+    return n, cents, last_us
+
+
+def _session_row(key, last_ms: int, n: int, cents: int):
+    """The one-row closed-session summary both inactivity jobs emit."""
+    import pandas as pd
+
+    return pd.DataFrame(
+        {
+            "user_id": [key[0]],
+            "last_seen_ms": [last_ms],
+            "n_events": [n],
+            "value_cents": [cents],
+        }
+    )
 
 
 def rate_stream(
@@ -202,37 +303,9 @@ def running_user_totals(events: DataFrame, watermark: str = "1 hour") -> DataFra
     """
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        LongType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("n_events", LongType()),
-            StructField("total_value_cents", LongType()),
-            StructField("last_ts", TimestampType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("n_events", LongType()),
-            StructField("total_value_cents", LongType()),
-            StructField("last_ts_us", LongType()),
-        ]
-    )
 
     def fold(key, pdfs, state: GroupState):
-        n, cents, last_us = state.get if state.exists else (0, 0, 0)
-        for pdf in pdfs:
-            n += len(pdf)
-            cents += int(pdf["value"].mul(100).round().sum())
-            batch_max = pdf["ts"].max()
-            if pd.notna(batch_max):
-                last_us = max(last_us, int(batch_max.value // 1000))
+        n, cents, last_us = _fold(pdfs, *(state.get if state.exists else ()))
         state.update((n, cents, last_us))
         yield pd.DataFrame(
             {
@@ -248,8 +321,9 @@ def running_user_totals(events: DataFrame, watermark: str = "1 hour") -> DataFra
         .groupBy("user_id")
         .applyInPandasWithState(
             fold,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
+            outputStructType="user_id long, n_events long, "
+            "total_value_cents long, last_ts timestamp",
+            stateStructType="n_events long, total_value_cents long, last_ts_us long",
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
@@ -281,10 +355,7 @@ def make_totals_processor():
             )
 
         def handleInputRows(self, key, rows, timerValues):
-            n, cents = self._st.get() if self._st.exists() else (0, 0)
-            for pdf in rows:
-                n += len(pdf)
-                cents += int(pdf["value"].mul(100).round().sum())
+            n, cents, _ = _fold(rows, *(self._st.get() if self._st.exists() else ()))
             self._st.update((n, cents))
             yield pd.DataFrame(
                 {
@@ -314,8 +385,11 @@ def user_value_state_totals(events: DataFrame) -> DataFrame:
     of event volume. Requires the RocksDB state-store provider (state
     lives off-heap, checkpointed incrementally — the 100 TB posture for
     state larger than executor memory) and the protobuf package (the
-    transformWithState state server's wire format; environments without
-    it fall back to :func:`running_user_totals`).
+    transformWithState state server's wire format). There is no runtime
+    fallback where protobuf is missing: tests drive the processor
+    (:func:`make_totals_processor`) through a fake state handle there,
+    and :func:`running_user_totals` is the same workload on the
+    GroupState API.
     """
     return events.groupBy("user_id").transformWithStateInPandas(
         statefulProcessor=make_totals_processor(),
@@ -416,58 +490,11 @@ def file_replay_stream_split(
     absolute path, so a resume must see the same staging dir (a fresh
     tempdir would make every slice look unseen and replay from scratch).
     """
-    import shutil
-
-    from pyspark.sql.window import Window
-
-    from etl_covid19_brasil_spark.io import load_table
-
-    if stage_dir is not None:
-        staged = Path(stage_dir)
-        if sorted(staged.glob("slice_*.parquet")):
-            return _slice_stream(spark, staged)
-
-    # Spark-native staging (r7 — previously a full-table toPandas, the
-    # last driver-transit in the tree): slice the fixture into
-    # time-ordered ntiles and write each slice with Spark, renaming the
-    # single part file to a controlled, ordered name so the file stream
-    # source replays slices in event-time order. The global ntile window
-    # is fixture-rig-only (production streams arrive from Kafka/files
-    # and are never re-staged at all).
-    ev = load_table(spark, sf_dir, "events")
-    sliced = ev.withColumn(
-        "__slice", F.ntile(n_files).over(Window.orderBy("ts", "event_id"))
-    )
-    stage = Path(stage_dir) if stage_dir is not None else Path(
-        tempfile.mkdtemp(prefix="events_stream_split_")
-    )
-    stage.mkdir(parents=True, exist_ok=True)
-    for i in range(1, n_files + 1):
-        tmp_i = stage / f"_tmp_{i}"
-        (
-            sliced.filter(F.col("__slice") == i)
-            .drop("__slice")
-            .coalesce(1)
-            .write.parquet(str(tmp_i))
-        )
-        part = next(Path(tmp_i).glob("part-*.parquet"))
-        part.rename(stage / f"slice_{i - 1:03d}.parquet")
-        shutil.rmtree(tmp_i)
-    return _slice_stream(spark, stage)
-
-
-def _slice_stream(spark: SparkSession, stage: Path) -> DataFrame:
-    schema = spark.read.parquet(str(stage / "slice_000.parquet")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(stage))
-    )
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn("ts", F.timestamp_micros(F.col("ts")))
-    # watermarks need an instant, not a wall-clock NTZ (session tz is UTC,
-    # so the cast is a relabel, not a shift)
-    return stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    stage = Path(stage_dir or tempfile.mkdtemp(prefix="events_stream_split_"))
+    if not any(stage.glob("slice_*.parquet")):
+        _stage_slices(load_table(spark, sf_dir, "events"), ["ts", "event_id"], n_files, stage)
+    # slices hold load_table output, so ts is already TIMESTAMP
+    return _staged_stream(spark, stage)
 
 
 def user_inactivity_timeouts(events: DataFrame, gap_minutes: int = 60) -> DataFrame:
@@ -488,7 +515,7 @@ def user_inactivity_timeouts(events: DataFrame, gap_minutes: int = 60) -> DataFr
         .groupBy("user_id")
         .transformWithStateInPandas(
             statefulProcessor=make_inactivity_processor(gap_minutes),
-            outputStructType="user_id long, last_seen_ms long, n_events long, value_cents long",
+            outputStructType=_SESSION_OUT,
             outputMode="Append",
             timeMode="EventTime",
         )
@@ -502,7 +529,6 @@ def make_inactivity_processor(gap_minutes: int = 60):
     and is driven directly by a fake handle in tests where the
     transformWithState state server (protobuf wire format) is absent.
     """
-    import pandas as pd
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
         StatefulProcessorHandle,
@@ -513,15 +539,12 @@ def make_inactivity_processor(gap_minutes: int = 60):
     class Inactivity(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
             self._handle = handle
-            self._st = handle.getValueState("sess", "last_ms long, n long, cents long")
+            self._st = handle.getValueState("sess", _SESSION_STATE)
 
         def handleInputRows(self, key, rows, timerValues):
             last, n, cents = self._st.get() if self._st.exists() else (0, 0, 0)
-            for pdf in rows:
-                ms = pdf["ts"].astype("int64") // 1_000_000
-                last = max(last, int(ms.max()))
-                n += len(pdf)
-                cents += int(pdf["value"].mul(100).round().sum())
+            n, cents, last_us = _fold(rows, n, cents, last * 1000)
+            last = last_us // 1000
             for t in self._handle.listTimers():
                 self._handle.deleteTimer(t)
             self._handle.registerTimer(last + gap_ms)
@@ -532,14 +555,7 @@ def make_inactivity_processor(gap_minutes: int = 60):
             if self._st.exists():
                 last, n, cents = self._st.get()
                 self._st.clear()
-                yield pd.DataFrame(
-                    {
-                        "user_id": [key[0]],
-                        "last_seen_ms": [last],
-                        "n_events": [n],
-                        "value_cents": [cents],
-                    }
-                )
+                yield _session_row(key, last, n, cents)
 
         def close(self) -> None:
             pass
@@ -559,46 +575,19 @@ def user_inactivity_timeouts_pandas_state(
     only on timeout (Append mode), so downstream consumers see exactly
     one summary row per closed session.
     """
-    import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import LongType, StructField, StructType
 
     gap_ms = gap_minutes * 60_000
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("last_seen_ms", LongType()),
-            StructField("n_events", LongType()),
-            StructField("value_cents", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("last_ms", LongType()),
-            StructField("n", LongType()),
-            StructField("cents", LongType()),
-        ]
-    )
 
     def fold(key, pdfs, state: GroupState):
         if state.hasTimedOut:
             last, n, cents = state.get
             state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "last_seen_ms": [last],
-                    "n_events": [n],
-                    "value_cents": [cents],
-                }
-            )
+            yield _session_row(key, last, n, cents)
             return
         last, n, cents = state.get if state.exists else (0, 0, 0)
-        for pdf in pdfs:
-            ms = pdf["ts"].astype("int64") // 1_000_000
-            last = max(last, int(ms.max()))
-            n += len(pdf)
-            cents += int(pdf["value"].mul(100).round().sum())
+        n, cents, last_us = _fold(pdfs, n, cents, last * 1000)
+        last = last_us // 1000
         state.update((last, n, cents))
         state.setTimeoutTimestamp(last + gap_ms)
 
@@ -607,8 +596,8 @@ def user_inactivity_timeouts_pandas_state(
         .groupBy("user_id")
         .applyInPandasWithState(
             fold,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
+            outputStructType=_SESSION_OUT,
+            stateStructType=_SESSION_STATE,
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
@@ -636,10 +625,7 @@ def run_backfill_available_now(
         .trigger(availableNow=True)
         .start()
     )
-    finished = q.awaitTermination(timeout_seconds)
-    if not finished:
-        q.stop()
-    return finished
+    return _await_or_stop(q, timeout_seconds)
 
 
 def run_foreach_batch_upsert(
@@ -687,7 +673,8 @@ def run_foreach_batch_upsert(
     ``stage_dir`` must be pinned across the crash/restart pair because
     the file-source checkpoint records processed slices by path.
     """
-    stream = file_replay_stream_split(spark, sf_dir, n_files, stage_dir=stage_dir)
+    stage = stage_dir or tempfile.mkdtemp(prefix="events_stream_split_")
+    stream = file_replay_stream_split(spark, sf_dir, n_files, stage_dir=stage)
     root = Path(store_root or tempfile.mkdtemp(prefix="upsert_store_"))
     root.mkdir(parents=True, exist_ok=True)
     pointer = root / "CURRENT"
@@ -742,18 +729,11 @@ def run_foreach_batch_upsert(
                 f"injected crash after batch {batch_id} store commit"
             )
 
-    writer = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
-    finished = q.awaitTermination(timeout_seconds)
-    if not finished:
-        q.stop()
-        raise TimeoutError("foreachBatch upsert replay did not finish")
+    try:
+        _drain(stream, sink, timeout_seconds, "foreachBatch upsert", checkpoint_dir)
+    finally:
+        if stage_dir is None:  # the result reads the store, not the slices
+            shutil.rmtree(stage, ignore_errors=True)
     final = read_pointer()
     if final is None:
         raise RuntimeError("upsert replay committed no batches")
@@ -812,31 +792,8 @@ def run_stream_ann_enrich(
         # could flap tiers mid-stream); caller hint skips the job
         n_index = index.count()
 
-    # stage the query feed as n_files ordered slices (the
-    # file_replay_stream_split rig — fixture-only; production feeds
-    # arrive from Kafka/files and are never re-staged)
+    # stage the query feed as n_files ordered slices
     stage = Path(tempfile.mkdtemp(prefix="ann_enrich_stream_"))
-    sliced = queries.withColumn(
-        "__slice", F.ntile(n_files).over(Window.orderBy(order_col))
-    )
-    for i in range(1, n_files + 1):
-        tmp_i = stage / f"_tmp_{i}"
-        (
-            sliced.filter(F.col("__slice") == i)
-            .drop("__slice")
-            .coalesce(1)
-            .write.parquet(str(tmp_i))
-        )
-        part = next(Path(tmp_i).glob("part-*.parquet"))
-        part.rename(stage / f"slice_{i - 1:03d}.parquet")
-        shutil.rmtree(tmp_i)
-
-    schema = spark.read.parquet(str(stage / "slice_000.parquet")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(stage))
-    )
     out_dir = Path(tempfile.mkdtemp(prefix="ann_enrich_out_")) / "res"
     seen = {"n": 0}
 
@@ -849,16 +806,12 @@ def run_stream_ann_enrich(
             "append"
         ).parquet(str(out_dir))
 
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = q.awaitTermination(timeout_seconds)
-    if not finished:
-        q.stop()
-        raise TimeoutError("ann enrich replay did not finish")
+    try:
+        _stage_slices(queries, [order_col], n_files, stage)
+        _drain(_staged_stream(spark, stage), sink, timeout_seconds, "ann enrich")
+    finally:
+        # the results are read back from out_dir, never from the slices
+        shutil.rmtree(stage, ignore_errors=True)
     return spark.read.parquet(str(out_dir)), seen["n"]
 
 
@@ -896,33 +849,15 @@ def run_stream_index_ingest(
 
     Returns ``(results, reports)`` — the served top-k and the per-batch
     :class:`AppendReport` list (the staleness audit trail a production
-    ingest loop would alert on)."""
+    ingest loop would alert on). The staged slices are NOT removed: the
+    returned index, and so the served result, lazily re-reads them."""
     from etl_covid19_brasil_spark.llm.ann import ann_index_append, prepare_ann_route
     from etl_covid19_brasil_spark.llm.search import ann_search
 
     state = {"route": prepare_ann_route(base), "index": base, "reports": []}
 
-    stage = Path(tempfile.mkdtemp(prefix="index_ingest_stream_"))
-    sliced = delta.withColumn(
-        "__slice", F.ntile(n_files).over(Window.orderBy(order_col))
-    )
-    for i in range(1, n_files + 1):
-        tmp_i = stage / f"_tmp_{i}"
-        (
-            sliced.filter(F.col("__slice") == i)
-            .drop("__slice")
-            .coalesce(1)
-            .write.parquet(str(tmp_i))
-        )
-        part = next(Path(tmp_i).glob("part-*.parquet"))
-        part.rename(stage / f"slice_{i - 1:03d}.parquet")
-        shutil.rmtree(tmp_i)
-
-    schema = spark.read.parquet(str(stage / "slice_000.parquet")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(stage))
+    stage = _stage_slices(
+        delta, [order_col], n_files, Path(tempfile.mkdtemp(prefix="index_ingest_stream_"))
     )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -937,15 +872,6 @@ def run_stream_index_ingest(
         state["route"], state["index"] = route, union
         state["reports"].append(report)
 
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = q.awaitTermination(timeout_seconds)
-    if not finished:
-        q.stop()
-        raise TimeoutError("index ingest replay did not finish")
+    _drain(_staged_stream(spark, stage), sink, timeout_seconds, "index ingest")
     served = ann_search(queries, state["index"], k=k, route=state["route"])
     return served, state["reports"]

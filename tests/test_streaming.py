@@ -821,3 +821,56 @@ def test_foreach_batch_upsert_recovers_from_mid_stream_crash(spark, tmp_path):
     b = _sorted(want)
     assert len(a) > 0
     assert a.equals(b)
+
+
+def test_stage_slices_are_an_ordered_partition_replayed_one_batch_each(spark, tmp_path):
+    """The replay rig's stager: the n staged slices are disjoint, cover
+    the input exactly, and are ordered (the last (ts, event_id) of slice i
+    is <= the first of slice i+1); the staged stream then replays exactly
+    one micro-batch per slice, in slice order — the event-time order that
+    watermark advancement and timer firing depend on."""
+    ev = load_table(spark, SF, "events")
+    stage = jobs._stage_slices(ev, ["ts", "event_id"], 4, tmp_path / "stage")
+    files = sorted(stage.iterdir())
+    assert [f.name for f in files] == [f"slice_{i:03d}.parquet" for i in range(4)]
+    slices = [spark.read.parquet(str(f)).toPandas() for f in files]
+    assert all(len(s) > 0 for s in slices)
+    pd.testing.assert_frame_equal(
+        _sorted(pd.concat(slices, ignore_index=True)), _sorted(ev.toPandas())
+    )
+    keys = [list(zip(s["ts"], s["event_id"])) for s in slices]
+    for i in range(3):
+        assert max(keys[i]) <= min(keys[i + 1]), i
+
+    batches = []
+
+    def sink(batch_df, batch_id):
+        batches.append(sorted(r["event_id"] for r in batch_df.select("event_id").collect()))
+
+    jobs._drain(jobs._staged_stream(spark, stage), sink, 120, "stager check")
+    assert batches == [sorted(s["event_id"]) for s in slices]
+
+
+def test_replay_rig_removes_the_stage_dirs_it_made(spark, tmp_path, monkeypatch):
+    """run_stream_ann_enrich and run_foreach_batch_upsert (without a
+    pinned stage_dir) remove their staged slices once the replay has
+    drained; only the directories their returned frames lazily read
+    (the enrich output and the upsert store) stay behind."""
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    e = load_table(spark, SF, "embeddings")
+    q, i = e.filter("vec_id % 20 = 0"), e.filter("vec_id % 20 <> 0")
+    res, _ = jobs.run_stream_ann_enrich(spark, q, i, k=5, n_files=2)
+    store = jobs.run_foreach_batch_upsert(spark, SF, n_files=2)
+    assert res.count() > 0 and store.count() > 0
+
+    left = [p.name for p in tmp_path.iterdir()]
+
+    def count(prefix):
+        return sum(name.startswith(prefix) for name in left)
+
+    assert count("ann_enrich_stream_") == 0, left
+    assert count("events_stream_split_") == 0, left
+    assert count("ann_enrich_out_") == 1, left
+    assert count("upsert_store_") == 1, left

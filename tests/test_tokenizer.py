@@ -234,3 +234,24 @@ def test_unigram_train_frame_is_arrow_backed_without_arrow_conf(spark):
     assert "ExistingRDD" not in plan, plan
     assert "LocalTableScan" in plan, plan
     assert got == want
+
+
+def test_unigram_piece_table_is_arrow_backed_without_arrow_conf(spark):
+    """unigram_piece_table builds its bounded result from an Arrow table,
+    so a session with ``spark.sql.execution.arrow.pyspark.enabled`` off
+    still plans a LocalTableScan — for the empty inventory too — rather
+    than a pickled-row ExistingRDD whose every job spawns Python workers."""
+    from etl_covid19_brasil_spark.llm.tokenizer import unigram_piece_table
+
+    docs = _docs(spark)
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        tables = [unigram_piece_table(d) for d in (docs, docs.limit(0))]
+        plans = [t._jdf.queryExecution().executedPlan().toString() for t in tables]
+    finally:
+        spark.conf.set(key, old)
+    for plan in plans:
+        assert "ExistingRDD" not in plan, plan
+        assert "LocalTableScan" in plan, plan
