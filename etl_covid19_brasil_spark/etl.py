@@ -28,7 +28,7 @@ from collections.abc import Callable
 from typing import Any
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql.types import StructType
 
 
@@ -203,7 +203,8 @@ def run_data_lake(
     usage; with a FAIR pool both pipelines make progress even when one
     is long), which also carries the DAG's retry/failure-callback
     semantics. Returns {table: landed row count} after both sinks
-    commit — the 'covid' and 'microrregioes' tables of the reference
+    commit, the count observed on the write itself (no re-read of the
+    landed table) — the 'covid' and 'microrregioes' tables of the reference
     lake (dags/create-data-lake.py:83,104), parquet standing in for
     Postgres (swap .parquet for .jdbc for exact sink parity,
     io.py:sink_jdbc_replace).
@@ -215,9 +216,12 @@ def run_data_lake(
 
     def land(name: str, df: DataFrame) -> "Callable[[], int]":
         def go() -> int:
-            path = f"{out_dir}/{name}"
-            df.write.mode("overwrite").parquet(path)
-            return df.sparkSession.read.parquet(path).count()
+            # A fresh Observation per attempt: one can observe one write.
+            obs = Observation(f"landed_{name}")
+            df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(
+                f"{out_dir}/{name}"
+            )
+            return obs.get["n"]
 
         return go
 

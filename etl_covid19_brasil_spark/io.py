@@ -10,7 +10,14 @@ plus the lakehouse-native Parquet scan/sink the driver test tables use.
 Scale notes: schema inference is offered for reference parity but
 production paths take an explicit ``StructType`` (inference at 100 TB
 costs an extra full scan). Parquet sinks accept ``partition_by`` so the
-lake is partition-pruned on read. The JDBC sink bounds write parallelism
+lake is partition-pruned on read. Parquet reads of a lake table
+(:func:`scan_parquet`, :func:`merge_by_key`, :func:`compact_parquet`)
+take their schema from the Spark row metadata in one data file's footer,
+read on the driver (:func:`_footer_schema`), so the read submits no
+schema job; a path the driver cannot list locally (``s3a://``, ``hdfs://``,
+a glob), a ``mergeSchema`` session, a table with summary files or a file
+with no Spark row metadata (pyarrow/DuckDB writers) falls back to Spark's
+own one-footer inference job. The JDBC sink bounds write parallelism
 via ``num_partitions`` so a 1000-executor cluster cannot accidentally
 open 1000 connections against one database — the reference's single
 COPY socket (dags/create-data-lake.py:59-61) is the opposite failure
@@ -45,8 +52,86 @@ TPCH_TABLES = (
 
 
 def scan_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Columnar scan; Catalyst pushes filters/column pruning into it."""
-    return spark.read.parquet(path)
+    """Columnar scan; Catalyst pushes filters/column pruning into it.
+
+    The schema comes from :func:`_footer_schema`: for a local table that
+    Spark wrote, the ``org.apache.spark.sql.parquet.row.metadata`` key of
+    the footer Spark itself would pick, so building the frame runs no
+    job. Otherwise (object store, glob, ``mergeSchema``, summary files,
+    no Spark row metadata) Spark infers the schema as ``read.parquet``
+    always did, with its one-task footer job.
+    """
+    schema = _footer_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+_SUMMARY_FILES = ("_metadata", "_common_metadata")
+
+
+def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The schema ``spark.read.parquet(path)`` would infer, read on the
+    driver from one footer — or ``None`` when Spark must infer it itself.
+
+    Without ``mergeSchema`` and summary files, ``ParquetUtils.inferSchema``
+    reads the footer of the first data file in path order and
+    ``ParquetFileFormat.readSchemaFromFooter`` returns its Spark row
+    metadata. This repeats that choice for a local table: leaf files whose
+    names start with ``.``, or with ``_`` and hold no ``=``, are skipped as
+    Spark's file index skips them. ``None`` (so Spark's own job runs) for a
+    non-``file`` scheme, a relative path or a glob, a ``mergeSchema``
+    session, a ``_metadata``/``_common_metadata`` file, no data file, a
+    footer with no Spark row metadata, or a data column that is also a
+    partition directory key (whose type Spark takes from the path).
+    """
+    from urllib.parse import urlparse
+
+    url = urlparse(path)
+    root = url.path if url.scheme else path
+    if (
+        any(c in path for c in "{}[]*?\\")
+        or url.scheme not in ("", "file")
+        or url.netloc
+        or not os.path.isabs(root)
+        or spark.conf.get("spark.sql.parquet.mergeSchema", "false").lower() == "true"
+    ):
+        return None
+    if os.path.isfile(root):
+        first = root
+    else:
+        data = []
+        for d, dirs, files in os.walk(root):
+            dirs[:] = [n for n in dirs if not _hidden(n)]
+            if any(n.startswith(_SUMMARY_FILES) for n in files):
+                return None
+            data += [os.path.join(d, n) for n in files if not _hidden(n)]
+        if not data:
+            return None
+        first = min(data)
+    try:
+        import pyarrow.parquet as pq
+
+        meta = pq.read_schema(first).metadata or {}
+        schema = StructType.fromJson(json.loads(meta[_SPARK_ROW_METADATA]))
+    except Exception:
+        return None
+    keys = {
+        part.split("=", 1)[0].lower()
+        for part in os.path.relpath(first, root).split(os.sep)[:-1]
+        if "=" in part
+    }
+    if keys & {f.name.lower() for f in schema.fields}:
+        return None
+    return schema
+
+
+def _hidden(name: str) -> bool:
+    return (
+        name.startswith(".")
+        or (name.startswith("_") and "=" not in name)
+        or name.endswith("._COPYING_")
+    )
 
 
 def scan_orc(spark: SparkSession, path: str) -> DataFrame:
@@ -171,9 +256,14 @@ def _land_json_rows(
     inference, re-runnable from disk — the lake land-then-scan pattern,
     no deprecated ``.rdd`` hop)."""
     if schema is not None:
+        import pyarrow as pa
         import pyspark.sql.functions as F
 
-        text_df = spark.createDataFrame([(json.dumps(r),) for r in records], ["json"])
+        # An Arrow table plans as a LocalTableScan under any Arrow conf; a
+        # list of tuples becomes a pickled-row Scan ExistingRDD when the
+        # session leaves spark.sql.execution.arrow.pyspark.enabled off.
+        text = pa.table({"json": pa.array([json.dumps(r) for r in records], pa.string())})
+        text_df = spark.createDataFrame(text)
         return text_df.select(F.from_json("json", schema).alias("rec")).select("rec.*")
     import tempfile
 
@@ -683,8 +773,8 @@ def merge_by_key(
     is co-located.
     """
     staging = path.rstrip("/") + "__staging"
-    existing = spark.read.parquet(path)
-    merged = existing.join(df.select(*keys).distinct(), keys, "left_anti").unionByName(df)
+    existing = scan_parquet(spark, path)
+    merged = existing.join(df.select(*keys), keys, "left_anti").unionByName(df)
     merged.write.mode("overwrite").parquet(staging)
     _swap_table_dir(path, staging)
 
@@ -699,7 +789,7 @@ def compact_parquet(spark: SparkSession, path: str, target_files: int) -> None:
     100 TB scans sized by bytes, not file count.
     """
     staging = path.rstrip("/") + "__staging"
-    spark.read.parquet(path).repartition(target_files).write.mode("overwrite").parquet(staging)
+    scan_parquet(spark, path).repartition(target_files).write.mode("overwrite").parquet(staging)
     _swap_table_dir(path, staging)
 
 

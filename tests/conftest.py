@@ -1,8 +1,10 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 import tempfile
+import types
 from pathlib import Path
 
 import pytest
@@ -107,3 +109,24 @@ def duck_gate():
     con = duckdb_connection(SF_GATE)
     yield con
     con.close()
+
+
+@contextlib.contextmanager
+def jobs_submitted(spark):
+    """Count the Spark jobs a block submits, from any thread: ``with
+    jobs_submitted(spark) as c: ...`` then ``c.jobs``. Reads the
+    scheduler's job-id counter once the listener bus has drained; job
+    groups are thread-local, so a group misses the jobs that worker
+    threads (``etl.run_tasks_parallel``'s pool) submit."""
+    sc = spark.sparkContext._jsc.sc()
+
+    def total() -> int:
+        sc.listenerBus().waitUntilEmpty()
+        return sc.dagScheduler().numTotalJobs()
+
+    count = types.SimpleNamespace(jobs=0)
+    start = total()
+    try:
+        yield count
+    finally:
+        count.jobs = total() - start

@@ -9,6 +9,8 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from tests.conftest import jobs_submitted
+
 SF = "/root/testdata/sf0.01"
 
 
@@ -720,7 +722,7 @@ def test_exact_pair_counts_fused_and_correct(spark):
     counts equal the two separate count() results in every hint
     combination, and (b) the fused form costs strictly fewer scheduler
     jobs than the two-count form it replaced (self-calibrating: both
-    are measured via job groups in this session)."""
+    are counted with jobs_submitted in this session)."""
     import pyspark.sql.functions as F
 
     from etl_covid19_brasil_spark.llm.search import _exact_pair_counts
@@ -729,32 +731,24 @@ def test_exact_pair_counts_fused_and_correct(spark):
     e = T(spark, SF, "embeddings")
     q = e.filter(F.col("vec_id") % 8 == 0)
     i = e.filter(F.col("vec_id") % 8 != 0)
-    sc = spark.sparkContext
 
-    def jobs_of(group, fn):
-        sc.setJobGroup(group, group)
-        try:
+    def jobs_of(fn):
+        with jobs_submitted(spark) as c:
             out = fn()
-        finally:
-            sc.setJobGroup("idle", "idle")
-        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+        return out, c.jobs
 
-    (ni, nq), fused_jobs = jobs_of(
-        "fused_pc", lambda: _exact_pair_counts(i, q, None, None)
-    )
-    (ni2, nq2), two_jobs = jobs_of("two_pc", lambda: (i.count(), q.count()))
+    (ni, nq), fused_jobs = jobs_of(lambda: _exact_pair_counts(i, q, None, None))
+    (ni2, nq2), two_jobs = jobs_of(lambda: (i.count(), q.count()))
     assert (ni, nq) == (ni2, nq2)
     assert fused_jobs < two_jobs, (fused_jobs, two_jobs)
     # hints short-circuit to zero jobs
-    _, zero_jobs = jobs_of("hint_pc", lambda: _exact_pair_counts(i, q, 7, 3))
+    _, zero_jobs = jobs_of(lambda: _exact_pair_counts(i, q, 7, 3))
     assert zero_jobs == 0
     assert _exact_pair_counts(i, q, 7, 3) == (7, 3)
     assert _exact_pair_counts(i, q, None, 3) == (ni, 3)
     assert _exact_pair_counts(i, q, 7, None) == (7, nq)
     # one frame on both sides: one count serves both
-    (si, sq), self_jobs = jobs_of(
-        "self_pc", lambda: _exact_pair_counts(e, e, None, None)
-    )
+    (si, sq), self_jobs = jobs_of(lambda: _exact_pair_counts(e, e, None, None))
     assert si == sq == ni + nq
     assert self_jobs <= fused_jobs
 

@@ -19,6 +19,7 @@ from hypothesis import strategies as st
 
 from etl_covid19_brasil_spark import etl
 from etl_covid19_brasil_spark.io import scan_csv, scan_http_json
+from tests.conftest import jobs_submitted
 
 RATE = "last_available_confirmed_per_100k_inhabitants"
 
@@ -140,6 +141,46 @@ def test_run_data_lake_lands_both_tables_concurrently(spark, covid_raw, tmp_path
     assert got["microrregioes"] == etl.ibge_pipeline(ibge_raw).count()
     landed = spark.read.parquet(str(tmp_path / "lake" / "covid"))
     assert "created_at_datalake" in landed.columns
+
+
+def test_run_data_lake_counts_rows_in_the_write(spark, covid_raw, tmp_path):
+    """The landed counts are observed on the writes themselves: one job
+    per table, the write, and no re-read of the landed parquet (jobs
+    counted across run_tasks_parallel's threads)."""
+    ibge_raw = scan_http_json(
+        spark, "http://fixture", fetch=lambda _u: json.dumps([IBGE_RECORD] * 3)
+    )
+    with jobs_submitted(spark) as c:
+        got = etl.run_data_lake(covid_raw, ibge_raw, str(tmp_path / "lake"))
+    assert got == {"covid": 5, "microrregioes": 3}
+    assert c.jobs == 2
+    for name, n in got.items():
+        assert spark.read.parquet(str(tmp_path / "lake" / name)).count() == n
+
+
+def test_run_data_lake_counts_zero_for_empty_input(spark, covid_raw, tmp_path):
+    """An empty covid input lands an empty table and counts 0 — the
+    observed metric still arrives when no row reaches the write."""
+    import threading
+
+    import pyspark.sql.functions as F
+
+    ibge_raw = scan_http_json(
+        spark, "http://fixture", fetch=lambda _u: json.dumps([IBGE_RECORD])
+    )
+    out: dict = {}
+    empties = {"limit0": covid_raw.limit(0), "filtered": covid_raw.filter(F.lit(False))}
+    for name, empty in empties.items():
+        t = threading.Thread(
+            target=lambda e=empty, n=name: out.update(
+                {n: etl.run_data_lake(e, ibge_raw, str(tmp_path / n))}
+            ),
+            daemon=True,
+        )
+        t.start()
+        t.join(timeout=300)
+        assert not t.is_alive(), f"run_data_lake hung on the {name} input"
+    assert out["limit0"] == out["filtered"] == {"covid": 0, "microrregioes": 1}
 
 
 def test_run_tasks_parallel_retries_transient_failures():

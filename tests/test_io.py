@@ -18,6 +18,7 @@ from pyspark.sql.types import (
 )
 
 from etl_covid19_brasil_spark import io
+from tests.conftest import jobs_submitted
 
 SF = "/root/testdata/sf0.001"
 
@@ -98,6 +99,126 @@ def test_scan_http_json_schemaless_lands_and_infers(spark, tmp_path):
     assert df.filter(F.col("id") == 2).select("nested.v").first()[0] == "b"
     landed = list(tmp_path.glob("http_json_landed_*.jsonl"))
     assert len(landed) == 1  # payload is on disk: scan is re-runnable
+
+
+def test_scan_http_json_explicit_schema_is_arrow_backed_without_arrow_conf(spark):
+    """With an explicit schema the payload's text column is built from an
+    Arrow table, so a session that leaves
+    ``spark.sql.execution.arrow.pyspark.enabled`` off still plans a
+    LocalTableScan, not a pickled-row ExistingRDD — same rows either way."""
+    payload = [{"id": 1, "v": "a"}, {"id": 2, "v": "b"}]
+    schema = StructType([StructField("id", LongType()), StructField("v", StringType())])
+
+    def scan():
+        return io.scan_http_json(
+            spark, "http://unused", schema=schema, fetch=lambda _u: json.dumps(payload)
+        )
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    old = spark.conf.get(key)
+    want = scan().orderBy("id").collect()
+    spark.conf.set(key, "false")
+    try:
+        df = scan()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        got = df.orderBy("id").collect()
+    finally:
+        spark.conf.set(key, old)
+    assert "ExistingRDD" not in plan, plan
+    assert "LocalTableScan" in plan, plan
+    assert got == want == [(1, "a"), (2, "b")]
+
+
+def test_scan_http_json_explicit_schema_takes_an_empty_payload(spark):
+    """An empty JSON array with an explicit schema is an empty frame of
+    that schema; the text column's type no longer comes from inference
+    over zero rows."""
+    schema = StructType([StructField("id", LongType())])
+    df = io.scan_http_json(spark, "http://unused", schema=schema, fetch=lambda _u: "[]")
+    assert df.schema == schema and df.count() == 0
+
+
+def _same_read(spark, path):
+    """scan_parquet and spark.read.parquet agree in schema and rows."""
+    got, want = io.scan_parquet(spark, path), spark.read.parquet(path)
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())
+
+
+@pytest.mark.parametrize("partition_by", [None, ["n_regionkey"]])
+def test_scan_parquet_of_spark_table_submits_no_job(spark, tmp_path, partition_by):
+    """A table written by sink_parquet carries Spark's row metadata in its
+    footers: scan_parquet takes the schema from one of them on the driver,
+    so building the frame runs no schema-inference job, and the frame
+    equals spark.read.parquet's, partition column included."""
+    out = str(tmp_path / "t")
+    io.sink_parquet(spark.read.parquet(f"{SF}/nation.parquet"), out, partition_by=partition_by)
+    assert io._footer_schema(spark, out) is not None
+    with jobs_submitted(spark) as c:
+        io.scan_parquet(spark, out)
+        io.scan_parquet(spark, f"file://{out}")
+    assert c.jobs == 0
+    _same_read(spark, out)
+
+
+def _pyarrow_file(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "arrow.parquet")
+    pq.write_table(pa.table({"id": [1, 2], "v": ["a", "b"]}), path)
+    return path
+
+
+def _summary_dir(spark, tmp_path):
+    """A Spark table plus a _common_metadata summary declaring one more
+    column: Spark takes the summary's schema, not a data file's."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "summarized")
+    spark.range(3).selectExpr("id", "'x' AS v").write.parquet(path)
+    schema = pa.schema([("id", pa.int64()), ("v", pa.string()), ("extra", pa.int64())])
+    pq.write_metadata(schema, f"{path}/_common_metadata")
+    return path
+
+
+def _glob_path(spark, tmp_path):
+    path = str(tmp_path / "globbed")
+    spark.range(4).selectExpr("id", "id * 2 AS w").write.parquet(path)
+    return f"{path}/part-*.parquet"
+
+
+def _evolved_dir(spark, tmp_path):
+    path = str(tmp_path / "evolved")
+    spark.range(3).selectExpr("id").write.parquet(path, mode="append")
+    spark.range(3, 5).selectExpr("id", "id * 10 AS added").write.parquet(path, mode="append")
+    return path
+
+
+@pytest.mark.parametrize(
+    "make,merge_schema",
+    [
+        (_pyarrow_file, "false"),
+        (_summary_dir, "false"),
+        (_glob_path, "false"),
+        (_evolved_dir, "true"),
+    ],
+    ids=["pyarrow_file", "common_metadata", "glob", "merge_schema_session"],
+)
+def test_scan_parquet_falls_back_to_spark_inference(spark, tmp_path, make, merge_schema):
+    """Where one footer's Spark row metadata is not what Spark would infer
+    (no such metadata, a summary file, a glob, mergeSchema), scan_parquet
+    leaves the schema to Spark and returns exactly what read.parquet does."""
+    path = make(spark, tmp_path)
+    key = "spark.sql.parquet.mergeSchema"
+    old = spark.conf.get(key)
+    spark.conf.set(key, merge_schema)
+    try:
+        assert io._footer_schema(spark, path) is None
+        _same_read(spark, path)
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_scan_sink_scheme_agnostic_file_uri(spark, tmp_path):
@@ -390,6 +511,17 @@ def test_merge_by_key_upserts_and_keeps(spark, tmp_path):
     io.merge_by_key(spark, batch, out, keys=["id"])
     got = {(r["id"], r["v"]) for r in spark.read.parquet(out).collect()}
     assert got == {(1, "old"), (2, "new"), (3, "old"), (4, "new")}
+
+
+def test_merge_by_key_keeps_every_duplicate_batch_row(spark, tmp_path):
+    """The anti join takes the batch keys as they come: a key repeated in
+    the batch drops the table's row once and lands every batch row."""
+    out = str(tmp_path / "mlake")
+    spark.createDataFrame([(1, "old"), (2, "old"), (3, "old")], ["id", "v"]).write.parquet(out)
+    batch = spark.createDataFrame([(2, "new"), (2, "newer"), (4, "new")], ["id", "v"])
+    io.merge_by_key(spark, batch, out, keys=["id"])
+    got = sorted((r["id"], r["v"]) for r in spark.read.parquet(out).collect())
+    assert got == [(1, "old"), (2, "new"), (2, "newer"), (3, "old"), (4, "new")]
 
 
 def test_compact_parquet_reduces_file_count(spark, tmp_path):
