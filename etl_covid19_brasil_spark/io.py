@@ -10,18 +10,19 @@ plus the lakehouse-native Parquet scan/sink the driver test tables use.
 Scale notes: schema inference is offered for reference parity but
 production paths take an explicit ``StructType`` (inference at 100 TB
 costs an extra full scan). Parquet sinks accept ``partition_by`` so the
-lake is partition-pruned on read. Parquet reads of a lake table
-(:func:`scan_parquet`, :func:`merge_by_key`, :func:`compact_parquet`)
-take their schema from the Spark row metadata in one data file's footer,
-read on the driver (:func:`_footer_schema`), so the read submits no
-schema job; a path the driver cannot list locally (``s3a://``, ``hdfs://``,
-a glob), a ``mergeSchema`` session, a table with summary files or a file
-with no Spark row metadata (pyarrow/DuckDB writers) falls back to Spark's
-own one-footer inference job. The JDBC sink bounds write parallelism
-via ``num_partitions`` so a 1000-executor cluster cannot accidentally
-open 1000 connections against one database — the reference's single
-COPY socket (dags/create-data-lake.py:59-61) is the opposite failure
-mode (no parallelism at all).
+lake is partition-pruned on read. Parquet reads through
+:func:`scan_parquet` (:func:`load_table`, :func:`merge_by_key`,
+:func:`compact_parquet` too) take their schema from one data file's
+footer, converted on the driver by Spark's own ``readSchemaFromFooter``
+(:func:`_footer_schema`), so building the frame submits no schema job,
+whoever wrote the file; a path the driver cannot list locally (``s3a://``,
+``hdfs://``, a bare path under a non-``file`` default filesystem, a
+glob), a ``mergeSchema`` session or a table with summary files falls back
+to Spark's own one-footer inference job. The JDBC sink bounds write
+parallelism via ``num_partitions`` so a 1000-executor cluster cannot
+accidentally open 1000 connections against one database — the
+reference's single COPY socket (dags/create-data-lake.py:59-61) is the
+opposite failure mode (no parallelism at all).
 """
 
 from __future__ import annotations
@@ -54,19 +55,18 @@ TPCH_TABLES = (
 def scan_parquet(spark: SparkSession, path: str) -> DataFrame:
     """Columnar scan; Catalyst pushes filters/column pruning into it.
 
-    The schema comes from :func:`_footer_schema`: for a local table that
-    Spark wrote, the ``org.apache.spark.sql.parquet.row.metadata`` key of
-    the footer Spark itself would pick, so building the frame runs no
-    job. Otherwise (object store, glob, ``mergeSchema``, summary files,
-    no Spark row metadata) Spark infers the schema as ``read.parquet``
-    always did, with its one-task footer job.
+    The schema comes from :func:`_footer_schema`: for a local table, the
+    schema Spark's own inference would take from the footer it would
+    pick, converted on the driver, so building the frame runs no job
+    whoever wrote the file (Spark, pyarrow, DuckDB). Otherwise (object
+    store, glob, ``mergeSchema``, summary files) Spark infers the schema
+    as ``read.parquet`` always did, with its one-task footer job.
     """
     schema = _footer_schema(spark, path)
     reader = spark.read if schema is None else spark.read.schema(schema)
     return reader.parquet(path)
 
 
-_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 _SUMMARY_FILES = ("_metadata", "_common_metadata")
 
 
@@ -75,15 +75,22 @@ def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
     driver from one footer — or ``None`` when Spark must infer it itself.
 
     Without ``mergeSchema`` and summary files, ``ParquetUtils.inferSchema``
-    reads the footer of the first data file in path order and
-    ``ParquetFileFormat.readSchemaFromFooter`` returns its Spark row
-    metadata. This repeats that choice for a local table: leaf files whose
-    names start with ``.``, or with ``_`` and hold no ``=``, are skipped as
-    Spark's file index skips them. ``None`` (so Spark's own job runs) for a
-    non-``file`` scheme, a relative path or a glob, a ``mergeSchema``
-    session, a ``_metadata``/``_common_metadata`` file, no data file, a
-    footer with no Spark row metadata, or a data column that is also a
-    partition directory key (whose type Spark takes from the path).
+    runs one task that reads the footer of the first data file in path
+    order and converts it with ``ParquetFileFormat.readSchemaFromFooter``:
+    the Spark row metadata when the footer has it, else the parquet schema
+    through a ``ParquetToSparkSchemaConverter`` built from the session's
+    parquet read confs (``binaryAsString``, ``int96AsTimestamp``,
+    ``inferTimestampNTZ``, ``legacy.parquet.nanosAsLong``). This makes the
+    same calls on the driver through py4j, on the same file: leaf files
+    whose names start with ``.``, or with ``_`` and hold no ``=``, are
+    skipped as Spark's file index skips them. ``None`` (so Spark's own job
+    runs) for a non-``file`` scheme, a relative path or a glob, a bare
+    path while the session's ``fs.defaultFS`` is not ``file:`` (it then
+    names a file on that filesystem, not the local one listed here), a
+    ``mergeSchema`` session, a ``_metadata``/``_common_metadata`` file, no
+    data file, a data column that is also a partition directory key (whose
+    type Spark takes from the path), or any error reading the footer
+    (Spark's own read then raises its own error).
     """
     from urllib.parse import urlparse
 
@@ -96,6 +103,10 @@ def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
         or not os.path.isabs(root)
         or spark.conf.get("spark.sql.parquet.mergeSchema", "false").lower() == "true"
     ):
+        return None
+    state = spark._jsparkSession.sessionState()
+    hconf = state.newHadoopConf()
+    if not url.scheme and not hconf.get("fs.defaultFS", "file:///").startswith("file:"):
         return None
     if os.path.isfile(root):
         first = root
@@ -110,10 +121,18 @@ def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
             return None
         first = min(data)
     try:
-        import pyarrow.parquet as pq
-
-        meta = pq.read_schema(first).metadata or {}
-        schema = StructType.fromJson(json.loads(meta[_SPARK_ROW_METADATA]))
+        jvm = spark._jvm
+        pq = jvm.org.apache.parquet
+        parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+        file = jvm.org.apache.hadoop.fs.Path("file", None, first)
+        # SKIP_ROW_GROUPS: the filter Spark's own footer job reads with.
+        meta = pq.hadoop.ParquetFileReader.readFooter(
+            hconf, file, pq.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+        )
+        converted = parquet.ParquetFileFormat.readSchemaFromFooter(
+            pq.hadoop.Footer(file, meta), parquet.ParquetToSparkSchemaConverter(state.conf())
+        )
+        schema = StructType.fromJson(json.loads(converted.json()))
     except Exception:
         return None
     keys = {
@@ -774,7 +793,11 @@ def merge_by_key(
     """
     staging = path.rstrip("/") + "__staging"
     existing = scan_parquet(spark, path)
-    merged = existing.join(df.select(*keys), keys, "left_anti").unionByName(df)
+    merged = (
+        existing.join(df.select(*keys), keys, "left_anti")
+        .unionByName(df)
+        .select(*existing.columns)  # the using-join puts the keys first
+    )
     merged.write.mode("overwrite").parquet(staging)
     _swap_table_dir(path, staging)
 
@@ -806,6 +829,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     nanosecond longs (legacy conf, runtime-settable) and convert with
     exact integer division: ``timestamp_micros(ts div 1000)`` truncates
     exactly like DuckDB's ns->us read of the same file.
+
+    Reads through :func:`scan_parquet` after the confs are set, so the
+    footer schema is converted under ``nanosAsLong`` too and loading a
+    table submits no schema-inference job.
     """
     path = f"{sf_dir}/{name}.parquet"
     # Timestamp semantics are defined in UTC (parquet values are naive
@@ -817,9 +844,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # here where every query path enters the engine.
     spark.conf.set("spark.sql.ansi.enabled", "false")
     if name != "events":
-        return spark.read.parquet(path)
+        return scan_parquet(spark, path)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return events_ts(spark.read.parquet(path))
+    return events_ts(scan_parquet(spark, path))
 
 
 def events_ts(events: DataFrame) -> DataFrame:

@@ -62,6 +62,7 @@ from pyspark.sql.types import (
 )
 from pyspark.sql.window import Window
 
+from etl_covid19_brasil_spark.io import scan_parquet
 from etl_covid19_brasil_spark.llm import similarity as _sim
 from etl_covid19_brasil_spark.llm.similarity import (
     _by_query_chunks,
@@ -2342,7 +2343,7 @@ def ann_index_load(spark, path: str) -> TierRoute:
     tests/test_ann_lifecycle.py) and composes with the rest of the
     lifecycle (:func:`ann_index_append` staleness triggers keep their
     reference point because ``n_trained`` survives the roundtrip)."""
-    m = spark.read.parquet(path.rstrip("/") + "/meta").collect()
+    m = scan_parquet(spark, path.rstrip("/") + "/meta").collect()
     if len(m) != 1:
         raise ValueError(f"ann_index_load: expected 1 meta row, got {len(m)}")
     meta = m[0]
@@ -2359,7 +2360,7 @@ def ann_index_load(spark, path: str) -> TierRoute:
             float(meta["top_mass"]),
             float(meta["tight_cos"]),
         )
-    crows = spark.read.parquet(path.rstrip("/") + "/centroids").collect()
+    crows = scan_parquet(spark, path.rstrip("/") + "/centroids").collect()
     cents = None
     if crows:
         cents = np.stack(

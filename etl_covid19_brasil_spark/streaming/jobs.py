@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
 
-from etl_covid19_brasil_spark.io import events_ts, load_table
+from etl_covid19_brasil_spark.io import events_ts, load_table, scan_parquet
 
 # Closed-session rows and per-user session state of the two inactivity jobs
 _SESSION_OUT = "user_id long, last_seen_ms long, n_events long, value_cents long"
@@ -67,9 +67,11 @@ def _staged_stream(
     """Read a staged parquet directory back as a file-source stream of
     ``files_per_trigger`` files per micro-batch, with the schema of the
     staged files — streaming sources require an explicit schema by design
-    (no inference scan on an unbounded source)."""
+    (no inference scan on an unbounded source). The schema is read from
+    one staged footer on the driver (:func:`io.scan_parquet`), so
+    building the stream submits no job."""
     return (
-        spark.readStream.schema(spark.read.parquet(str(stage)).schema)
+        spark.readStream.schema(scan_parquet(spark, str(stage)).schema)
         .option("maxFilesPerTrigger", files_per_trigger)
         .parquet(str(stage))
     )
@@ -716,7 +718,7 @@ def run_foreach_batch_upsert(
             )
             if cur is not None:
                 merged = winners(
-                    spark.read.parquet(str(cur)).unionByName(batch_win)
+                    scan_parquet(spark, str(cur)).unionByName(batch_win)
                 )
             else:
                 merged = batch_win
@@ -737,7 +739,7 @@ def run_foreach_batch_upsert(
     final = read_pointer()
     if final is None:
         raise RuntimeError("upsert replay committed no batches")
-    return spark.read.parquet(str(final)).select(
+    return scan_parquet(spark, str(final)).select(
         "user_id", "event_id", "ts", "event_type", "value"
     )
 
@@ -812,7 +814,7 @@ def run_stream_ann_enrich(
     finally:
         # the results are read back from out_dir, never from the slices
         shutil.rmtree(stage, ignore_errors=True)
-    return spark.read.parquet(str(out_dir)), seen["n"]
+    return scan_parquet(spark, str(out_dir)), seen["n"]
 
 
 def run_stream_index_ingest(
@@ -865,7 +867,7 @@ def run_stream_index_ingest(
         # must stay a replayable lazy plan across triggers (a streaming
         # source frame cannot be unioned into later batch queries)
         src = sorted(Path(stage).glob("slice_*.parquet"))[batch_id]
-        batch = spark.read.parquet(str(src))
+        batch = scan_parquet(spark, str(src))
         route, union, report = ann_index_append(
             state["route"], state["index"], batch
         )

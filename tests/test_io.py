@@ -18,7 +18,7 @@ from pyspark.sql.types import (
 )
 
 from etl_covid19_brasil_spark import io
-from tests.conftest import jobs_submitted
+from tests.conftest import SF_GATE, jobs_submitted
 
 SF = "/root/testdata/sf0.001"
 
@@ -161,13 +161,89 @@ def test_scan_parquet_of_spark_table_submits_no_job(spark, tmp_path, partition_b
     _same_read(spark, out)
 
 
-def _pyarrow_file(spark, tmp_path):
+def _pyarrow_file(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     path = str(tmp_path / "arrow.parquet")
     pq.write_table(pa.table({"id": [1, 2], "v": ["a", "b"]}), path)
     return path
+
+
+def _duckdb_file(tmp_path):
+    import duckdb
+
+    path = str(tmp_path / "duck.parquet")
+    duckdb.sql(
+        "SELECT 1::BIGINT AS id, 'a' AS v, 2.5::DOUBLE AS w, DATE '2020-05-01' AS d"
+    ).write_parquet(path)
+    return path
+
+
+@pytest.mark.parametrize("make", [_pyarrow_file, _duckdb_file], ids=["pyarrow_file", "duckdb_file"])
+def test_scan_parquet_of_foreign_file_submits_no_job(spark, tmp_path, make):
+    """A file with no Spark row metadata (pyarrow, DuckDB writers) still
+    gets its schema on the driver: Spark's own footer conversion runs
+    there, so building the frame submits no job, and schema and rows
+    equal read.parquet's."""
+    path = make(tmp_path)
+    with jobs_submitted(spark) as c:
+        io.scan_parquet(spark, path)
+    assert c.jobs == 0
+    _same_read(spark, path)
+
+
+@pytest.mark.parametrize(
+    "key,value,column,want",
+    [
+        ("spark.sql.parquet.binaryAsString", "true", "binary", "string"),
+        ("spark.sql.parquet.binaryAsString", "false", "binary", "binary"),
+        ("spark.sql.parquet.inferTimestampNTZ.enabled", "false", "timestamp", "timestamp"),
+        ("spark.sql.parquet.inferTimestampNTZ.enabled", "true", "timestamp", "timestamp_ntz"),
+    ],
+)
+def test_footer_schema_follows_the_session_parquet_confs(spark, tmp_path, key, value, column, want):
+    """The driver-side conversion reads the same session confs as Spark's
+    inference: under each setting, _footer_schema equals read.parquet's
+    schema, and the conf visibly changes the type."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    values = {
+        "binary": pa.array([b"ab", b"cd"], pa.binary()),
+        "timestamp": pa.array([datetime.datetime(2020, 5, 1, 12)] * 2, pa.timestamp("us")),
+    }
+    path = str(tmp_path / "typed.parquet")
+    pq.write_table(pa.table({"c": values[column]}), path)
+    old = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        schema = io._footer_schema(spark, path)
+        assert schema == spark.read.parquet(path).schema
+        assert schema["c"].dataType.simpleString() == want
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_footer_schema_takes_a_bare_path_only_on_a_local_default_fs(spark, tmp_path):
+    """A scheme-less path names a file on ``fs.defaultFS``: under a
+    cluster filesystem the driver's local listing would describe another
+    file, so only a ``file:`` URI keeps the driver-side read."""
+    path = _pyarrow_file(tmp_path)
+    key = "fs.defaultFS"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "hdfs://namenode:8020")
+    try:
+        assert io._footer_schema(spark, path) is None
+        assert io._footer_schema(spark, f"file://{path}") is not None
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+    assert io._footer_schema(spark, path) is not None
 
 
 def _summary_dir(spark, tmp_path):
@@ -199,17 +275,16 @@ def _evolved_dir(spark, tmp_path):
 @pytest.mark.parametrize(
     "make,merge_schema",
     [
-        (_pyarrow_file, "false"),
         (_summary_dir, "false"),
         (_glob_path, "false"),
         (_evolved_dir, "true"),
     ],
-    ids=["pyarrow_file", "common_metadata", "glob", "merge_schema_session"],
+    ids=["common_metadata", "glob", "merge_schema_session"],
 )
 def test_scan_parquet_falls_back_to_spark_inference(spark, tmp_path, make, merge_schema):
-    """Where one footer's Spark row metadata is not what Spark would infer
-    (no such metadata, a summary file, a glob, mergeSchema), scan_parquet
-    leaves the schema to Spark and returns exactly what read.parquet does."""
+    """Where one footer is not what Spark would infer from (a summary
+    file, a glob, mergeSchema), scan_parquet leaves the schema to Spark
+    and returns exactly what read.parquet does."""
     path = make(spark, tmp_path)
     key = "spark.sql.parquet.mergeSchema"
     old = spark.conf.get(key)
@@ -287,6 +362,18 @@ def test_load_table_events_timestamps(spark):
 @pytest.mark.parametrize("name", io.TPCH_TABLES)
 def test_all_test_tables_load(spark, name):
     assert io.load_table(spark, SF, name).count() > 0
+
+
+@pytest.mark.parametrize("name", io.TPCH_TABLES)
+def test_load_table_submits_no_schema_job(spark, name):
+    """load_table takes every test table's schema from its footer on the
+    driver (events under nanosAsLong, which load_table sets first): no
+    job, and the schema Spark's inference gives."""
+    with jobs_submitted(spark) as c:
+        got = io.load_table(spark, SF_GATE, name)
+    assert c.jobs == 0
+    want = spark.read.parquet(f"{SF_GATE}/{name}.parquet")
+    assert got.schema == (io.events_ts(want) if name == "events" else want).schema
 
 
 def test_jdbc_sink_and_scan_roundtrip(spark, tmp_path):
@@ -511,6 +598,23 @@ def test_merge_by_key_upserts_and_keeps(spark, tmp_path):
     io.merge_by_key(spark, batch, out, keys=["id"])
     got = {(r["id"], r["v"]) for r in spark.read.parquet(out).collect()}
     assert got == {(1, "old"), (2, "new"), (3, "old"), (4, "new")}
+
+
+def test_merge_by_key_keeps_the_column_layout(spark, tmp_path):
+    """The merged table reads back with the landed column order, although
+    the anti join's using-join puts the keys first."""
+    out = str(tmp_path / "covid")
+    cols = ["city", "city_ibge_code", "date", "confirmed"]
+    spark.createDataFrame(
+        [("a", 1, "2020-05-01", 3), ("b", 2, "2020-05-01", 4)], cols
+    ).write.parquet(out)
+    before = io.scan_parquet(spark, out).columns
+    batch = spark.createDataFrame([("b", 2, "2020-05-01", 5), ("c", 3, "2020-05-02", 1)], cols)
+    io.merge_by_key(spark, batch, out, ["city_ibge_code", "date"])
+    assert before == cols
+    assert io.scan_parquet(spark, out).columns == before
+    got = sorted(tuple(r) for r in io.scan_parquet(spark, out).collect())
+    assert got == [("a", 1, "2020-05-01", 3), ("b", 2, "2020-05-01", 5), ("c", 3, "2020-05-02", 1)]
 
 
 def test_merge_by_key_keeps_every_duplicate_batch_row(spark, tmp_path):

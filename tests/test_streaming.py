@@ -15,6 +15,7 @@ import pytest
 
 from etl_covid19_brasil_spark.io import load_table
 from etl_covid19_brasil_spark.streaming import jobs
+from tests.conftest import jobs_submitted
 
 SF = "/root/testdata/sf0.001"
 
@@ -849,6 +850,25 @@ def test_stage_slices_are_an_ordered_partition_replayed_one_batch_each(spark, tm
 
     jobs._drain(jobs._staged_stream(spark, stage), sink, 120, "stager check")
     assert batches == [sorted(s["event_id"]) for s in slices]
+
+
+def test_staged_stream_builds_without_a_job(spark, tmp_path):
+    """_staged_stream takes the staged files' schema from one footer on
+    the driver, for Spark-written slices and for the copied pyarrow
+    events file (under nanosAsLong) alike: building the stream submits
+    no job, and the schema is what read.parquet infers."""
+    import shutil
+
+    ev = load_table(spark, SF, "events")
+    slices = jobs._stage_slices(ev, ["ts", "event_id"], 2, tmp_path / "slices")
+    copied = tmp_path / "copied"
+    copied.mkdir()
+    shutil.copy(f"{SF}/events.parquet", copied / "part_0.parquet")
+    for stage in (slices, copied):
+        with jobs_submitted(spark) as c:
+            stream = jobs._staged_stream(spark, stage)
+        assert c.jobs == 0, stage
+        assert stream.schema == spark.read.parquet(str(stage)).schema
 
 
 def test_replay_rig_removes_the_stage_dirs_it_made(spark, tmp_path, monkeypatch):
