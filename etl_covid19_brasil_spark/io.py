@@ -211,13 +211,12 @@ def scan_http_json(
     tests run without wall-clock delay. The final failure re-raises the
     fetch's own exception.
 
-    Schema-less payloads are LANDED as a JSONL file (under
-    ``landing_dir`` or a temp dir) and scanned with ``spark.read.json``
-    — full multi-row schema inference with no deprecated ``.rdd`` hop,
-    and the scan is re-runnable from disk (a task retry re-reads the
-    landed file; the old driver-memory formulation would have pinned
-    recomputation to driver state). This is the lake "land then scan"
-    ingest pattern. With an explicit ``schema`` the payload goes through
+    Schema-less payloads get ``spark.read.json``'s full multi-row schema
+    inference, with no deprecated ``.rdd`` hop: given ``landing_dir`` they
+    are LANDED there as a JSONL file and scanned (the lake "land then
+    scan" ingest pattern; a task retry re-reads the landed file), else
+    the reader infers over the payload's JSON text rows directly and no
+    file is written. With an explicit ``schema`` the payload goes through
     ``from_json`` directly — no landing file, no inference pass.
     """
     body = _fetch_with_retries(
@@ -270,29 +269,36 @@ def _land_json_rows(
     landing_dir: str | None = None,
 ) -> DataFrame:
     """Turn parsed JSON rows into a DataFrame: explicit ``schema`` goes
-    through ``from_json`` directly; schema-less rows are LANDED as a
-    JSONL file and scanned with ``spark.read.json`` (full multi-row
-    inference, re-runnable from disk — the lake land-then-scan pattern,
-    no deprecated ``.rdd`` hop)."""
+    through ``from_json`` directly; schema-less rows get
+    ``spark.read.json``'s multi-row inference — LANDED as a JSONL file
+    under ``landing_dir`` and scanned (the lake land-then-scan pattern),
+    or, with no ``landing_dir``, read from the JSON text rows themselves
+    through ``DataFrameReader.json(Dataset<String>)``: the same inference
+    as the file read, and no temp file that nothing would remove (the
+    returned frame reads its source lazily)."""
+    if schema is None and landing_dir is not None:
+        import tempfile
+
+        fd, landing = tempfile.mkstemp(
+            suffix=".jsonl", prefix="http_json_landed_", dir=landing_dir
+        )
+        with os.fdopen(fd, "w") as fh:
+            for r in records:
+                fh.write(json.dumps(r) + "\n")
+        return spark.read.json(landing)
+    import pyarrow as pa
+
+    # An Arrow table plans as a LocalTableScan under any Arrow conf; a
+    # list of tuples becomes a pickled-row Scan ExistingRDD when the
+    # session leaves spark.sql.execution.arrow.pyspark.enabled off.
+    text = pa.table({"json": pa.array([json.dumps(r) for r in records], pa.string())})
+    text_df = spark.createDataFrame(text)
     if schema is not None:
-        import pyarrow as pa
         import pyspark.sql.functions as F
 
-        # An Arrow table plans as a LocalTableScan under any Arrow conf; a
-        # list of tuples becomes a pickled-row Scan ExistingRDD when the
-        # session leaves spark.sql.execution.arrow.pyspark.enabled off.
-        text = pa.table({"json": pa.array([json.dumps(r) for r in records], pa.string())})
-        text_df = spark.createDataFrame(text)
         return text_df.select(F.from_json("json", schema).alias("rec")).select("rec.*")
-    import tempfile
-
-    fd, landing = tempfile.mkstemp(
-        suffix=".jsonl", prefix="http_json_landed_", dir=landing_dir
-    )
-    with os.fdopen(fd, "w") as fh:
-        for r in records:
-            fh.write(json.dumps(r) + "\n")
-    return spark.read.json(landing)
+    lines = getattr(text_df._jdf, "as")(spark._jvm.org.apache.spark.sql.Encoders.STRING())
+    return DataFrame(spark._jsparkSession.read().json(lines), spark)
 
 
 def scan_jdbc(
@@ -1020,8 +1026,9 @@ def scan_http_json_paged(
     runaway guard), then scan the concatenated payload exactly like
     :func:`scan_http_json` — per-page retries with the same bounded
     backoff, landed as one JSONL (one file, pages concatenated in fetch
-    order) for the schema-less path or parallelized through ``from_json``
-    with an explicit ``schema``.
+    order) under ``landing_dir`` or inferred from the payload's text rows
+    for the schema-less path, parallelized through ``from_json`` with an
+    explicit ``schema``.
 
     Driver-side by design, same argument as scan_http_json: public REST
     dimensions (the IBGE localidades API this mirrors serves ~5,570

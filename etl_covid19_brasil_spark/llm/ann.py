@@ -55,6 +55,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
+    FloatType,
     LongType,
     StringType,
     StructField,
@@ -140,8 +141,19 @@ _LOCAL_SCHEMA = "query_id long, neighbor_id long, cosine double"
 _SCORE_SCHEMA = "query_id long, neighbor_id long, score double"
 
 
-def _ddl(cols: tuple) -> str:
-    return ", ".join(f"{c} {_COL_TYPES[c]}" for c in cols)
+def _ddl(cols: tuple, vec_type: str = "double") -> str:
+    types = {**_COL_TYPES, "vec": f"array<{vec_type}>"}
+    return ", ".join(f"{c} {types[c]}" for c in cols)
+
+
+def _vec_type(*frames: DataFrame, vec_col: str) -> str:
+    """Element type a raw-vector payload of ``frames`` can ship in:
+    ``float`` when every frame's ``vec_col`` is ``array<float>``, else
+    ``double`` (what one union of them needs)."""
+    floats = all(
+        isinstance(f.schema[vec_col].dataType.elementType, FloatType) for f in frames
+    )
+    return "float" if floats else "double"
 
 
 def _plane_count(n: int) -> int:
@@ -207,6 +219,7 @@ def _band(
     id_col: str,
     vec_col: str,
     bc_books=None,
+    vec_type: str = "double",
 ):
     """The LSH banding emitter (:data:`_BAND_COLS` layout). Per (vector,
     table), a querying role writes the signature bucket plus the
@@ -216,11 +229,14 @@ def _band(
     IS the exhaustive d=1 fan) in the vector's own salt ``id % s_n``;
     an index role writes the signature bucket into its index salts.
 
-    Payload: the raw float64 vector (the bucket kernel normalizes), or
-    with ``bc_books`` the ADC layout (:data:`_ADC_BAND_COLS`, index or
-    query role only): vectors are normalized first (books train on unit
-    vectors; sign buckets are scale-invariant) and index rows ship PQ
-    codes instead of vectors."""
+    Payload: the raw vector as ``array<vec_type>`` — ``float`` keeps an
+    ``array<float>`` source's precision (:func:`_vec_type`), which
+    halves the vector bytes of the banding shuffle and changes no score:
+    the bucket kernel normalizes in float64, and float32 -> float64 is
+    exact. With ``bc_books`` the ADC layout (:data:`_ADC_BAND_COLS`,
+    index or query role only): vectors are normalized first (books
+    train on unit vectors; sign buckets are scale-invariant), so they
+    ship as double, and index rows ship PQ codes instead of vectors."""
     doubled = role == "both"
     fan = 0 if role == "index" else 1 + n_flips
     rows = fan + (0 if role == "query" else s_n - doubled)
@@ -236,7 +252,8 @@ def _band(
         weights = (1 << np.arange(p_n)).astype(np.int64)
         for pdf in (s for w in batches for s in _fanout_slices(w, t_n * rows)):
             ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            src = np.stack(pdf[vec_col].to_numpy())
+            mat = src.astype(np.float64)
             if bc_books is not None:
                 mat = _normalize(mat)
             proj = (mat @ pl.reshape(t_n * p_n, -1).T).reshape(len(ids), t_n, p_n)
@@ -256,7 +273,7 @@ def _band(
                 codes = _pq_codes(mat, bc_books.value)
             out = {
                 "vid": np.repeat(ids, t_n * rows),
-                **_payload(mat, t_n * rows, codes),
+                **_payload(src if vec_type == "float" else mat, t_n * rows, codes),
                 "tbl": np.tile(np.repeat(np.arange(t_n, dtype=np.int32), rows), len(ids)),
                 "bucket": np.concatenate(buckets, axis=2).reshape(-1),
                 "is_index": np.tile(is_index, len(ids) * t_n),
@@ -267,7 +284,7 @@ def _band(
             }
             yield pd.DataFrame({c: out[c] for c in cols})
 
-    return emit, _ddl(cols)
+    return emit, _ddl(cols, vec_type)
 
 
 def _cells(
@@ -354,7 +371,9 @@ def _emit(frame: DataFrame, emitter, id_col: str, vec_col: str) -> DataFrame:
     partitioning, and a cached or few-file corpus would otherwise
     serialize the whole assign + fan-out into 1-2 tasks (r16 — observed
     live: one Python worker CPU-pinned for minutes while 31 cores
-    idled)."""
+    idled). The emitter's schema, not the source's, types the output:
+    a float source's LSH band keeps ``array<float>`` vectors, the other
+    emitters ship ``array<double>`` (see :func:`_band`)."""
     emit, schema = emitter
     return _spread(frame.select(id_col, vec_col)).mapInPandas(emit, schema=schema)
 
@@ -399,8 +418,10 @@ def _bucket_topk_kernel(k: int):
         sims = _ordered_dot(_normalize(q_mat)[:, None, :], _normalize(i_mat)[None, :, :])
         return _lexsort_topk(q_ids, i_ids, sims, k)
 
+    empty = _empty_local()
+
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _meet(pdf, pdf["qrole"] == 1, "vec", block, _empty_local())
+        return _meet(pdf, pdf["qrole"] == 1, "vec", block, empty)
 
     return kernel
 
@@ -414,8 +435,9 @@ def _cell_topk_kernel(k: int, packed_labels: bool = False):
         sims = q_mat @ i_mat.T  # pre-normalized -> cosine
         return _lexsort_topk(q_ids, i_ids, sims, k, packed_labels=packed_labels)
 
+    empty = _empty_local(label=packed_labels)
+
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = _empty_local(label=packed_labels)
         return _meet(pdf, pdf["qrole"] == 1, "vec", block, empty)
 
     return kernel
@@ -438,9 +460,10 @@ def _adc_kernel(bc_books, depth: int, bc_cents=None):
             scores = scores + _ordered_dot(q_mat, cent[None, :])[:, None]
         return _lexsort_topk(q_ids, i_ids, scores, depth, score="score")
 
+    empty = _empty_local("score")
+
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         cent = None if bc_cents is None else bc_cents.value[int(pdf["cell"].iloc[0])]
-        empty = _empty_local("score")
         return _meet(pdf, pdf["is_index"] == 0, "codes", block, empty, cent)
 
     return kernel
@@ -833,6 +856,16 @@ def lsh_topk(
     query-only, so per-bucket kernel work grows linearly (|Q|x|I|), not
     quadratically.
 
+    Execution: the banded rows carry the corpus's own vector precision
+    (``array<float>`` for a float corpus — see :func:`_band`), and the
+    bucket kernel runs over ONE hash exchange on (tbl, bucket, qs) to
+    ``spark.sql.shuffle.partitions`` tasks that AQE leaves uncoalesced;
+    coalesced by bytes, the 500-vector benchmark corpus ran all of its
+    80 bucket groups as one Python task. (The IVF, PQ and two-frame
+    search meets keep the plain ``groupBy`` exchange: there the same
+    repartition timed within noise, or slower on ``ivf_topk`` and
+    ``ivfpq_topk``.)
+
     Output: (query_id, neighbor_id, cosine, rank) — same shape as the
     brute-force similarity_topk so callers can swap tiers.
     """
@@ -866,10 +899,20 @@ def lsh_topk(
         )
     bc = embeddings.sparkSession.sparkContext.broadcast(planes)
     n_flips = min(n_planes, 4) if multi_probe else 0
-    emitter = _band("both", bc, max(1, q_salts), n_flips, id_col, vec_col)
+    emitter = _band(
+        "both", bc, max(1, q_salts), n_flips, id_col, vec_col,
+        vec_type=_vec_type(embeddings, vec_col=vec_col),
+    )
     banded = _emit(embeddings, emitter, id_col, vec_col)
-    local = banded.groupBy("tbl", "bucket", "qs").applyInPandas(
-        _bucket_topk_kernel(k), schema=_LOCAL_SCHEMA
+    # AQE coalesces a groupBy exchange by bytes, not by kernel work: the
+    # ~1 MB banded shuffle of a 500-vector corpus became ONE task running
+    # all 80 bucket groups on one Python worker. A repartition(n, keys)
+    # exchange is never coalesced, and the groupBy reuses it.
+    n = int(embeddings.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    local = (
+        banded.repartition(n, "tbl", "bucket", "qs")
+        .groupBy("tbl", "bucket", "qs")
+        .applyInPandas(_bucket_topk_kernel(k), schema=_LOCAL_SCHEMA)
     )
     return _global_topk(local, k)
 

@@ -105,6 +105,7 @@ from etl_covid19_brasil_spark.llm.ann import (
     _sample_matrix,
     _SCORE_SCHEMA,
     _TIGHT_RERANK,
+    _vec_type,
     auto_n_cells,
     derive_n_tables,
     kmeans_lloyd,
@@ -539,8 +540,10 @@ def lsh_search(
         return index.sparkSession.createDataFrame([], schema=TOPK_SCHEMA)
     bc, n_flips, s_n = geo
 
+    vec_type = _vec_type(queries, index, vec_col=vec_col)
+
     def band(frame: DataFrame, role: str) -> DataFrame:
-        emitter = _band(role, bc, s_n, n_flips, id_col, vec_col)
+        emitter = _band(role, bc, s_n, n_flips, id_col, vec_col, vec_type=vec_type)
         return _emit(frame, emitter, id_col, vec_col)
 
     banded = band(index, "index").unionByName(band(queries, "query"))

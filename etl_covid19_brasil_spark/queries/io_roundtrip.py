@@ -775,7 +775,7 @@ def sink_compact_small_files(spark: SparkSession, sf: str) -> DataFrame:
     compact_parquet(spark, path, target_files=4)
     n_after = len([p for p in Path(path).glob("*.parquet")])
     return (
-        spark.read.parquet(path)
+        io.scan_parquet(spark, path)
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.sum(cents("o_totalprice")).alias("total_cents"),
@@ -824,7 +824,7 @@ def sink_dynamic_partition_overwrite(spark: SparkSession, sf: str) -> DataFrame:
     )
     io.upsert_partitions(spark, fix, path, partition_by=["o_orderstatus"])
     return (
-        spark.read.parquet(path)
+        io.scan_parquet(spark, path)
         .groupBy("o_orderstatus")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -1128,7 +1128,7 @@ def pipeline_lakehouse_maintenance(spark: SparkSession, sf: str) -> DataFrame:
         "o_orderkey",
         F.expr("val_cents * 11 DIV 10").alias("new_cents"),
     )
-    lake = spark.read.parquet(path)
+    lake = io.scan_parquet(spark, path)
     survivors = lake.join(deletes, "o_orderkey", "left_anti")
     merged = (
         survivors.join(updates, "o_orderkey", "left")  # hint-free: updates grow with the lake (broadcast-discipline, r7)
@@ -1143,7 +1143,7 @@ def pipeline_lakehouse_maintenance(spark: SparkSession, sf: str) -> DataFrame:
     io.upsert_partitions(spark, merged, path, ["o_orderpriority"])
     # (3) audit the final on-disk state
     return (
-        spark.read.parquet(path)
+        io.scan_parquet(spark, path)
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -1189,7 +1189,7 @@ def sink_manifest_integrity(spark: SparkSession, sf: str) -> DataFrame:
         shutil.rmtree(path)
     io.upsert_partitions(spark, base, path, ["o_orderpriority"])
     stats = (
-        spark.read.parquet(path)
+        io.scan_parquet(spark, path)
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -1214,7 +1214,7 @@ def sink_manifest_integrity(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
     return (
-        spark.read.parquet(path)
+        io.scan_parquet(spark, path)
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -1354,10 +1354,10 @@ def pipeline_pk_quarantine(spark: SparkSession, sf: str) -> DataFrame:
         shutil.rmtree(root)
     ranked.filter(F.col("rn") == 1).drop("rn").write.parquet(str(root / "clean"))
     ranked.filter(F.col("rn") > 1).drop("rn").write.parquet(str(root / "quarantine"))
-    clean = spark.read.parquet(str(root / "clean")).withColumn(
+    clean = io.scan_parquet(spark, str(root / "clean")).withColumn(
         "destination", F.lit("clean")
     )
-    quar = spark.read.parquet(str(root / "quarantine")).withColumn(
+    quar = io.scan_parquet(spark, str(root / "quarantine")).withColumn(
         "destination", F.lit("quarantine")
     )
     return (

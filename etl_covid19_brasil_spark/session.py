@@ -5,7 +5,17 @@ The reference runs eager single-process pandas under Airflow
 (config/airflow.cfg:18). Here the session is configured once for the whole
 engine: AQE on (runtime re-planning, skew-join splitting), UTC session
 timezone (timestamp parity with the DuckDB oracle and the reference's
-Airflow default), Arrow enabled for the Pandas-UDF paths.
+Airflow default), Arrow enabled for the Pandas-UDF paths, and the
+engine's own Python worker daemon (:mod:`.pyworker`).
+
+The daemon conf exists because every Python task used to pay a fixed
+130-230 ms on Python 3.11 before its first row: the worker's
+``importlib.invalidate_caches()`` made each zipimporter on its path
+re-read Spark's ``pyspark.zip`` and spark-core jar. ``pyworker`` re-reads
+an archive only when it changed. Only a local master's workers are
+known to start where the driver does, and a worker can start it only if
+a bare interpreter in the session's working directory imports this
+package, so any other session keeps the stock ``pyspark.daemon``.
 
 ``shuffle_partitions`` defaults to the local core count; on a real cluster
 you would size it to ~2-3x total executor cores and let AQE coalesce.
@@ -14,8 +24,27 @@ you would size it to ~2-3x total executor cores and let AQE coalesce.
 from __future__ import annotations
 
 import os
+import site
+from importlib.machinery import PathFinder
 
 from pyspark.sql import SparkSession
+
+
+def _daemon_module(master: str) -> str:
+    """``spark.python.daemon.module`` for a session on ``master`` started
+    here: this package's :mod:`.pyworker` when the master is local
+    (``local``, ``local[...]``) and a worker interpreter — started by
+    Spark in the current directory, with ``$PYTHONPATH`` and site-packages
+    on its path — can import the package, else the stock daemon (a daemon
+    that fails to import would fail every Python UDF, and nothing here can
+    check the hosts of a cluster's executors, nor ``local-cluster``'s
+    executor directories)."""
+    if master != "local" and not master.startswith("local["):
+        return "pyspark.daemon"
+    path = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    if PathFinder.find_spec(__package__, path + site.getsitepackages()) is None:
+        return "pyspark.daemon"
+    return f"{__package__}.pyworker"
 
 
 def get_spark(
@@ -63,6 +92,7 @@ def get_spark(
         )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", _daemon_module(master))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

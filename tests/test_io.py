@@ -101,6 +101,32 @@ def test_scan_http_json_schemaless_lands_and_infers(spark, tmp_path):
     assert len(landed) == 1  # payload is on disk: scan is re-runnable
 
 
+def test_scan_http_json_schemaless_without_landing_dir_writes_no_file(
+    spark, tmp_path, monkeypatch
+):
+    """With no ``landing_dir`` the schema-less payload is inferred from its
+    JSON text rows, not from a temp file that nothing would remove: the
+    temp dir stays empty, and schema and rows equal the landed read's."""
+    import tempfile
+
+    payload = [{"id": 1, "extra": "only-here"}, {"id": 2, "nested": {"v": "b"}}]
+
+    def scan(**kw):
+        return io.scan_http_json(
+            spark, "http://unused", fetch=lambda _u: json.dumps(payload), **kw
+        )
+
+    landing, tmp = tmp_path / "landing", tmp_path / "tmp"
+    landing.mkdir()
+    tmp.mkdir()
+    landed = scan(landing_dir=str(landing))
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    df = scan()
+    assert df.schema == landed.schema
+    assert df.orderBy("id").collect() == landed.orderBy("id").collect()
+    assert list(tmp.iterdir()) == []
+
+
 def test_scan_http_json_explicit_schema_is_arrow_backed_without_arrow_conf(spark):
     """With an explicit schema the payload's text column is built from an
     Arrow table, so a session that leaves

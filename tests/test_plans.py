@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import contextlib
 import io as pyio
+import re
 
 import pytest
 
@@ -77,6 +78,17 @@ def test_lsh_paths_have_no_cross_product(spark, specs):
         p = plan_of(q(specs, spark, name))
         assert "CartesianProduct" not in p, name
         assert "BroadcastNestedLoopJoin" not in p, name
+
+
+def test_lsh_topk_meets_over_one_uncoalesced_hash_exchange(spark, specs):
+    """The LSH bucket kernel meets its groups over a hash exchange on
+    (tbl, bucket, qs) to spark.sql.shuffle.partitions that AQE may not
+    coalesce (REPARTITION_BY_NUM), and the groupBy reuses it: the plan
+    keeps the 4 exchanges it had with the groupBy's own exchange."""
+    p = re.sub(r"#\d+L?", "", plan_of(q(specs, spark, "ann_lsh_topk"), "simple"))
+    n = spark.conf.get("spark.sql.shuffle.partitions")
+    assert f"Exchange hashpartitioning(tbl, bucket, qs, {n}), REPARTITION_BY_NUM" in p, p
+    assert sum("Exchange" in ln for ln in p.splitlines()) == 4, p
 
 
 def test_exact_dedup_is_hash_aggregate_not_sort(spark, specs):
